@@ -1,30 +1,38 @@
 """Similarity matching + agreement pick-best (SURVEY §2.9 — the heart).
 
-Re-expresses the reference's per-practice matching pipeline
-(/root/reference/src/services/matching.service.js:351-432) Spark-first:
+Re-expresses the reference's per-document matching pipeline
+(reference src/services/matching.service.js:91-432) Spark-first, as ONE
+document-level pass (match_documents): a single Arrow map node over the
+flattened doc fields runs, per document,
 
-  1. dimension embedding job (D10/D11): one batch withColumn over the dims
-     (replaces the OpenAI embedding worker src/workers/embedding.worker.js);
-  2. vectorized candidate scoring: the (tiny) nomenclador matrix is shipped
-     to executors inside a pandas-UDF closure — a broadcast dense matmul,
-     strictly better recall than the reference's IVFFlat index (exact top-k);
-  3. candidate ∩ agreements via broadcast join + latest-vigente argmax window
-     (J5/J6/T3, matching.service.js:242-341);
+  1. the provider cascade (J1/J2/J4, matching.service.js:91-232): exact RUC
+     short-circuit (similarity pinned 1.0) -> exact matricula -> fuzzy top-1,
+     as dict lookups plus the top-k scorer;
+  2. per practice, vectorized candidate scoring against the nomenclador
+     matrix — an exact dense matmul top-k, strictly better recall than the
+     reference's IVFFlat index;
+  3. candidate ∩ latest-vigente agreements (J5/J6/T3, :242-341) as dict
+     lookups;
   4. preference pick-best: best-ranked candidate HAVING an agreement, else
-     global best (matching.service.js:378-392) — NOT max(score*has_acuerdo);
-  5. alternatives: next 5 by rank with tiene_acuerdo flags (T7).
+     global best (:378-392) — NOT max(score*has_acuerdo);
+  5. alternatives: next 5 by rank with tiene_acuerdo flags (T7);
 
-Provider match cascade (J1/J2/J4, matching.service.js:91-232): exact RUC
-short-circuit (similarity pinned 1.0) -> exact matricula -> fuzzy top-1.
+and returns the ordered per-practice match array beside the practicas array.
 
-Scale: dims are small (≤10^6 rows) — every dim join is a broadcast; the only
-doc-side shuffles are the per-(doc,item) windows, whose key cardinality
-equals the practice count (bounded per doc), so no skew pathologies.
+Every dimension reaches the node through at most one guarded driver collect
+(active prestadores, active nomencladores, latest agreements) and ships in
+the function's closure — the broadcast-dimension pattern, with no dimension
+shuffle and no join. Dims are small by contract (≤ MAX_BROADCAST_DIM_ROWS).
+For agreement tables too large for a closure dict, match_practices is the
+explode + broadcast-join + window matcher over exploded practices (same
+rows; pytest asserts), and match_prestador_ann a collect-free provider
+cascade for giant provider dims.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -199,14 +207,14 @@ def _guarded_collect(df: DataFrame, what: str) -> list:
     return rows
 
 
-def _collect_nomenclador_space(nom_embedded: DataFrame) -> tuple[list, list, list]:
+def _collect_nomenclador_space(nomencladores: DataFrame) -> tuple[list, list, list]:
     """Active nomencladores -> (ids, descripciones, embedding texts).
 
     Deterministic order (id ascending). Driver-side collect is by design:
     the dimension is the broadcast side (SURVEY §4 — replaces IVFFlat);
     _guarded_collect enforces the fits-in-memory contract loudly."""
     rows = _guarded_collect(
-        nom_embedded.filter(F.col("estado") == "ACTIVO")
+        nomencladores.filter(F.col("estado") == "ACTIVO")
         .select(
             "id_nomenclador",
             "descripcion",
@@ -262,88 +270,140 @@ def latest_agreements(acuerdos: DataFrame) -> DataFrame:
     )
 
 
+def agreement_map(acuerdos: DataFrame, cap: int | None = None) -> dict | None:
+    """Latest agreements as a closure dict from ONE driver collect:
+    (id_nomenclador, prest_id_prestador, plan_id_plan) -> (id_acuerdo, precio).
+
+    With ``cap``, returns None when there are more than ``cap`` latest
+    agreements (the caller then takes the broadcast-join matcher, which
+    scales to any size); without it, _guarded_collect's hard cap applies.
+    SQL-join NULL semantics: a NULL key component never matches, but a
+    Python dict happily equates None keys — rows with a NULL key are dropped
+    so dict lookups mirror the join-based path exactly."""
+    latest = latest_agreements(acuerdos).select(
+        "id_nomenclador", "prest_id_prestador", "plan_id_plan", "id_acuerdo", "precio"
+    )
+    if cap is None:
+        rows = _guarded_collect(latest, "latest agreements")
+    else:
+        rows = latest.limit(cap + 1).collect()
+        if len(rows) > cap:
+            return None
+    return {
+        (r["id_nomenclador"], r["prest_id_prestador"], r["plan_id_plan"]): (
+            r["id_acuerdo"],
+            r["precio"],
+        )
+        for r in rows
+        if None not in (r["id_nomenclador"], r["prest_id_prestador"], r["plan_id_plan"])
+    }
+
+
 # ---------------------------------------------------------------------------
 # Provider match cascade (J1 -> J2 -> J4)
 # ---------------------------------------------------------------------------
 
-def match_prestador(
-    doc_fields: DataFrame, prest_embedded: DataFrame
-) -> DataFrame:
-    """doc_fields(doc_id, ruc, prestador_nombre, medico_matricula,
-    matricula_valida) -> + (prestador_id, prestador_confianza, prestador_metodo).
+PROVIDER_FIELDS = [
+    T.StructField("prestador_id", T.IntegerType()),
+    T.StructField("prestador_confianza", T.DoubleType()),
+    T.StructField("prestador_metodo", T.StringType()),
+]
+
+
+def _provider_cascade(prestadores: DataFrame):
+    """One guarded collect of the active prestadores -> a cascade function
+    over an Arrow batch of doc fields (ruc, medico_matricula,
+    matricula_valida, prestador_nombre) -> (prestador_id,
+    prestador_confianza, prestador_metodo) lists.
 
     Cascade: exact RUC (sim pinned 1.0, matching.service.js:91-120) ->
-    exact matricula vs registro_profesional (:193-232) -> fuzzy top-1
-    (0.7 vec + 0.3 trgm on nombre, :137-171). All joins broadcast."""
-    activo = prest_embedded.filter(F.col("estado") == "ACTIVO")
-
-    by_ruc = activo.select(
-        F.col("ruc").alias("_p_ruc"), F.col("id_prestador").alias("_ruc_id")
-    ).dropDuplicates(["_p_ruc"])
-    step1 = doc_fields.join(
-        F.broadcast(by_ruc), doc_fields.ruc == by_ruc._p_ruc, "left"
-    ).drop("_p_ruc")
-
-    by_mat = activo.select(
-        F.col("registro_profesional").alias("_p_mat"),
-        F.col("id_prestador").alias("_mat_id"),
-    ).dropDuplicates(["_p_mat"])
-    step2 = step1.join(
-        F.broadcast(by_mat),
-        (step1._ruc_id.isNull())
-        & step1.matricula_valida
-        & (step1.medico_matricula == by_mat._p_mat),
-        "left",
-    ).drop("_p_mat")
-
-    # fuzzy fallback over active prestadores (guarded closure broadcast)
+    exact matricula vs registro_profesional when the matricula is valid
+    (:193-232) -> fuzzy top-1 (0.7 vec + 0.3 trgm on nombre, :137-171).
+    A RUC or matricula shared by several active providers resolves to the
+    lowest id_prestador; a NULL key never matches."""
     rows = _guarded_collect(
-        activo.select(
+        prestadores.filter(F.col("estado") == "ACTIVO")
+        .select(
             "id_prestador",
+            "ruc",
+            "registro_profesional",
             "nombre_fantasia",
             F.concat_ws(
                 " ", "nombre_fantasia", "raz_soc_nombre", "registro_profesional", "tipo"
             ).alias("etext"),
         )
         .orderBy("id_prestador"),
-        "prestador fuzzy space",
+        "prestador space",
     )
-    fuzzy_udf = make_topk_udf(
+    by_ruc: dict = {}
+    by_mat: dict = {}
+    for r in rows:  # id order: setdefault keeps the lowest id per key
+        if r["ruc"] is not None:
+            by_ruc.setdefault(r["ruc"], r["id_prestador"])
+        if r["registro_profesional"] is not None:
+            by_mat.setdefault(r["registro_profesional"], r["id_prestador"])
+    fuzzy = make_topk_scorer(
         [r["id_prestador"] for r in rows],
         [r["nombre_fantasia"] for r in rows],
         [r["etext"] for r in rows],
         k=config.TOPK_PRESTADOR,
         min_sim=0.0,
     )
-    step3 = step2.withColumn(
-        "_fuzzy",
-        F.when(
-            step2._ruc_id.isNull() & step2._mat_id.isNull(),
-            # F.get (0-based) returns null when out of bounds — element_at
-            # would raise under ANSI mode (default in Spark 4)
-            F.get(fuzzy_udf(F.col("prestador_nombre")), 0),
-        ),
-    )
 
-    return (
-        step3.withColumn(
-            "prestador_id",
-            F.coalesce("_ruc_id", "_mat_id", F.col("_fuzzy.id")),
+    def provider_cascade(b):
+        ruc, matricula, matricula_valida, nombre = (
+            b.column(c).to_pylist()
+            for c in ("ruc", "medico_matricula", "matricula_valida", "prestador_nombre")
         )
-        .withColumn(
-            "prestador_confianza",
-            F.when(F.col("_ruc_id").isNotNull() | F.col("_mat_id").isNotNull(), F.lit(1.0))
-            .otherwise(F.round(F.col("_fuzzy.similitud"), 2)),
-        )
-        .withColumn(
-            "prestador_metodo",
-            F.when(F.col("_ruc_id").isNotNull(), "RUC")
-            .when(F.col("_mat_id").isNotNull(), "MATRICULA")
-            .when(F.col("_fuzzy").isNotNull(), "FUZZY")
-            .otherwise(F.lit(None).cast("string")),
-        )
-        .drop("_ruc_id", "_mat_id", "_fuzzy")
-    )
+        n = len(ruc)
+        ids, confs, metodos = [None] * n, [None] * n, [None] * n
+        misses = []
+        for i in range(n):
+            pid, metodo = by_ruc.get(ruc[i]), "RUC"
+            if pid is None and matricula_valida[i]:
+                pid, metodo = by_mat.get(matricula[i]), "MATRICULA"
+            if pid is None:
+                misses.append(i)
+            else:
+                ids[i], confs[i], metodos[i] = pid, 1.0, metodo
+        for i, cands in zip(misses, fuzzy([nombre[i] for i in misses]), strict=True):
+            if cands:
+                best = cands[0]
+                ids[i] = best["id"]
+                confs[i] = sim.round_half_up(best["similitud"], 2)
+                metodos[i] = "FUZZY"
+        return ids, confs, metodos
+
+    return provider_cascade
+
+
+def _append_columns(df: DataFrame, fields: list, fn) -> DataFrame:
+    """df + ``fields`` computed by ``fn(record_batch) -> list of column value
+    lists``, as one mapInArrow node. The input columns pass through as the
+    same Arrow arrays, and the node is a projection barrier: the expressions
+    below it (the extraction UDFs) are evaluated once, never inlined into
+    the matcher's inputs."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    types = [to_arrow_type(f.dataType) for f in fields]
+    names = df.columns + [f.name for f in fields]
+
+    def run(batches):
+        for b in batches:
+            new = [pa.array(v, type=t) for v, t in zip(fn(b), types, strict=True)]
+            yield pa.RecordBatch.from_arrays(b.columns + new, names=names)
+
+    run.__name__ = fn.__name__  # names the node in explain()
+    return df.mapInArrow(run, T.StructType(df.schema.fields + fields))
+
+
+def match_prestador(doc_fields: DataFrame, prestadores: DataFrame) -> DataFrame:
+    """doc_fields(doc_id, ruc, prestador_nombre, medico_matricula,
+    matricula_valida, ...) -> + (prestador_id, prestador_confianza,
+    prestador_metodo), one Arrow map node over the _provider_cascade
+    closure (no join, no shuffle). ``prestadores`` needs only its raw
+    columns; embedding columns, if present, are never read."""
+    return _append_columns(doc_fields, PROVIDER_FIELDS, _provider_cascade(prestadores))
 
 
 def trigram_jaccard_col(a, b):
@@ -398,17 +458,18 @@ def match_prestador_ann(
 
     activo = prest_embedded.filter(F.col("estado") == "ACTIVO")
 
-    by_ruc = activo.select(
-        F.col("ruc").alias("_p_ruc"), F.col("id_prestador").alias("_ruc_id")
-    ).dropDuplicates(["_p_ruc"])
+    # a key shared by several active providers resolves to the lowest id,
+    # as in match_prestador
+    by_ruc = activo.groupBy(F.col("ruc").alias("_p_ruc")).agg(
+        F.min("id_prestador").alias("_ruc_id")
+    )
     step1 = doc_fields.join(
         F.broadcast(by_ruc), doc_fields.ruc == by_ruc._p_ruc, "left"
     ).drop("_p_ruc")
 
-    by_mat = activo.select(
-        F.col("registro_profesional").alias("_p_mat"),
-        F.col("id_prestador").alias("_mat_id"),
-    ).dropDuplicates(["_p_mat"])
+    by_mat = activo.groupBy(F.col("registro_profesional").alias("_p_mat")).agg(
+        F.min("id_prestador").alias("_mat_id")
+    )
     step2 = step1.join(
         F.broadcast(by_mat),
         (step1._ruc_id.isNull())
@@ -537,14 +598,19 @@ ALTERNATIVE_TYPE = T.ArrayType(
 
 def match_practices(
     practices: DataFrame,
-    nom_embedded: DataFrame,
+    nomencladores: DataFrame,
     acuerdos: DataFrame,
 ) -> DataFrame:
     """practices(doc_id, item, descripcion, cantidad, confianza,
     prestador_id, plan_id_plan) -> one row per practice with
     nomenclador_id_sugerido, nomenclador_confianza, similitud, tiene_acuerdo,
-    id_acuerdo, precio_acuerdo, matches_alternativos, alerta."""
-    ids, descs, etexts = _collect_nomenclador_space(nom_embedded)
+    id_acuerdo, precio_acuerdo, matches_alternativos, alerta.
+
+    The broadcast-join matcher for agreement tables too large for the
+    closure dict of match_documents: explode every practice into its k
+    candidates, broadcast-join the latest agreements, then two
+    (doc_id, item) windows pick the best and slice the alternatives."""
+    ids, descs, etexts = _collect_nomenclador_space(nomencladores)
     topk_udf = make_topk_udf(ids, descs, etexts, k=config.TOPK_NOMENCLADOR)
 
     with_cands = practices.withColumn("cands", topk_udf(F.col("descripcion")))
@@ -635,7 +701,7 @@ def match_practices(
 
 
 # ---------------------------------------------------------------------------
-# Fused practice matching (same semantics, one UDF, zero extra shuffles)
+# Document-level matcher (provider cascade + practice pick-best, one pass)
 # ---------------------------------------------------------------------------
 
 PRACTICE_MATCH_TYPE = T.StructType(
@@ -652,99 +718,54 @@ PRACTICE_MATCH_TYPE = T.StructType(
     ]
 )
 
+_SIN_MATCH = {
+    "nomenclador_id_sugerido": None,
+    "nomenclador_descripcion": None,
+    "similitud": None,
+    "nomenclador_confianza": None,
+    "tiene_acuerdo": False,
+    "id_acuerdo": None,
+    "precio_acuerdo": None,
+    "alerta": "SIN_MATCH",
+    "matches_alternativos": [],
+}
 
-def match_practices_fast(
-    practices: DataFrame,
-    nom_embedded: DataFrame,
-    acuerdos: DataFrame,
-) -> DataFrame:
-    """Semantics-identical fast path for match_practices (pytest asserts
-    row equality between the two).
 
-    The join-based path explodes every practice into its k candidates and
-    runs a broadcast join plus two (doc_id, item) windows over ~k× the rows —
-    three extra shuffles of candidate-struct payloads. Here BOTH dimension
-    sides (nomenclador matrix AND the latest-vigente agreements map) ship in
-    the UDF closure — the same broadcast-dimension pattern make_topk_udf
-    already uses — so candidate scoring, the agreement-preference pick-best
-    (matching.service.js:378-392) and the alternatives slice happen in one
-    vectorized pass. The plan stays whatever the upstream plan was: no new
-    exchange at all. Use when the agreements table fits executor memory
-    (dims are small by contract, SURVEY §4); fall back to match_practices
-    for giant agreement tables."""
-    ids, descs, etexts = _collect_nomenclador_space(nom_embedded)
-    score_series = make_topk_scorer(ids, descs, etexts, k=config.TOPK_NOMENCLADOR)
+def _practice_picker(nomencladores: DataFrame, agreements: dict):
+    """One guarded collect of the active nomencladores -> a batch function
+    (descripcion, prestador_id, plan_id lists) -> one PRACTICE_MATCH_TYPE
+    dict per practice: top-k candidates, agreement preference pick-best
+    (matching.service.js:378-392) and the alternatives slice (T7)."""
+    ids, descs, etexts = _collect_nomenclador_space(nomencladores)
+    score = make_topk_scorer(ids, descs, etexts, k=config.TOPK_NOMENCLADOR)
 
-    ag_rows = _guarded_collect(
-        latest_agreements(acuerdos).select(
-            "id_nomenclador", "prest_id_prestador", "plan_id_plan",
-            "id_acuerdo", "precio",
-        ),
-        "latest agreements (fast matcher)",
-    )
-    # SQL-join NULL semantics: a NULL key component never matches, but a
-    # Python dict happily equates None keys — drop any agreement row with a
-    # NULL key so dict lookups mirror the join-based path exactly.
-    AG = {
-        (r["id_nomenclador"], r["prest_id_prestador"], r["plan_id_plan"]): (
-            r["id_acuerdo"],
-            r["precio"],
-        )
-        for r in ag_rows
-        if r["id_nomenclador"] is not None
-        and r["prest_id_prestador"] is not None
-        and r["plan_id_plan"] is not None
-    }
-
-    @F.pandas_udf(PRACTICE_MATCH_TYPE)
-    def match_udf(
-        descripcion: pd.Series, prestador_id: pd.Series, plan_id: pd.Series
-    ) -> pd.DataFrame:
-        rows = []
-        cand_lists = score_series(descripcion)
+    def pick(descripciones, prestador_ids, plan_ids) -> list:
+        out = []
         for cands, prest, plan in zip(
-            cand_lists, prestador_id, plan_id, strict=True
+            score(descripciones), prestador_ids, plan_ids, strict=True
         ):
             if not cands:
-                rows.append(
-                    {
-                        "nomenclador_id_sugerido": None,
-                        "nomenclador_descripcion": None,
-                        "similitud": None,
-                        "nomenclador_confianza": None,
-                        "tiene_acuerdo": False,
-                        "id_acuerdo": None,
-                        "precio_acuerdo": None,
-                        "alerta": "SIN_MATCH",
-                        "matches_alternativos": [],
-                    }
-                )
+                out.append(_SIN_MATCH)
                 continue
-            prest_i = None if pd.isna(prest) else int(prest)
-            plan_i = None if pd.isna(plan) else int(plan)
-            if prest_i is None or plan_i is None:
+            if prest is None or plan is None:
                 # NULL join key -> no agreement can match (SQL semantics)
-                ag_hits = [None] * len(cands)
+                hits = [None] * len(cands)
             else:
-                ag_hits = [
-                    AG.get((c["id"], prest_i, plan_i)) for c in cands
-                ]
+                hits = [agreements.get((c["id"], prest, plan)) for c in cands]
             # preference pick-best: min rank among agreement-holders, else 1
-            best_idx = next(
-                (i for i, h in enumerate(ag_hits) if h is not None), 0
-            )
-            best, hit = cands[best_idx], ag_hits[best_idx]
+            best_idx = next((i for i, h in enumerate(hits) if h is not None), 0)
+            best, hit = cands[best_idx], hits[best_idx]
             alts = [
                 {
                     "id_nomenclador": c["id"],
                     "descripcion": c["descripcion"],
                     "similitud": c["similitud"],
-                    "tiene_acuerdo": ag_hits[i] is not None,
+                    "tiene_acuerdo": hits[i] is not None,
                 }
                 for i, c in enumerate(cands)
                 if i != best_idx
             ][: config.N_ALTERNATIVES]
-            rows.append(
+            out.append(
                 {
                     "nomenclador_id_sugerido": best["id"],
                     "nomenclador_descripcion": best["descripcion"],
@@ -757,13 +778,67 @@ def match_practices_fast(
                     "matches_alternativos": alts,
                 }
             )
-        return pd.DataFrame(rows)
+        return out
 
-    out = practices.withColumn(
-        "_m",
-        match_udf(F.col("descripcion"), F.col("prestador_id"), F.col("plan_id_plan")),
+    return pick
+
+
+def match_documents(
+    doc_fields: DataFrame,
+    prestadores: DataFrame,
+    nomencladores: DataFrame,
+    agreements: dict,
+) -> DataFrame:
+    """doc_fields(doc_id, ruc, prestador_nombre, medico_matricula,
+    matricula_valida, practicas, plan_id_plan, ...) -> + (prestador_id,
+    prestador_confianza, prestador_metodo, matches), where ``matches[i]``
+    is the PRACTICE_MATCH_TYPE pick for ``practicas[i]`` (empty when the
+    doc has none).
+
+    One Arrow map node per document batch: the provider cascade, then every
+    practice of the batch scored in one memoized scorer call against the
+    doc's provider and plan. ``agreements`` is agreement_map's dict. Same
+    rows as match_prestador + match_practices (pytest asserts) with no
+    exchange added to the upstream plan."""
+    import pyarrow.compute as pc
+
+    cascade = _provider_cascade(prestadores)
+    pick = _practice_picker(nomencladores, agreements)
+
+    def document_matcher(b):
+        ids, confs, metodos = cascade(b)
+        practicas = b.column("practicas")
+        n_items = pc.fill_null(pc.list_value_length(practicas), 0).to_pylist()
+        repeat = lambda xs: [x for x, n in zip(xs, n_items) for _ in range(n)]  # noqa: E731
+        picks = pick(
+            pc.struct_field(pc.list_flatten(practicas), "descripcion").to_pylist(),
+            repeat(ids),
+            repeat(b.column("plan_id_plan").to_pylist()),
+        )
+        matches, start = [], 0
+        for n in n_items:
+            matches.append(picks[start : start + n])
+            start += n
+        return ids, confs, metodos, matches
+
+    return _append_columns(
+        doc_fields,
+        PROVIDER_FIELDS + [T.StructField("matches", T.ArrayType(PRACTICE_MATCH_TYPE))],
+        document_matcher,
     )
-    return out.select(
-        "doc_id", "item", "descripcion", "cantidad", "confianza",
-        "prestador_id", "plan_id_plan", "_m.*",
+
+
+def explode_matches(matched: DataFrame) -> DataFrame:
+    """match_documents output -> one row per practice, with the columns of
+    match_practices: each practice zipped with its pick by position."""
+    z = F.explode(F.arrays_zip("practicas", "matches")).alias("z")
+    return matched.select("doc_id", "prestador_id", "plan_id_plan", z).select(
+        "doc_id",
+        "z.practicas.item",
+        "z.practicas.descripcion",
+        "z.practicas.cantidad",
+        "z.practicas.confianza",
+        "prestador_id",
+        "plan_id_plan",
+        "z.matches.*",
     )

@@ -1,10 +1,10 @@
 """Flagship end-to-end plan: interleaved docs -> pre-visacion tables.
 
 Spark lifecycle (SURVEY §3.1): read docs -> extract (explode/clean/reassemble/
-fields) -> provider match cascade -> explode practices -> vectorized candidate
-match + agreement pick-best -> header + detail result tables, detail ordered
-by item (the UNIQUE(visacion_previa_id, item) invariant,
-/root/reference/database/schema_matching.sql:279-288).
+fields) -> one document-level matching pass (provider cascade + practice
+pick-best, operators/matching.match_documents) -> header + detail result
+tables, detail ordered by item (the UNIQUE(visacion_previa_id, item)
+invariant, reference database/schema_matching.sql:279-288).
 
 Replaces reference boundaries 1-5 (HTTP->queue->subprocess->OpenAI->DB,
 src/workers/previsacion.worker.js:18-227) with one declarative DAG.
@@ -12,11 +12,18 @@ src/workers/previsacion.worker.js:18-227) with one declarative DAG.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import config
 from ..operators import extract, matching
+
+DOC_FIELDS = (
+    "ruc", "prestador_nombre", "paciente_nombre", "paciente_ci", "fecha_orden",
+    "diagnostico_texto", "diagnostico_codigo_cie", "medico_matricula",
+    "matricula_valida", "urgente", "practicas", "confianza_extraccion",
+)
 
 
 def plan_id_col() -> F.Column:
@@ -34,21 +41,23 @@ def run_previsacion(
     media_strategy: str = "join",
     practice_matcher: str = "auto",
     tenant_id: str | None = None,
-    acuerdos_count: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (visacion_previa, det_visacion_previa).
 
     ``media_strategy`` as in extract.clean_spans.
 
-    ``practice_matcher``: 'fast' ships the agreements dim in the UDF closure
-    (zero extra shuffles — correct only while the dim fits driver/executor
-    memory), 'join' is the broadcast-join path that scales to any dim size,
-    'auto' (default) probes the agreements table size and falls back to
-    'join' above config.FAST_MATCH_MAX_AGREEMENTS rows. The probe is a
-    ``limit(cap+1)`` count (CollectLimit — scans partitions incrementally
-    and stops at cap+1 rows), NOT a full-table count() action; callers with
-    catalog/cached statistics can skip even that by passing
-    ``acuerdos_count``.
+    ``practice_matcher``: 'fast' matches each document once
+    (matching.match_documents): the provider cascade and every practice's
+    pick-best run in one Arrow map node whose dimensions ship in its
+    closure, one guarded driver collect each. That frame is persisted; the
+    header takes n_practicas and the mean practice similarity from the match
+    array (no groupBy, no join) and the detail explodes the cached array
+    (the matcher never runs twice). 'join' is the broadcast-join practice
+    matcher (matching.match_practices) that scales to any agreements size,
+    with per-doc stats from a groupBy joined back to the header. 'auto'
+    (default) collects at most config.FAST_MATCH_MAX_AGREEMENTS + 1 latest
+    agreements and takes 'fast' when they fit, else 'join' — the one
+    collect both decides and feeds the matcher.
 
     ``tenant_id`` (P1, reference matching.service.js:25-29 / migration_
     multitenant.sql): when given, the whole run is scoped to ONE tenant —
@@ -56,6 +65,8 @@ def run_previsacion(
     reference appending ``AND tenant_id = $n`` to each query. A tenant-a
     document can never match a tenant-b provider/nomenclador/agreement.
     Partition-prunable at scale when tables are partitioned by tenant."""
+    if practice_matcher not in ("auto", "fast", "join"):
+        raise ValueError(f"practice_matcher: unknown value {practice_matcher!r}")
     if tenant_id is not None:
         if media_strategy == "denormalized":
             # the media sidecar is not tenant-filtered; unioned media rows
@@ -68,89 +79,62 @@ def run_previsacion(
         prestadores = prestadores.filter(F.col("tenant_id") == tenant_id)
         nomencladores = nomencladores.filter(F.col("tenant_id") == tenant_id)
         acuerdos = acuerdos.filter(F.col("tenant_id") == tenant_id)
-    prest_e = matching.embed_prestadores(prestadores)
-    nom_e = matching.embed_nomencladores(nomencladores)
 
     extracted = extract.extract_documents(docs, media, media_strategy=media_strategy)
-
     doc_fields = extracted.select(
-        "doc_id",
-        F.col("fields.ruc").alias("ruc"),
-        F.col("fields.prestador_nombre").alias("prestador_nombre"),
-        F.col("fields.paciente_nombre").alias("paciente_nombre"),
-        F.col("fields.paciente_ci").alias("paciente_ci"),
-        F.col("fields.fecha_orden").alias("fecha_orden"),
-        F.col("fields.diagnostico_texto").alias("diagnostico_texto"),
-        F.col("fields.diagnostico_codigo_cie").alias("diagnostico_codigo_cie"),
-        F.col("fields.medico_matricula").alias("medico_matricula"),
-        F.col("fields.matricula_valida").alias("matricula_valida"),
-        F.col("fields.urgente").alias("urgente"),
-        F.col("fields.practicas").alias("practicas"),
-        F.col("fields.confianza_extraccion").alias("confianza_extraccion"),
-        plan_id_col(),
+        "doc_id", *[F.col(f"fields.{c}").alias(c) for c in DOC_FIELDS], plan_id_col()
     )
 
-    # Both outputs (header AND detail) hang off this intermediate; without
-    # persistence the full extraction + provider-match lineage recomputes
-    # once per output branch (measured 30s -> 20s at 300k docs/32 cores).
-    # MEMORY_AND_DISK: spill-safe at scale; callers may unpersist after
-    # writing both tables.
-    from pyspark import StorageLevel
+    agreements = None
+    if practice_matcher != "join":
+        cap = config.FAST_MATCH_MAX_AGREEMENTS if practice_matcher == "auto" else None
+        agreements = matching.agreement_map(acuerdos, cap)
 
-    with_prest = matching.match_prestador(doc_fields, prest_e).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    practices = with_prest.select(
-        "doc_id",
-        "prestador_id",
-        "plan_id_plan",
-        F.explode("practicas").alias("p"),
-    ).select(
-        "doc_id",
-        F.col("p.item").alias("item"),
-        F.col("p.descripcion").alias("descripcion"),
-        F.col("p.cantidad").alias("cantidad"),
-        F.col("p.confianza").alias("confianza"),
-        "prestador_id",
-        "plan_id_plan",
-    )
-
-    # fused closure-side matcher: identical rows to match_practices (pytest
-    # asserts), but zero candidate-explode shuffles — dims ship in the UDF
-    # closure per the broadcast-dimension pattern. Guarded: the closure-side
-    # dict only works while the agreements dim fits in memory.
-    if practice_matcher not in ("auto", "fast", "join"):
-        raise ValueError(f"practice_matcher: unknown value {practice_matcher!r}")
-    if practice_matcher == "fast":
-        use_fast = True
-    elif practice_matcher == "auto":
-        cap = config.FAST_MATCH_MAX_AGREEMENTS
-        if acuerdos_count is None:
-            # bounded probe: 1-column CollectLimit stops after cap+1 rows —
-            # no full scan of the agreements table just to pick a plan
-            acuerdos_count = (
-                acuerdos.select(acuerdos.columns[0]).limit(cap + 1).count()
-            )
-        use_fast = acuerdos_count <= cap
+    # Both outputs (header AND detail) hang off the persisted match frame;
+    # without persistence the full extraction + matching lineage recomputes
+    # once per output branch. MEMORY_AND_DISK: spill-safe at scale; callers
+    # may unpersist after writing both tables.
+    if agreements is not None:
+        matched = matching.match_documents(
+            doc_fields, prestadores, nomencladores, agreements
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        det = matching.explode_matches(matched)
+        # per-doc practice-match confidence mean (A13 component), summed in
+        # item order like the golden
+        sims = F.transform(
+            "matches", lambda m: F.coalesce(m["similitud"], F.lit(0.0))
+        )
+        n = F.size("matches")
+        stats = matched.withColumn("n_practicas", n.cast("long")).withColumn(
+            "_match_conf",
+            F.when(n > 0, F.round(F.aggregate(sims, F.lit(0.0), lambda a, x: a + x) / n, 4)),
+        )
     else:
-        use_fast = False
-    if use_fast:
-        det = matching.match_practices_fast(practices, nom_e, acuerdos)
-    else:
-        det = matching.match_practices(practices, nom_e, acuerdos)
-
-    # per-doc practice-match confidence mean (A13 component)
-    det_stats = det.groupBy("doc_id").agg(
-        F.round(F.avg(F.coalesce(F.col("similitud"), F.lit(0.0))), 4).alias(
-            "_match_conf"
-        ),
-        F.count("*").alias("n_practicas"),
-    )
+        with_prest = matching.match_prestador(doc_fields, prestadores).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        practices = with_prest.select(
+            "doc_id", "prestador_id", "plan_id_plan", F.explode("practicas").alias("p")
+        ).select(
+            "doc_id",
+            "p.item",
+            "p.descripcion",
+            "p.cantidad",
+            "p.confianza",
+            "prestador_id",
+            "plan_id_plan",
+        )
+        det = matching.match_practices(practices, nomencladores, acuerdos)
+        det_stats = det.groupBy("doc_id").agg(
+            F.round(F.avg(F.coalesce(F.col("similitud"), F.lit(0.0))), 4).alias(
+                "_match_conf"
+            ),
+            F.count("*").alias("n_practicas"),
+        )
+        stats = with_prest.join(det_stats, "doc_id", "left")
 
     header = (
-        with_prest.join(det_stats, "doc_id", "left")
-        .withColumn(
+        stats.withColumn(
             "confianza_general",
             F.round(
                 (

@@ -141,8 +141,9 @@ def test_pick_best_prefers_agreement(spark_previsacion):
 
 
 def test_match_practices_fast_equals_join_path(spark, corpus_dir):
-    """The fused closure-side matcher (match_practices_fast) returns row-for-
-    row identical results to the explode + broadcast-join + window path."""
+    """The document-level matcher (match_documents, exploded per practice)
+    returns row-for-row identical results, alternatives included, to the
+    explode + broadcast-join + window path (match_practices)."""
     from medical_ocr_service_spark.operators import extract, matching
     from medical_ocr_service_spark.plans.previsacion import plan_id_col
 
@@ -151,20 +152,15 @@ def test_match_practices_fast_equals_join_path(spark, corpus_dir):
     prest = spark.read.parquet(f"{corpus_dir}/prestadores.parquet")
     nom = spark.read.parquet(f"{corpus_dir}/nomencladores.parquet")
     ac = spark.read.parquet(f"{corpus_dir}/acuerdos_prestador.parquet")
-
-    prest_e = matching.embed_prestadores(prest)
-    nom_e = matching.embed_nomencladores(nom)
-    extracted = extract.extract_documents(docs, media)
-    doc_fields = extracted.select(
+    doc_fields = extract.extract_documents(docs, media).select(
         "doc_id",
-        F.col("fields.ruc").alias("ruc"),
-        F.col("fields.prestador_nombre").alias("prestador_nombre"),
-        F.col("fields.medico_matricula").alias("medico_matricula"),
-        F.col("fields.matricula_valida").alias("matricula_valida"),
-        F.col("fields.practicas").alias("practicas"),
+        *[
+            F.col(f"fields.{c}").alias(c)
+            for c in ("ruc", "prestador_nombre", "medico_matricula", "matricula_valida", "practicas")
+        ],
         plan_id_col(),
     )
-    with_prest = matching.match_prestador(doc_fields, prest_e)
+    with_prest = matching.match_prestador(doc_fields, prest)
     practices = with_prest.select(
         "doc_id", "prestador_id", "plan_id_plan", F.explode("practicas").alias("p")
     ).select(
@@ -177,11 +173,15 @@ def test_match_practices_fast_equals_join_path(spark, corpus_dir):
         "plan_id_plan",
     )
 
-    a = matching.match_practices(practices, nom_e, ac).toPandas()
-    b = matching.match_practices_fast(practices, nom_e, ac).toPandas()
+    a = matching.match_practices(practices, nom, ac).toPandas()
+    matched = matching.match_documents(
+        doc_fields, prest, nom, matching.agreement_map(ac)
+    )
+    b = matching.explode_matches(matched).toPandas()
     keys = ["doc_id", "item"]
     a = a.sort_values(keys, ignore_index=True)
     b = b.sort_values(keys, ignore_index=True)
+    assert len(a) > 0 and b["tiene_acuerdo"].any()
     # alternatives compared field-by-field (list-of-Row vs list-of-dict)
     alt_a = a.pop("matches_alternativos").map(
         lambda xs: [tuple(x) for x in xs]
@@ -194,9 +194,29 @@ def test_match_practices_fast_equals_join_path(spark, corpus_dir):
     assert (alt_a == alt_b).all()
 
 
+def _one_doc(spark, ruc, matricula, plan):
+    return spark.createDataFrame(
+        [("d1", ruc, "Clinica X", matricula, matricula is not None,
+          [(1, "hemograma completo", 1, 0.9)], plan)],
+        "doc_id string, ruc string, prestador_nombre string, "
+        "medico_matricula string, matricula_valida boolean, "
+        "practicas array<struct<item:int,descripcion:string,cantidad:int,"
+        "confianza:double>>, plan_id_plan int",
+    )
+
+
+def _prestadores(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "id_prestador int, ruc string, registro_profesional string, "
+        "nombre_fantasia string, raz_soc_nombre string, tipo string, estado string",
+    )
+
+
 def test_fast_path_null_agreement_keys_never_match(spark):
     """SQL NULL-never-matches parity: an agreement row with a NULL key
-    component must not match in the closure-dict fast path either."""
+    component must not match in the document-level matcher's closure dict
+    either, exactly like the join-based path."""
     from medical_ocr_service_spark.operators import matching
 
     nom = spark.createDataFrame(
@@ -205,26 +225,64 @@ def test_fast_path_null_agreement_keys_never_match(spark):
         "desc_nomenclador string, grupo string, subgrupo string, "
         "sinonimos array<string>, palabras_clave array<string>, estado string",
     )
-    nom_e = matching.embed_nomencladores(nom)
     ac = spark.createDataFrame(
         [(10, 1, None, 1, 100.0, "SI", "2024-01-01")],
         "id_acuerdo int, prest_id_prestador int, plan_id_plan int, "
         "id_nomenclador int, precio double, vigente string, fecha_vigencia string",
     ).withColumn("fecha_vigencia", F.to_date("fecha_vigencia"))
+    prest = _prestadores(
+        spark, [(1, "800-1", "M1", "Clinica X", "Clinica X SA", "CLINICA", "ACTIVO")]
+    )
     practices = spark.createDataFrame(
         [("d1", 1, "hemograma completo", 1, 0.9, 1, None)],
         "doc_id string, item int, descripcion string, cantidad int, "
         "confianza double, prestador_id int, plan_id_plan int",
     )
-    a = matching.match_practices(practices, nom_e, ac).toPandas()
-    b = matching.match_practices_fast(practices, nom_e, ac).toPandas()
+    a = matching.match_practices(practices, nom, ac).toPandas()
+    matched = matching.match_documents(
+        _one_doc(spark, "800-1", None, None), prest, nom, matching.agreement_map(ac)
+    )
+    b = matching.explode_matches(matched).toPandas()
+    assert b.loc[0, "prestador_id"] == 1 and b.loc[0, "nomenclador_id_sugerido"] == 1
     assert not a.loc[0, "tiene_acuerdo"] and not b.loc[0, "tiene_acuerdo"]
     assert a.loc[0, "alerta"] == b.loc[0, "alerta"] == "SIN_ACUERDO"
 
 
+def test_provider_shared_keys_resolve_to_lowest_id(spark):
+    """Two active providers sharing a RUC and a registro_profesional: the
+    exact cascade steps pick the lowest id_prestador (GoldenMatcher's
+    first-wins over id-ordered dims), whatever the input order; inactive
+    providers never match."""
+    from medical_ocr_service_spark.operators import matching
+
+    prest = _prestadores(
+        spark,
+        [
+            (9, "800-1", "M1", "Clinica Nueve", "Nueve SA", "CLINICA", "ACTIVO"),
+            (5, "800-1", "M1", "Clinica Cinco", "Cinco SA", "CLINICA", "ACTIVO"),
+            (2, "800-1", "M1", "Clinica Dos", "Dos SA", "CLINICA", "INACTIVO"),
+        ],
+    ).repartition(3)
+    nom = spark.createDataFrame(
+        [(1, "LAB", "hemograma completo", "hemograma", [], [], "ACTIVO")],
+        "id_nomenclador int, especialidad string, descripcion string, "
+        "desc_nomenclador string, sinonimos array<string>, "
+        "palabras_clave array<string>, estado string",
+    )
+    by_ruc = _one_doc(spark, "800-1", None, 1)
+    by_mat = _one_doc(spark, "999-9", "M1", 1)
+    for doc, metodo in ((by_ruc, "RUC"), (by_mat, "MATRICULA")):
+        for out in (
+            matching.match_prestador(doc, prest),
+            matching.match_documents(doc, prest, nom, {}),
+        ):
+            r = out.select("prestador_id", "prestador_metodo").first()
+            assert (r["prestador_id"], r["prestador_metodo"]) == (5, metodo)
+
+
 def test_auto_matcher_falls_back_to_join_path(spark, corpus_dir, monkeypatch):
     """practice_matcher='auto' must route to the join path when the
-    agreements dim exceeds the configured fast-path ceiling."""
+    agreements dim exceeds the configured document-matcher ceiling."""
     from medical_ocr_service_spark import config
     from medical_ocr_service_spark.corpus import generator
     from medical_ocr_service_spark.operators import matching
@@ -241,13 +299,67 @@ def test_auto_matcher_falls_back_to_join_path(spark, corpus_dir, monkeypatch):
         lambda *a, **k: (calls.append("join"), orig(*a, **k))[1],
     )
     monkeypatch.setattr(
-        matching, "match_practices_fast",
-        lambda *a, **k: (_ for _ in ()).throw(AssertionError("fast path used")),
+        matching, "match_documents",
+        lambda *a, **k: (_ for _ in ()).throw(AssertionError("document matcher used")),
     )
     monkeypatch.setattr(config, "FAST_MATCH_MAX_AGREEMENTS", 0)
     header, detail = previsacion.run_previsacion(docs, media, prest, nom, ac)
     assert calls == ["join"]
     assert detail.limit(1).count() >= 0  # plan executes
+
+
+def _final_plan_nodes(plan, cached=False):
+    """(one-line node string, inside-a-cached-relation) for every node of
+    an executed physical plan: AQE's final plan, query stages and the
+    plans of cached relations included."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _final_plan_nodes(plan.executedPlan(), cached)
+        return
+    if name.endswith("QueryStage") or name == "ReusedExchange":
+        yield (name, cached)
+        yield from _final_plan_nodes(plan.plan() if name != "ReusedExchange" else plan.child(), cached)
+        return
+    yield (plan.simpleString(1000), cached)
+    if name == "InMemoryTableScan":
+        yield from _final_plan_nodes(plan.relation().cachedPlan(), True)
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _final_plan_nodes(children.apply(i), cached)
+
+
+def test_previsacion_plan_shape(spark, corpus_dir):
+    """Default run_previsacion, executed: every Python function runs once
+    per evaluation (the matcher node is a projection barrier, so neither
+    extraction UDF gets inlined into its inputs), the detail only explodes
+    the cached match frame, and the plans carry few exchanges."""
+    from medical_ocr_service_spark.corpus import generator
+    from medical_ocr_service_spark.plans import previsacion
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
+    prest, nom, ac = generator.dims_dataframes(spark)
+    spark.catalog.clearCache()  # no cached relation from an earlier test
+    header, detail = previsacion.run_previsacion(docs, media, prest, nom, ac)
+    exchanges = 0
+    try:
+        for df in (header, detail):
+            df.write.format("noop").mode("overwrite").save()
+            nodes = list(_final_plan_nodes(df._jdf.queryExecution().executedPlan()))
+            text = "\n".join(s for s, _ in nodes)
+            for fn in ("extract_fields_udf(", "layout_order_udf(", "document_matcher("):
+                assert text.count(fn) == 1, (fn, text)
+            own = [s for s, cached in nodes if not cached]
+            assert any(s.startswith("InMemoryTableScan") for s in own), own
+            assert not any("document_matcher(" in s or "Python" in s for s in own), own
+            exchanges += sum(
+                s.startswith(("Exchange", "BroadcastExchange", "ReusedExchange"))
+                for s, _ in nodes
+            )
+        # the reassembly shuffle and the media broadcast, read by both outputs
+        assert exchanges <= 4, exchanges
+    finally:
+        spark.catalog.clearCache()
 
 
 def test_tenant_isolation(spark, corpus_dir):

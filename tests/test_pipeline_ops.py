@@ -782,6 +782,7 @@ def test_dup_ngram_stats_fuzz_vs_bruteforce(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
+    from medical_ocr_service_spark.functions.similarity import round_half_up
     from medical_ocr_service_spark.operators.dedup import duplicated_ngram_stats
 
     word = st.sampled_from(["aa", "bb", "cc", "dd", "ee"])
@@ -811,7 +812,7 @@ def test_dup_ngram_stats_fuzz_vs_bruteforce(spark):
                 if any(g in shingle_sets[j] for j in shingle_sets if j != i)
             }
             if dup:
-                expected[i] = (len(s), len(dup), round(len(dup) / len(s), 9))
+                expected[i] = (len(s), len(dup), round_half_up(len(dup) / len(s), 9))
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
         )
@@ -839,6 +840,7 @@ def test_pmi_topk_fuzz_vs_bruteforce(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
+    from medical_ocr_service_spark.functions.similarity import round_half_up
     from medical_ocr_service_spark.operators.text_analysis import pmi_topk
 
     word = st.sampled_from(["p", "q", "r", "s"])
@@ -861,7 +863,9 @@ def test_pmi_topk_fuzz_vs_bruteforce(spark):
             (
                 f"{a} {b}",
                 c,
-                round((float(c) * float(t_total)) / (float(uni[a]) * float(uni[b])), 6),
+                round_half_up(
+                    (float(c) * float(t_total)) / (float(uni[a]) * float(uni[b])), 6
+                ),
             )
             for (a, b), c in bi.items()
             if c >= 2

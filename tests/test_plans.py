@@ -143,7 +143,10 @@ def test_topk_matching_broadcasts_agreements(spark, corpus_dir):
     docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
     media = spark.read.parquet(f"{corpus_dir}/media.parquet")
     prest, nom, ac = generator.dims_dataframes(spark)
-    header, detail = previsacion.run_previsacion(docs, media, prest, nom, ac)
+    header, detail = previsacion.run_previsacion(
+        docs, media, prest, nom, ac, media_strategy="denormalized",
+        practice_matcher="join",
+    )
     plan = _plan(detail)
     assert "BroadcastHashJoin" in plan
 
