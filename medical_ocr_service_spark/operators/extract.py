@@ -349,6 +349,47 @@ def _with_fields(assembled: DataFrame) -> DataFrame:
     )
 
 
+def reassembled_docs_with_errors(
+    docs: DataFrame,
+    media: DataFrame,
+    media_strategy: str = "join",
+) -> DataFrame:
+    """Quarantine-path reassembly: (doc_id, _sorted, _errors), one row per
+    doc from ONE groupBy over clean_spans(with_errors=True).
+
+    `_sorted` is the offset-sorted span list (as in _reassemble_cleaned);
+    `_errors` is array<struct<media_ref, error>> of the doc's failed spans.
+    collect_list drops NULLs, so a clean doc gets an empty array."""
+    cleaned = clean_spans(docs, media, media_strategy, with_errors=True)
+    return cleaned.groupBy("doc_id").agg(
+        F.sort_array(
+            F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
+        ).alias("_sorted"),
+        F.collect_list(
+            F.when(
+                F.col("_err").isNotNull(),
+                F.struct("media_ref", F.col("_err").alias("error")),
+            )
+        ).alias("_errors"),
+    )
+
+
+def split_quarantine(per_doc: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """reassembled_docs_with_errors output -> (results, quarantined docs).
+
+    results are extract_documents rows for the docs with no failed span;
+    quarantined docs are (doc_id, _errors) for the rest, one row per doc
+    (quarantine_rows flattens them to the quarantine table's rows)."""
+    results = _with_fields(_finish_reassembly(per_doc.filter(F.size("_errors") == 0)))
+    quarantined = per_doc.filter(F.size("_errors") > 0).select("doc_id", "_errors")
+    return results, quarantined
+
+
+def quarantine_rows(quarantined: DataFrame) -> DataFrame:
+    """Quarantined docs -> one (doc_id, media_ref, error) row per failed span."""
+    return quarantined.select("doc_id", F.inline("_errors"))
+
+
 def extract_documents_quarantine(
     docs: DataFrame,
     media: DataFrame,
@@ -363,16 +404,19 @@ def extract_documents_quarantine(
       span. Quarantined documents are withheld entirely, so a checkpointed
       resume (CheckpointedExtraction) naturally retries them next run —
       the Spark analogue of the reference's attempt counter + re-queue.
+
+    Both outputs hang off one per-doc frame (reassembled_docs_with_errors):
+    each span is cleaned and its layout parsed once, in the same groupBy
+    that reassembles the document, and the frame splits on whether the
+    doc's error list is empty — no anti-join, no distinct over doc_ids.
+    Each output returned here recomputes that frame; a caller that writes
+    both should persist it and split it with split_quarantine and
+    quarantine_rows, as CheckpointedExtraction.run does.
     """
-    cleaned = clean_spans(docs, media, media_strategy, with_errors=True)
-    quarantine = cleaned.filter(F.col("_err").isNotNull()).select(
-        "doc_id", "media_ref", F.col("_err").alias("error")
+    results, quarantined = split_quarantine(
+        reassembled_docs_with_errors(docs, media, media_strategy)
     )
-    ok = cleaned.drop("_err").join(
-        quarantine.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-    results = _with_fields(_reassemble_cleaned(ok))
-    return results, quarantine
+    return results, quarantine_rows(quarantined)
 
 
 def reassembled_docs_salted(

@@ -25,8 +25,7 @@ the function's closure — the broadcast-dimension pattern, with no dimension
 shuffle and no join. Dims are small by contract (≤ MAX_BROADCAST_DIM_ROWS).
 For agreement tables too large for a closure dict, match_practices is the
 explode + broadcast-join + window matcher over exploded practices (same
-rows; pytest asserts), and match_prestador_ann a collect-free provider
-cascade for giant provider dims.
+rows; pytest asserts).
 """
 
 from __future__ import annotations
@@ -201,8 +200,8 @@ def _guarded_collect(df: DataFrame, what: str) -> list:
         raise ValueError(
             f"{what}: dimension exceeds MAX_BROADCAST_DIM_ROWS={cap}; "
             "shard the dimension, or use the collect-free paths: "
-            "match_prestador_ann (provider cascade) / match_practices "
-            "(broadcast-join matcher) / operators.similarity_search"
+            "match_practices (broadcast-join matcher) / "
+            "operators.similarity_search"
         )
     return rows
 
@@ -433,151 +432,6 @@ def trigram_jaccard_col(a, b):
         (F.size(ga) > 0) & (F.size(gb) > 0) & (union > 0),
         inter.cast("double") / union.cast("double"),
     ).otherwise(0.0)
-
-
-def match_prestador_ann(
-    doc_fields: DataFrame,
-    prest_embedded: DataFrame,
-    n_planes: int = 6,
-    probe_radius: int = 2,
-) -> DataFrame:
-    """Giant-dimension provider cascade: identical RUC/matricula exact steps,
-    but the fuzzy fallback is a BUCKET JOIN (integer-SRP LSH over the name
-    embeddings) instead of a closure matmul — NO driver collect anywhere, so
-    the prestador dimension can be arbitrarily large (it shuffles/broadcasts
-    by Catalyst's own sizing).
-
-    Multi-probe: the query side explodes into every bucket within Hamming
-    ``probe_radius`` of its own (radius 2 over 6 planes = 22 probes) —
-    sign-flip probability per plane is ~(angle/pi), so radius 2 recovers
-    ~90% of moderately-similar matches that single-probe misses. Still
-    approximate by design; use match_prestador while the dim fits
-    MAX_BROADCAST_DIM_ROWS (pytest asserts high agreement on the corpus)."""
-    from itertools import combinations
-    from .similarity_search import cosine_col, lsh_bucket_col, srp_coefficients
-
-    activo = prest_embedded.filter(F.col("estado") == "ACTIVO")
-
-    # a key shared by several active providers resolves to the lowest id,
-    # as in match_prestador
-    by_ruc = activo.groupBy(F.col("ruc").alias("_p_ruc")).agg(
-        F.min("id_prestador").alias("_ruc_id")
-    )
-    step1 = doc_fields.join(
-        F.broadcast(by_ruc), doc_fields.ruc == by_ruc._p_ruc, "left"
-    ).drop("_p_ruc")
-
-    by_mat = activo.groupBy(F.col("registro_profesional").alias("_p_mat")).agg(
-        F.min("id_prestador").alias("_mat_id")
-    )
-    step2 = step1.join(
-        F.broadcast(by_mat),
-        (step1._ruc_id.isNull())
-        & step1.matricula_valida
-        & (step1.medico_matricula == by_mat._p_mat),
-        "left",
-    ).drop("_p_mat")
-
-    first_emb = activo.select("nombre_embedding").first()
-    if first_emb is None or first_emb[0] is None:
-        # loud-failure contract (mirrors _guarded_collect): an empty active-
-        # provider dimension means every fuzzy match would be null anyway —
-        # tell the caller instead of TypeError-ing on len(None)
-        raise ValueError(
-            "match_prestador_ann: the active prestador dimension is empty "
-            "(no estado='ACTIVO' rows with nombre_embedding); nothing to "
-            "match against"
-        )
-    dim = len(first_emb[0])
-    H = srp_coefficients(dim, n_planes)
-    # bucket on a NOMBRE-ONLY embedding so both sides of the LSH live in the
-    # same text space (the query is just the extracted provider name; the
-    # scoring embedding deliberately stays the richer etext vector for
-    # parity with match_prestador's semantics)
-    dims = activo.withColumn(
-        "_bucket_emb", embed_udf("nombre_fantasia")
-    ).select(
-        F.col("id_prestador").alias("_ann_id"),
-        F.col("nombre_fantasia").alias("_ann_nombre"),
-        F.col("nombre_embedding").alias("_ann_emb"),
-        lsh_bucket_col(F.col("_bucket_emb"), H).alias("_bucket"),
-    )
-    misses = step2.filter(
-        F.col("_ruc_id").isNull() & F.col("_mat_id").isNull()
-    ).select("doc_id", "prestador_nombre")
-    masks = [0]
-    if probe_radius >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if probe_radius >= 2:
-        masks += [(1 << i) | (1 << j) for i, j in combinations(range(n_planes), 2)]
-    q = (
-        misses.withColumn("_q_emb", embed_udf("prestador_nombre"))
-        .withColumn("_qb", lsh_bucket_col(F.col("_q_emb"), H))
-        .withColumn(
-            "_bucket",
-            F.explode(
-                F.array(*[F.col("_qb").bitwiseXOR(F.lit(m)) for m in masks])
-            ),
-        )
-    )
-    scored = (
-        q.join(dims, "_bucket")
-        .dropDuplicates(["doc_id", "_ann_id"])
-        .withColumn(
-            "_sim",
-            F.round(
-                config.VEC_WEIGHT * cosine_col(F.col("_q_emb"), F.col("_ann_emb"))
-                + config.TRGM_WEIGHT
-                * trigram_jaccard_col(F.col("prestador_nombre"), F.col("_ann_nombre")),
-                4,
-            ),
-        )
-    )
-    # struct-max argmax: the per-doc winner is the lexicographic max of
-    # (_sim, -_ann_id, _ann_id) — identical to a row_number window ordered
-    # (desc _sim, asc _ann_id) because id_prestador is a non-null int, so
-    # max(-id) = min(id) breaks similarity ties. The aggregate gets a
-    # map-side partial_max: one candidate per (partition, doc) crosses the
-    # shuffle instead of all ~22 radius-2 probe hits feeding a per-doc sort.
-    best = (
-        scored.groupBy(F.col("doc_id").alias("_b_doc"))
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("_sim"),
-                    (-F.col("_ann_id")).alias("_neg_id"),
-                    F.col("_ann_id"),
-                )
-            ).alias("_best")
-        )
-        .select(
-            "_b_doc",
-            F.col("_best._ann_id").alias("_ann_id"),
-            F.col("_best._sim").alias("_ann_sim"),
-        )
-    )
-    step3 = step2.join(best, step2.doc_id == best._b_doc, "left").drop("_b_doc")
-
-    return (
-        step3.withColumn(
-            "prestador_id", F.coalesce("_ruc_id", "_mat_id", "_ann_id")
-        )
-        .withColumn(
-            "prestador_confianza",
-            F.when(
-                F.col("_ruc_id").isNotNull() | F.col("_mat_id").isNotNull(),
-                F.lit(1.0),
-            ).otherwise(F.round(F.col("_ann_sim"), 2)),
-        )
-        .withColumn(
-            "prestador_metodo",
-            F.when(F.col("_ruc_id").isNotNull(), "RUC")
-            .when(F.col("_mat_id").isNotNull(), "MATRICULA")
-            .when(F.col("_ann_id").isNotNull(), "FUZZY")
-            .otherwise(F.lit(None).cast("string")),
-        )
-        .drop("_ruc_id", "_mat_id", "_ann_id", "_ann_sim")
-    )
 
 
 # ---------------------------------------------------------------------------

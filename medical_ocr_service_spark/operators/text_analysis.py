@@ -18,6 +18,11 @@ STOPWORDS = {
 }
 
 
+def _words(text: Column) -> Column:
+    """Lower-cased words split on [ \\t\\n\\r]+, empty tokens dropped."""
+    return F.filter(F.split(F.lower(text), "[ \t\n\r]+"), lambda x: x != "")
+
+
 def _score(toks: Column, words: list[str]) -> Column:
     arr = F.array(*[F.lit(w) for w in words])
     return F.size(F.filter(toks, lambda x: F.array_contains(arr, x))).cast("long")
@@ -25,7 +30,7 @@ def _score(toks: Column, words: list[str]) -> Column:
 
 def lang_id(df: DataFrame, text_col: str) -> DataFrame:
     """Adds per-language stopword scores + argmax lang_guess column."""
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = _words(F.col(text_col))
     out = df
     for lang, words in STOPWORDS.items():
         out = out.withColumn(f"score_{lang}", _score(toks, words))
@@ -74,7 +79,7 @@ def quality_score(df: DataFrame, text_col: str) -> DataFrame:
     n_chars = F.length(F.col(text_col))
     punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
     all_stop = [w for ws in STOPWORDS.values() for w in ws]
-    stop = _score(F.split(F.lower(F.col(text_col)), " "), all_stop)
+    stop = _score(_words(F.col(text_col)), all_stop)
     return df.select(
         "*",
         toks.alias("n_tokens"),

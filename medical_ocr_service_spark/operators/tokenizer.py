@@ -164,7 +164,9 @@ def bpe_encode(
     vocabulary (AQE broadcasts it when it is actually small) and an
     order-preserving groupBy on (id, pos). The corpus text crosses exactly
     two shuffles (explode -> join; groupBy) and the fold work never
-    touches it."""
+    touches it. A document with no words (empty, whitespace-only or NULL
+    text) keeps its row with empty tokens: the encoded rows left-join back
+    onto the input ids."""
     toks = df.select(
         F.col(id_col).alias("_id"),
         F.posexplode(
@@ -177,7 +179,7 @@ def bpe_encode(
     vocab = bpe_segment_words(
         toks.select("word").distinct(), merges, "word", checkpoint_every
     )
-    return (
+    encoded = (
         toks.join(vocab, "word")
         .groupBy("_id")
         .agg(
@@ -190,5 +192,12 @@ def bpe_encode(
                 )
             ).alias("tokens")
         )
-        .select(F.col("_id").alias(id_col), "tokens")
+    )
+    return (
+        df.select(F.col(id_col).alias("_id"))
+        .join(encoded, "_id", "left")
+        .select(
+            F.col("_id").alias(id_col),
+            F.coalesce("tokens", F.array().cast("array<string>")).alias("tokens"),
+        )
     )

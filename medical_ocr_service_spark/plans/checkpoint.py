@@ -34,6 +34,7 @@ import os
 import time
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -148,10 +149,17 @@ class CheckpointedExtraction:
 
         ``quarantine=True`` (Q3): per-row failure isolation — documents with
         an unparsable span are withheld from results and appended to the
-        quarantine table instead of failing the task; each resumed run
-        retries them (attempt = distinct run_id in quarantine) until
-        ``max_intentos``, after which they are excluded permanently
-        (failed_docs() reports estado FAILED).
+        quarantine table (one row per failed span) instead of failing the
+        task; each resumed run retries them (attempt = distinct run_id in
+        quarantine) until ``max_intentos``, after which they are excluded
+        permanently (failed_docs() reports estado FAILED). Each span is
+        cleaned and layout-parsed once per run: one groupBy builds the
+        per-doc frame (extract.reassembled_docs_with_errors), which is
+        persisted, and both commits read it — results are its docs with
+        no failed span, the quarantine its docs with some. The run's
+        ``docs_quarantined`` is an Observation on the doc-level quarantine
+        frame, filled by the quarantine commit itself. The frame is
+        unpersisted when run() returns or raises.
 
         ``colocated=True`` swaps in the zero-exchange co-located plan
         (extract.extract_documents_colocated) — intended for doc_id-bucketed
@@ -184,7 +192,7 @@ class CheckpointedExtraction:
             )
         pending = self.pending(docs, base_sid)
 
-        quarantine_df = None
+        per_doc = quarantined = None
         if colocated:
             result = extract.extract_documents_colocated(pending, media)
         elif quarantine:
@@ -201,13 +209,33 @@ class CheckpointedExtraction:
                 pending = pending.join(
                     F.broadcast(exhausted), "doc_id", "left_anti"
                 )
-            result, quarantine_df = extract.extract_documents_quarantine(
+            # both commits read this frame: persisting it keeps the layout
+            # parse to one evaluation per span
+            per_doc = extract.reassembled_docs_with_errors(
                 pending, media, media_strategy=media_strategy
-            )
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            result, quarantined = extract.split_quarantine(per_doc)
         else:
             result = extract.extract_documents(
                 pending, media, media_strategy=media_strategy, salted=salted
             )
+        try:
+            return self._commit(result, quarantined, run_id, run_ts, base_sid, fail_on)
+        finally:
+            if per_doc is not None:
+                per_doc.unpersist()
+
+    def _commit(
+        self,
+        result: DataFrame,
+        quarantined: DataFrame | None,
+        run_id: str,
+        run_ts: float,
+        base_sid: int | None,
+        fail_on: str | None,
+    ) -> dict:
+        """Write the run's results (and quarantined docs, if any) and its
+        lineage record; returns the lineage record."""
         if fail_on is not None:
             # deterministic poison row -> task failure after partial work
             result = result.withColumn(
@@ -260,29 +288,23 @@ class CheckpointedExtraction:
             flat.write.mode("append").parquet(self.results_path)
             snapshot_id = None
 
-        n_quarantined = 0
-        if quarantine_df is not None:
-            qrows = quarantine_df.withColumn("run_id", F.lit(run_id)).withColumn(
-                "run_ts", F.lit(run_ts)
-            )
-            if self.snapshots:
-                self._quar_tab.commit_append(qrows, summary={"run_id": run_id})
-                qall = self._quar_tab.read(spark)
-            else:
-                qrows.write.mode("append").parquet(self.quarantine_path)
-                qall = spark.read.parquet(self.quarantine_path)
-            n_quarantined = (
-                qall.filter(F.col("run_id") == run_id)
-                .select("doc_id")
-                .distinct()
-                .count()
-            )
-
         metrics = dict(obs.get)
         if snapshot_id is not None:
             metrics["snapshot_id"] = snapshot_id
-        if quarantine:
-            metrics["docs_quarantined"] = n_quarantined
+        if quarantined is not None:
+            # observed before the explode (one row per doc), so the
+            # quarantine write itself counts the docs
+            qobs = Observation(f"quarantine_{run_id}")
+            qrows = extract.quarantine_rows(
+                quarantined.observe(qobs, F.count(F.lit(1)).alias("docs"))
+            ).select(
+                "*", F.lit(run_id).alias("run_id"), F.lit(run_ts).alias("run_ts")
+            )
+            if self.snapshots:
+                self._quar_tab.commit_append(qrows, summary={"run_id": run_id})
+            else:
+                qrows.write.mode("append").parquet(self.quarantine_path)
+            metrics["docs_quarantined"] = qobs.get["docs"]
         metrics.update(
             {
                 "run_id": run_id,

@@ -1944,13 +1944,13 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     WITH scored AS (
       SELECT doc_id,
-             len(list_filter(string_split(lower(text), ' '),
+             len(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r]+'),
                  x -> list_contains(['der','die','und','das','ist','von','den','ein'], x))) AS score_de,
-             len(list_filter(string_split(lower(text), ' '),
+             len(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r]+'),
                  x -> list_contains(['the','of','and','to','in','is','that','a'], x))) AS score_en,
-             len(list_filter(string_split(lower(text), ' '),
+             len(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r]+'),
                  x -> list_contains(['el','la','de','que','y','en','los','se'], x))) AS score_es,
-             len(list_filter(string_split(lower(text), ' '),
+             len(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r]+'),
                  x -> list_contains(['le','la','de','et','les','des','un','est'], x))) AS score_fr
       FROM documents)
     SELECT doc_id, score_en, score_es, score_fr, score_de,

@@ -46,3 +46,29 @@ def corpus_mem():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA
+
+
+def _final_plan_nodes(plan, cached=False):
+    """(one-line node string, inside-a-cached-relation) for every node of
+    an executed physical plan: AQE's final plan, query stages and the
+    plans of cached relations included."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _final_plan_nodes(plan.executedPlan(), cached)
+        return
+    if name.endswith("QueryStage") or name == "ReusedExchange":
+        yield (name, cached)
+        yield from _final_plan_nodes(plan.plan() if name != "ReusedExchange" else plan.child(), cached)
+        return
+    yield (plan.simpleString(1000), cached)
+    if name == "InMemoryTableScan":
+        yield from _final_plan_nodes(plan.relation().cachedPlan(), True)
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _final_plan_nodes(children.apply(i), cached)
+
+
+@pytest.fixture(scope="session")
+def final_plan_nodes():
+    """The _final_plan_nodes walker, for plan-shape tests."""
+    return _final_plan_nodes

@@ -186,6 +186,112 @@ def test_quarantine_recovers_after_fix(spark, loaded, tmp_path):
     assert ck.results(spark).filter(F.col("doc_id") == victim).count() == 1
 
 
+def _two_bad_spans(media):
+    """(victim doc_id, its two poisoned media_refs, media with those two
+    layout payloads corrupted) for the first doc with >= 2 media spans."""
+    victim = (
+        media.groupBy("doc_id").count().filter(F.col("count") >= 2)
+        .orderBy("doc_id").first()["doc_id"]
+    )
+    refs = sorted(
+        r["media_ref"]
+        for r in media.filter(F.col("doc_id") == victim)
+        .orderBy("media_ref").limit(2).collect()
+    )
+    bad = media.withColumn(
+        "layout_json",
+        F.when(F.col("media_ref").isin(refs), F.lit("{not json")).otherwise(
+            F.col("layout_json")
+        ),
+    )
+    return victim, refs, bad
+
+
+def test_quarantine_two_bad_spans_one_doc(spark, loaded, tmp_path):
+    """A doc with two malformed media spans counts once in
+    docs_quarantined and leaves one quarantine row per failed span."""
+    docs, media = loaded
+    victim, refs, bad = _two_bad_spans(media)
+    ck = CheckpointedExtraction(str(tmp_path / "q"))
+    m = ck.run(docs, bad, quarantine=True)
+    assert m["docs_quarantined"] == 1
+    assert m["docs_processed"] == docs.count() - 1
+    q = spark.read.parquet(ck.quarantine_path)
+    assert q.columns == ["doc_id", "media_ref", "error", "run_id", "run_ts"]
+    rows = q.collect()
+    assert sorted((r["doc_id"], r["media_ref"]) for r in rows) == [
+        (victim, ref) for ref in refs
+    ]
+    assert all(r["error"] and r["run_id"] == m["run_id"] for r in rows)
+
+
+def test_quarantine_clean_run_commits_empty(spark, loaded, tmp_path):
+    """No malformed media: docs_quarantined is 0 and the quarantine
+    snapshot commit holds no rows."""
+    from medical_ocr_service_spark.sources.snapshot_table import SnapshotTable
+
+    docs, media = loaded
+    ck = CheckpointedExtraction(str(tmp_path / "q"), snapshots=True)
+    m = ck.run(docs, media, quarantine=True)
+    assert m["docs_quarantined"] == 0
+    assert m["docs_processed"] == docs.count()
+    quar = SnapshotTable(ck.quarantine_path)
+    assert len(quar.history()) == 1
+    assert quar.read(spark).count() == 0
+
+
+def test_quarantine_run_plan_shape(
+    spark, loaded, tmp_path, monkeypatch, final_plan_nodes
+):
+    """One quarantine run() parses each media layout once: across both
+    commits' executed plans the layout error UDF sits in ONE
+    ArrowEvalPython (inside the persisted per-doc frame), no anti-join
+    withholds quarantined docs, and the quarantine write only reads the
+    cache — no Python node of its own."""
+    from pyspark.sql import DataFrameWriter
+
+    docs, media = loaded
+    _, _, bad = _two_bad_spans(media)
+    written = []
+    write_parquet = DataFrameWriter.parquet
+
+    def recording(self, *a, **kw):
+        write_parquet(self, *a, **kw)
+        plan = self._df._jdf.queryExecution().executedPlan()
+        written.append(list(final_plan_nodes(plan)))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    spark.catalog.clearCache()
+    CheckpointedExtraction(str(tmp_path / "q")).run(docs, bad, quarantine=True)
+    assert len(written) == 2  # results, then quarantine
+    nodes = [n for plan in written for n in plan]
+
+    def evals(ns):
+        return [
+            s for s in ns
+            if s.startswith("ArrowEvalPython") and "layout_text_err_udf(" in s
+        ]
+
+    # both commits read the same cached relation: count its nodes once
+    cached = {s for s, c in nodes if c}
+    own = [s for s, c in nodes if not c]
+    assert len(evals(own)) + len(evals(cached)) == 1, nodes
+    assert not any("LeftAnti" in s for s, _ in nodes), nodes
+    quar_own = [s for s, c in written[1] if not c]
+    assert any(s.startswith("InMemoryTableScan") for s in quar_own), quar_own
+    assert not any("Python" in s for s in quar_own), quar_own
+
+
+def test_quarantine_run_unpersists_on_failure(spark, loaded, tmp_path):
+    """A run that raises mid-commit leaves no persisted frame behind."""
+    docs, media = loaded
+    spark.catalog.clearCache()
+    ck = CheckpointedExtraction(str(tmp_path / "q"))
+    with pytest.raises(Exception, match="injected failure"):
+        ck.run(docs, media, quarantine=True, fail_on="doc00000100")
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+
+
 def test_windowed_counts_drop_late_events(spark, tmp_path):
     """Watermarked tumbling windows (A8 streaming analogue): an event
     arriving after the watermark passed its window is DROPPED; finalized

@@ -165,6 +165,8 @@ def test_lang_id_and_quality(spark):
         # tie: "est" is a French stopword, "is"/"that" English — craft equal
         # scores: one hit each -> tie breaks to alphabetically-first lang
         (4, "is est"),
+        # row 2's words separated by tabs, newlines and runs of spaces
+        (5, "el\tgato es\nuno de los\r\nanimales que  viven en\t\tla casa"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = text_analysis.lang_id(df, "text").toPandas().set_index("doc_id")
@@ -173,10 +175,13 @@ def test_lang_id_and_quality(spark):
     assert out.loc[3, "lang_guess"] == "und"
     assert out.loc[4, "score_en"] == out.loc[4, "score_fr"] == 1
     assert out.loc[4, "lang_guess"] == "en"  # ascending-name tie-break
+    assert out.loc[5, "lang_guess"] == "es"
+    assert out.loc[5, "score_es"] == out.loc[2, "score_es"] == 6
 
     q = text_analysis.quality_score(df, "text").toPandas().set_index("doc_id")
     assert q.loc[1, "quality"] > q.loc[3, "quality"]
     assert (q["quality"] <= 1.0).all()
+    assert q.loc[5, "stopword_ratio"] == q.loc[2, "stopword_ratio"] > 0
 
 
 def test_fingerprint_stable_under_whitespace(spark):

@@ -121,6 +121,17 @@ def test_bpe_encode_roundtrip_and_word_isolation(spark):
         assert "".join(enc[i]) == "".join(t.lower().split())
 
 
+def test_bpe_encode_keeps_wordless_docs(spark):
+    """Empty and whitespace-only documents encode to empty token lists
+    instead of vanishing from the output."""
+    df = spark.createDataFrame(
+        [(0, "abab ab"), (1, ""), (2, " \t\n ")], ["doc_id", "text"]
+    )
+    merges = learn_bpe_merges(df, "text", n_merges=2)
+    enc = {r["doc_id"]: r["tokens"] for r in bpe_encode(df, merges).collect()}
+    assert enc == {0: ["ab", "ab", "ab"], 1: [], 2: []}
+
+
 def test_learn_bpe_merges_fuzz_vs_reference(spark):
     """Random small corpora: the distributed trainer's merge table must
     equal the reference implementation's for every draw (tie-breaks
