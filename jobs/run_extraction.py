@@ -42,14 +42,6 @@ def main() -> None:
         "shuffle-free when docs+media are bucketed by doc_id "
         "(sources/bucketed.py); mutually exclusive with --salted/--quarantine",
     )
-    ap.add_argument(
-        "--media-strategy",
-        choices=["join", "broadcast", "denormalized"],
-        default="join",
-        help="media_ref resolution strategy (see extract.clean_spans; "
-        "'denormalized' requires owner keys in the media table and a "
-        "full-corpus run)",
-    )
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument(
         "--quarantine",
@@ -91,7 +83,6 @@ def main() -> None:
     metrics = ck.run(
         docs,
         media,
-        media_strategy=args.media_strategy,
         salted=args.salted,
         quarantine=args.quarantine,
         max_intentos=args.max_intentos,

@@ -122,7 +122,7 @@ CONFIDENCE_WEIGHTS = {
 # (keeps fixtures fast); the reference's production width is 1536
 # (database/schema_matching.sql:33,64 vector(1536), text-embedding-3-small).
 # Env-overridable so the SAME code — Spark pipeline, golden matcher, ANN
-# cascade — runs at production width: the dim-1536 pytest and bench row set
+# cascade — runs at production width: the dim-1536 pytest sets
 # SPARK_GRAFT_EMBEDDING_DIM=1536 in a subprocess.
 import os as _os
 
@@ -133,7 +133,7 @@ N_ALTERNATIVES = 5          # matching.service.js:395-406
 VEC_WEIGHT = 0.7            # matching.service.js:60-63 combined score
 TRGM_WEIGHT = 0.3
 MIN_SIMILARITY_NOM = 0.30   # candidate floor (matching.service.js:44 vector threshold)
-# 'auto' practice matcher: closure-dict fast path only below this many
+# run_previsacion's practice matcher: closure-dict path only up to this many
 # agreement rows (~40 MB of dict at 200 B/entry); larger dims take the
 # broadcast-join path, which scales to any size.
 FAST_MATCH_MAX_AGREEMENTS = 200_000

@@ -297,11 +297,10 @@ def synthesize_corpus(
                         "layout_json": json.dumps(layout, sort_keys=True),
                         "width": layout["w"],
                         "height": layout["h"],
-                        # denormalized owner keys (doc_id, offset): written to
-                        # the sidecar at ingest so the extraction plan can
-                        # union media rows straight into the span stream
-                        # (extract.clean_spans media_strategy="denormalized")
-                        # instead of joining on media_ref — one shuffle total.
+                        # owner keys (doc_id, offset), written to the sidecar
+                        # at ingest: doc_id lets the co-located plan
+                        # (extract.reassembled_docs_colocated) group media by
+                        # document; offset stays part of the corpus schema.
                         "doc_id": doc_id,
                         "offset": offset,
                     }

@@ -81,7 +81,7 @@ def write_corpus(
                 ("layout_json", pa.string()),
                 ("width", pa.int32()),
                 ("height", pa.int32()),
-                # denormalized owner keys — see generator.synthesize_corpus
+                # owner keys — see generator.synthesize_corpus
                 ("doc_id", pa.string()),
                 ("offset", pa.int32()),
             ]

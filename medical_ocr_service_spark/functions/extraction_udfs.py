@@ -1,17 +1,20 @@
-"""Arrow pandas UDFs for the extraction core (the only executor-side Python).
+"""Extraction-core operators: one production implementation each.
 
-Three UDFs, all scalar pandas (Arrow-batched, never row-at-a-time Spark UDFs):
-
-  * strip_boilerplate_udf  — text-density + tag-ratio main-content extraction
-    (deterministic replacement for the reference's GPT-4o Vision read,
+  * strip_boilerplate_col — text-density + tag-ratio main-content extraction
+    as a JVM column expression (deterministic replacement for the
+    reference's GPT-4o Vision read,
     /root/reference/src/services/gpt-vision.service.js:45-99);
-  * layout_text_udf        — XY-cut reading-order reconstruction over page
-    layouts (replaces pdftoppm, /root/reference/src/services/pdf.service.js:17-109);
-  * extract_fields_udf     — regex/state-machine field extraction + confidence
+  * apply_pruned_layout   — XY-cut reading-order reconstruction over page
+    layouts (replaces pdftoppm, /root/reference/src/services/pdf.service.js:17-109):
+    JVM from_json + the coordinate-only layout_order_udf. The quarantine
+    path (layout_text_err_udf) and the co-located plan (layout_entries_udf)
+    parse the raw JSON in Python instead;
+  * extract_fields_udf    — regex/state-machine field extraction + confidence
     fold (/root/reference/src/prompts/system.prompt.js:91-159,
     src/workers/previsacion.worker.js:229-263,
     src/services/gpt-vision.service.js:209-243).
 
+The Python functions are Arrow pandas UDFs (never row-at-a-time Spark UDFs).
 Written independently from the pure-Python golden oracle
 (medical_ocr_service_spark.corpus.golden); the pytest suite asserts exact
 agreement. Shared *constants* (thresholds, regex banks) come from config —
@@ -30,38 +33,16 @@ from pyspark.sql import types as T
 from .. import config
 
 _WS = re.compile(r"\s+")
-_TAG = re.compile(config.TAG_REGEX)
-_TAG_COUNT = re.compile(config.TAG_COUNT_REGEX)
 
 
 # ---------------------------------------------------------------------------
 # Boilerplate strip
 # ---------------------------------------------------------------------------
 
-def _strip_one(raw: str) -> str:
-    kept = []
-    for line in raw.split("\n"):
-        n_tags = len(_TAG_COUNT.findall(line))
-        visible = _WS.sub(" ", _TAG.sub(" ", line)).strip()
-        if visible and len(visible) / (n_tags + 1.0) >= config.TEXT_DENSITY_THRESHOLD:
-            kept.append(visible)
-    return " ".join(kept)
-
-
-@F.pandas_udf(T.StringType())
-def strip_boilerplate_udf(texts: pd.Series) -> pd.Series:
-    # Fast path: spans without markup only need whitespace collapsing —
-    # fully vectorized. Markup spans go through the line-density scorer.
-    out = texts.str.replace(_WS, " ", regex=True).str.strip()
-    html_mask = texts.notna() & texts.str.contains("<", regex=False)
-    if html_mask.any():
-        out.loc[html_mask] = [_strip_one(t) for t in texts[html_mask]]
-    return out
-
-
 def strip_boilerplate_col(text: F.Column) -> F.Column:
     """JVM-native boilerplate strip — semantics identical to
-    strip_boilerplate_udf (pytest asserts equality), zero Python workers.
+    corpus/golden.py strip_boilerplate (pytest asserts equality), zero
+    Python workers.
 
     The per-line density scorer is a composition of higher-order array
     functions: split lines -> per-line (visible text, tag count) struct ->
@@ -149,15 +130,6 @@ def _layout_one(layout_json: str) -> str:
     return _WS.sub(" ", " ".join(b[4] for b in order)).strip()
 
 
-@F.pandas_udf(T.StringType())
-def layout_text_udf(layouts: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if lj is None else _layout_one(lj) for lj in layouts],
-        index=layouts.index,
-        dtype=object,
-    )
-
-
 # Typed-blocks layout path (round 4, Arrow-bandwidth cut): the JSON decode
 # moves JVM-side (whole-stage-codegen from_json pinned to EXACTLY the fields
 # the XY-cut reads — text + 4 coords; w/h and the JSON key/punctuation
@@ -165,10 +137,10 @@ def layout_text_udf(layouts: pd.Series) -> pd.Series:
 # typed structs instead of a JSON string per page. Measured on the bench
 # corpus: ~31% fewer bytes/doc shipped to Python on the extraction map
 # stage, and the per-row json.loads (the layout UDF's largest CPU item)
-# disappears. Semantics are identical to layout_text_udf over the same
-# payload (pytest-asserted): Jackson and Python's json parse decimal
-# doubles identically (both correctly rounded), block order is preserved,
-# a missing "blocks" key yields '' and a NULL payload yields NULL.
+# disappears. Semantics are identical to corpus/golden.py layout_to_text
+# over the same payload (pytest-asserted): Jackson and Python's json parse
+# decimal doubles identically (both correctly rounded), block order is
+# preserved, a missing "blocks" key yields '' and a NULL payload yields NULL.
 LAYOUT_BLOCKS_TYPE = T.ArrayType(
     T.StructType(
         [
@@ -202,28 +174,6 @@ def layout_blocks_col(layout_json: F.Column) -> F.Column:
     )
 
 
-def _layout_blocks(blocks) -> str:
-    if len(blocks) == 0:
-        return ""
-    tb = [
-        (b["x0"], b["y0"], b["x1"], b["y1"], b["text"] or "") for b in blocks
-    ]
-    order = _xy_cut(tb)
-    return _WS.sub(" ", " ".join(b[4] for b in order)).strip()
-
-
-@F.pandas_udf(T.StringType())
-def layout_text_blocks_udf(blocks: pd.Series) -> pd.Series:
-    """XY-cut reading order over pre-parsed typed blocks (see
-    layout_blocks_col). Same output as layout_text_udf on the equivalent
-    JSON payload; the Arrow transfer carries only (text, x0, y0, x1, y1)."""
-    return pd.Series(
-        [None if b is None else _layout_blocks(b) for b in blocks],
-        index=blocks.index,
-        dtype=object,
-    )
-
-
 @F.pandas_udf(T.ArrayType(T.IntegerType()))
 def layout_order_udf(coords: pd.Series) -> pd.Series:
     """XY-cut as a PERMUTATION: coordinates in, reading-order indices out.
@@ -233,10 +183,10 @@ def layout_order_udf(coords: pd.Series) -> pd.Series:
     breaking ties by input position — so the text does not need to cross
     the Arrow boundary AT ALL: the JVM ships (x0,y0,x1,y1) per block
     (~36 B) and receives one int back, then reassembles the ordered text
-    itself (layout_text_pruned_col). Versus the raw-JSON UDF this removes
+    itself (apply_pruned_layout). Versus a raw-JSON layout UDF this removes
     both the JSON key/punctuation overhead AND the full text round-trip
     from the map stage's Python traffic. Output parity with
-    layout_text_udf is pytest-asserted over the corpus."""
+    corpus/golden.py layout_to_text is pytest-asserted over the corpus."""
     out = []
     for cs in coords:
         if cs is None:
@@ -272,7 +222,8 @@ def apply_pruned_layout(df, src: str = "layout_json", out: str = "text"):
     inlined.
 
     NULL payload -> NULL text; missing/empty blocks -> ''. Byte-identical
-    to layout_text_udf (pytest: test_layout_blocks_path_equals_json_udf)."""
+    to corpus/golden.py layout_to_text (pytest:
+    test_layout_blocks_path_equals_json_udf)."""
     df = df.withColumn("_blk", layout_blocks_col(F.col(src)))
     df = df.withColumn(
         "_btexts", F.transform("_blk", lambda b: b["text"])
@@ -343,7 +294,8 @@ def layout_entries_udf(entries: pd.Series) -> pd.Series:
     between a bucketed scan and its groupBy re-introduces the very exchange
     bucketing removed. Running the parse on the aggregated list keeps the
     whole plan exchange-free; per-row semantics are identical to
-    layout_text_udf applied to each entry (None payload -> None text).
+    corpus/golden.py layout_to_text applied to each entry (None payload ->
+    None text).
 
     Malformed-sidecar tolerance (the output feeds map_from_entries, which
     FAILS the whole job on duplicate or NULL map keys under Spark's default
@@ -591,142 +543,3 @@ def extract_fields_udf(texts: pd.Series) -> pd.DataFrame:
     rows = [_extract_one(t if t is not None else "") for t in texts]
     return pd.DataFrame(rows, index=texts.index)
 
-
-def extract_fields_col(text: F.Column) -> F.Column:
-    """JVM-native twin of extract_fields_udf — identical output struct
-    (pytest asserts equality against the pandas UDF and the golden oracle),
-    zero Python workers.
-
-    Every regex in the banks is Java-compatible; (?iu) reproduces Python's
-    unicode-aware re.IGNORECASE. Rounding: all 66 reachable confidence values
-    round identically under Python round / HALF_UP / HALF_EVEN (enumerated),
-    so F.round is exact parity. Weights are dyadic rationals, so the double
-    additions are exact and order-insensitive.
-    """
-    t = F.coalesce(text, F.lit(""))
-    ne = lambda c: F.nullif(c, F.lit(""))  # noqa: E731
-    collapse = lambda c: F.trim(F.regexp_replace(c, r"(?U)\s+", " "))  # noqa: E731
-
-    ruc = ne(F.regexp_extract(t, r"RUC:\s*([\d\-]+)", 1))
-    # (.+?) groups can match whitespace-only -> collapse to ''. The UDF
-    # stores '' then (matched-but-empty), so gate on whole-pattern presence
-    # (rlike) rather than group emptiness.
-    prest_pat = r"ORDEN MEDICA - (.+?)\s+RUC:"
-    prestador = F.when(t.rlike(prest_pat), collapse(F.regexp_extract(t, prest_pat, 1)))
-    pac_pat = r"Paciente:\s*(.+?)\s+CI[:\s]"
-    nombre = F.when(t.rlike(pac_pat), collapse(F.regexp_extract(t, pac_pat, 1)))
-    ci_raw = F.regexp_extract(t, r"CI:\s*([\d.\-]+)", 1)
-    # '' group means no match (the group needs >=1 char); a matched group of
-    # only [.-] strips to '' and is KEPT as '' (UDF parity: stored, but
-    # falsy for the confidence checklist)
-    ci = F.when(ci_raw != "", F.regexp_replace(ci_raw, r"[.\-]", ""))
-    fecha_pat = r"\b(\d{2})/(\d{2})/(\d{4})\b"
-    dd = F.regexp_extract(t, fecha_pat, 1)
-    fecha = F.when(
-        dd != "",
-        F.concat_ws(
-            "-",
-            F.regexp_extract(t, fecha_pat, 3),
-            F.regexp_extract(t, fecha_pat, 2),
-            dd,
-        ),
-    )
-    diag_pat = r"Diagn[óo]stico:\s*(.+?)\s*\(([A-Z]\d{2}(?:\.\d)?)\)"
-    cie_raw = F.regexp_extract(t, diag_pat, 2)
-    diag = F.when(cie_raw != "", collapse(F.regexp_extract(t, diag_pat, 1)))
-    cie = ne(cie_raw)
-
-    matricula = F.coalesce(
-        *[ne(F.regexp_extract(t, "(?iu)" + p, 1)) for p in config.MATRICULA_PATTERNS]
-    )
-    mat_ok = F.coalesce(
-        F.length(matricula).between(
-            config.MATRICULA_MIN_LEN, config.MATRICULA_MAX_LEN
-        ),
-        F.lit(False),
-    )
-    urgente = t.rlike(
-        r"(?iu)\b(" + "|".join(config.URGENCY_KEYWORDS) + r")\b"
-    )
-
-    # LISTA practices: "PRACTICAS: a x2; b; c." segment -> items
-    seg = F.regexp_extract(t, r"PRACTICAS:\s*(.+?)\.(?:\s|$)", 1)
-    item_pat = r"^(.*?)(?:\s+x(\d+))?$"
-    parsed = F.transform(
-        F.split(seg, ";"),
-        lambda raw: F.struct(
-            collapse(F.regexp_extract(collapse(raw), item_pat, 1)).alias("desc"),
-            F.regexp_extract(collapse(raw), item_pat, 2).alias("qty"),
-        ),
-    )
-    lista = F.transform(
-        F.filter(parsed, lambda s: s["desc"] != ""),
-        lambda s, i: F.struct(
-            (i + 1).cast("int").alias("item"),
-            s["desc"].alias("descripcion"),
-            F.when(s["qty"] != "", s["qty"].cast("int"))
-            .otherwise(F.lit(config.DEFAULT_CANTIDAD))
-            .alias("cantidad"),
-            F.lit(float(config.DEFAULT_PRACTICE_CONFIDENCE)).alias("confianza"),
-        ),
-    )
-    narr_hits = F.filter(
-        F.array(
-            *[
-                F.when(t.rlike("(?iu)" + pat), F.lit(name))
-                for pat, name in config.NARRATIVE_PRACTICE_PATTERNS
-            ]
-        ),
-        lambda x: x.isNotNull(),
-    )
-    narrativa = F.transform(
-        narr_hits,
-        lambda x, i: F.struct(
-            (i + 1).cast("int").alias("item"),
-            x.alias("descripcion"),
-            F.lit(config.DEFAULT_CANTIDAD).cast("int").alias("cantidad"),
-            F.lit(float(config.NARRATIVE_PRACTICE_CONFIDENCE)).alias("confianza"),
-        ),
-    )
-    practicas = F.when(F.size(lista) > 0, lista).otherwise(narrativa)
-    fuente = (
-        F.when(F.size(lista) > 0, "LISTA")
-        .when(F.size(narrativa) > 0, "NARRATIVA")
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-    w = config.CONFIDENCE_WEIGHTS
-    got = (
-        F.when(nombre.isNotNull() & (nombre != ""), w["paciente_nombre"]).otherwise(0.0)
-        + F.when(ci.isNotNull() & (ci != ""), w["paciente_ci"]).otherwise(0.0)
-        + F.when(mat_ok, w["medico_matricula"]).otherwise(0.0)
-        + F.when(fecha.isNotNull() & (fecha != ""), w["fecha_orden"]).otherwise(0.0)
-        + F.when(diag.isNotNull() & (diag != ""), w["diagnostico"]).otherwise(0.0)
-        + F.when(urgente, w["urgencia_detectada"]).otherwise(0.0)
-        + F.when(F.size(practicas) > 0, w["practicas"]).otherwise(0.0)
-    )
-    w_total = float(sum(w.values()))
-    mean_pc = F.when(
-        F.size(practicas) > 0,
-        F.aggregate(
-            practicas, F.lit(0.0), lambda acc, p: acc + p["confianza"]
-        )
-        / F.size(practicas),
-    ).otherwise(0.0)
-    conf = F.round(F.least(F.lit(1.0), 0.7 * (got / w_total) + 0.3 * mean_pc), 2)
-
-    return F.struct(
-        ruc.alias("ruc"),
-        prestador.alias("prestador_nombre"),
-        nombre.alias("paciente_nombre"),
-        ci.alias("paciente_ci"),
-        fecha.alias("fecha_orden"),
-        diag.alias("diagnostico_texto"),
-        cie.alias("diagnostico_codigo_cie"),
-        matricula.alias("medico_matricula"),
-        mat_ok.alias("matricula_valida"),
-        urgente.alias("urgente"),
-        practicas.alias("practicas"),
-        fuente.alias("practicas_fuente"),
-        conf.alias("confianza_extraccion"),
-    )

@@ -514,11 +514,16 @@ def mixture_sample(
     Determinism + scale shape: the per-group counts are ONE aggregate
     collected to the driver — len(weights) rows, bounded by construction
     (the mixing dict is driver-provided). The rates become integer
-    thresholds thr_s = floor(rate * 2^32) against the SAME md5 gate every
-    sampler in this module uses, broadcast as a literal CASE — the fact
-    table never shuffles, membership is a pure function of the key
+    thresholds thr_s = floor(rate * 2^32) against an md5 gate on
+    'mixture:' || key, broadcast as a literal CASE — the fact table never
+    shuffles, membership is a pure function of the key
     (resume/rerun-stable), and a pytest reference recomputes the exact
     kept set with hashlib.
+
+    The 'mixture:' salt decorrelates the gate from hash_split's uniform,
+    which hashes the bare key: unsalted, a group kept at rate r holds only
+    keys with u < r, so a later hash_split (test = u >= 0.9) would give
+    any group sampled at r <= 0.9 no test rows at all.
     """
     if temperature < 0:
         raise ValueError(f"temperature must be >= 0, got {temperature}")
@@ -549,7 +554,6 @@ def mixture_sample(
         cond = F.col(group_col) == g
         thr = F.when(cond, t) if thr is None else thr.when(cond, t)
     thr = thr.otherwise(F.lit(-1))  # groups outside the mix never pass
-    gate = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    salted = F.concat(F.lit("mixture:"), F.col(key_col).cast("string"))
+    gate = F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("long")
     return df.filter(gate < thr)

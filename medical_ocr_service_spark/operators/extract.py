@@ -13,12 +13,10 @@ for media spans.
 Scale design (10^12 docs / 100 TB):
   * explode(spans) is narrow — no shuffle;
   * text spans never touch media resolution: the plan splits by kind and only
-    the media subset resolves payloads, via one of three strategies
-    (clean_spans media_strategy): media_ref join with both tables bucketed by
-    media_ref (shuffle-free at scale), broadcast hash join for
-    fits-in-memory media, or the denormalized union (media sidecar carries
-    (doc_id, offset) owner keys -> zero joins, groupBy(doc_id) is the plan's
-    only exchange);
+    the media subset resolves payloads, with one left join on media_ref.
+    Spark (AQE included) turns it into a broadcast hash join when the media
+    side is small; at scale both tables are bucketed by media_ref so the
+    join is shuffle-free;
   * span ordering uses a window over (doc_id, offset). Spans-per-doc is
     bounded (10^3 pathological), so per-key state is tiny; AQE skew-join
     handles stragglers. Reassembly to arrays uses
@@ -56,32 +54,13 @@ def exploded_spans(docs: DataFrame) -> DataFrame:
 
 
 def clean_spans(
-    docs: DataFrame,
-    media: DataFrame,
-    media_strategy: str = "join",
-    with_errors: bool = False,
+    docs: DataFrame, media: DataFrame, with_errors: bool = False
 ) -> DataFrame:
     """Per-span cleaned text: boilerplate-strip for text, XY-cut for media.
 
-    Returns (doc_id, kind, text, media_ref, offset) with text cleaned.
-
-    ``media_strategy`` picks how media_ref payloads are resolved:
-
-    * ``"join"`` (default, always correct): sort-merge/shuffle join of the
-      media spans against the media table on media_ref. At 10^12-doc scale
-      both tables are bucketed by media_ref so this is co-located and
-      shuffle-free.
-    * ``"broadcast"``: broadcast hash join — zero exchanges on the span side,
-      but pays a serial driver-side hash-relation build per action. Right
-      when the media table fits executor memory and the job is long.
-    * ``"denormalized"``: NO join at all. Requires the media sidecar to carry
-      the owner keys ``(doc_id, offset)`` (written at ingest — see
-      corpus.generator) and to contain EXACTLY the media spans of ``docs``
-      (full-corpus runs; do not use under a pending-docs filter such as
-      checkpoint resume unless the media side is filtered identically).
-      Media rows are layout-parsed straight off their scan and unioned into
-      the span stream; the groupBy(doc_id) exchange is the plan's ONLY
-      shuffle and there is no broadcast build.
+    Returns (doc_id, kind, text, media_ref, offset) with text cleaned. Media
+    spans resolve their layout payload with a left join on media_ref (1:1;
+    media_ref is unique on both sides); an unresolved ref yields NULL text.
 
     ``with_errors=True`` adds an ``_err`` column (Q3 quarantine): a media
     span whose layout payload fails to parse carries the error string
@@ -95,9 +74,8 @@ def clean_spans(
     spans = exploded_spans(docs)
 
     # JVM-native density strip (strip_boilerplate_col): the text-span branch
-    # carries NO Python stage at all — whole-stage codegen end to end. The
-    # Arrow-UDF twin (strip_boilerplate_udf) is kept as the reference
-    # implementation; pytest asserts their equality.
+    # carries NO Python stage at all — whole-stage codegen end to end.
+    # pytest asserts equality with the corpus/golden.py oracle.
     text_part = spans.filter(F.col("kind") == "text").withColumn(
         "text", strip_boilerplate_col(F.col("text"))
     )
@@ -105,30 +83,11 @@ def clean_spans(
         text_part = text_part.withColumn("_err", F.lit(None).cast("string"))
     cols = SPAN_COLS + (["_err"] if with_errors else [])
 
-    if media_strategy == "denormalized":
-        missing = {"doc_id", "offset"} - set(media.columns)
-        if missing:
-            raise ValueError(
-                f"media_strategy='denormalized' needs owner keys in the media "
-                f"table; missing columns: {sorted(missing)}"
-            )
-        media_part = media.select(
-            "doc_id",
-            F.lit("media").alias("kind"),
-            "layout_json",
-            "media_ref",
-            F.col("offset").cast("int").alias("offset"),
-        )
-    else:
-        media_dim = media.select("media_ref", "layout_json")
-        if media_strategy == "broadcast":
-            media_dim = F.broadcast(media_dim)
-        media_part = (
-            spans.filter(F.col("kind") == "media")
-            .drop("text")
-            # 1:1 join; media_ref is unique on both sides.
-            .join(media_dim, "media_ref", "left")
-        )
+    media_part = (
+        spans.filter(F.col("kind") == "media")
+        .drop("text")
+        .join(media.select("media_ref", "layout_json"), "media_ref", "left")
+    )
     if with_errors:
         # quarantine path (Q3): per-row error capture needs the raw payload
         # in Python, so it keeps the JSON Arrow UDF
@@ -145,7 +104,7 @@ def clean_spans(
         # Python in either direction, cutting the map stage's Python
         # traffic ~4x sent / ~12x returned (measured, BENCH/BASELINE.md
         # round 4) and removing the per-row json.loads worker-side. Byte
-        # parity with the JSON UDF is pytest-asserted.
+        # parity with the golden XY-cut is pytest-asserted.
         media_part = apply_pruned_layout(media_part, src="layout_json").drop(
             "layout_json"
         )
@@ -158,9 +117,7 @@ def clean_spans(
     return media_part.select(*cols).unionByName(text_part.select(*cols))
 
 
-def ordered_spans(
-    docs: DataFrame, media: DataFrame, media_strategy: str = "join"
-) -> DataFrame:
+def ordered_spans(docs: DataFrame, media: DataFrame) -> DataFrame:
     """The span-sequence table: (doc_id, kind, text, media_ref, order).
 
     order = 1-based rank of offset within the document. Offsets are unique
@@ -170,23 +127,20 @@ def ordered_spans(
     """
     w = Window.partitionBy("doc_id").orderBy("offset")
     return (
-        clean_spans(docs, media, media_strategy)
+        clean_spans(docs, media)
         .withColumn("order", F.row_number().over(w).cast("int"))
         .drop("offset")
     )
 
 
-def reassembled_docs(
-    docs: DataFrame, media: DataFrame, media_strategy: str = "join"
-) -> DataFrame:
+def reassembled_docs(docs: DataFrame, media: DataFrame) -> DataFrame:
     """One row per doc: ordered span array + full_text.
 
     spans: array<struct<kind,text,media_ref,order>> sorted by order via
     sort_array on a struct with `order` leading — explicitly NOT relying on
     collect_list/shuffle order (SURVEY.md §7 hard parts).
     """
-    cleaned = clean_spans(docs, media, media_strategy)
-    return _reassemble_cleaned(cleaned)
+    return _reassemble_cleaned(clean_spans(docs, media))
 
 
 def _finish_reassembly(agg: DataFrame) -> DataFrame:
@@ -252,9 +206,9 @@ def reassembled_docs_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
          span array never leaves its row.
 
     Requires the media sidecar to carry the owner key doc_id (written at
-    ingest — corpus.generator). Unlike media_strategy='denormalized' this IS
-    resume-safe: media rows join on doc_id, so media of already-done
-    (filtered-out) docs simply drops out instead of resurrecting spans.
+    ingest — corpus.generator). It is resume-safe: media rows join on
+    doc_id, so media of already-done (filtered-out) docs simply drops out
+    instead of resurrecting spans.
 
     Output and semantics are identical to reassembled_docs (golden-equality
     tested); `order` remains the 1-based offset rank via sort_array.
@@ -264,7 +218,7 @@ def reassembled_docs_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
     if "doc_id" not in media.columns:
         raise ValueError(
             "reassembled_docs_colocated needs the owner key doc_id in the "
-            "media table (see corpus.generator denormalized sidecar)"
+            "media table (see corpus.generator)"
         )
     # Output parity with the default plan: explode() eliminates empty and
     # NULL span arrays, so the groupBy path emits NO row for a span-less
@@ -299,10 +253,7 @@ def reassembled_docs_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
 
 
 def extract_documents(
-    docs: DataFrame,
-    media: DataFrame,
-    media_strategy: str = "join",
-    salted: bool = False,
+    docs: DataFrame, media: DataFrame, salted: bool = False
 ) -> DataFrame:
     """Full extraction: reassembled spans + structured fields + confidence.
 
@@ -311,21 +262,18 @@ def extract_documents(
     reference pre-visacion.service.js:55).
 
     ``salted=True`` swaps in the two-phase salted reassembly
-    (reassembled_docs_salted) for corpora with pathological many-span docs;
-    ``media_strategy`` as in clean_spans.
+    (reassembled_docs_salted) for corpora with pathological many-span docs.
     """
     if salted:
-        assembled = reassembled_docs_salted(
-            docs, media, media_strategy=media_strategy
-        )
+        assembled = reassembled_docs_salted(docs, media)
     else:
-        assembled = reassembled_docs(docs, media, media_strategy)
-    # Field extraction stays an Arrow pandas UDF *by measurement*: the
-    # JVM-expression twin (extract_fields_col, kept + parity-tested) built
-    # an expression tree large enough to fall out of whole-stage codegen and
-    # re-ran each regex per reference — 2x slower end-to-end at 4 cores
-    # (90s vs 44s / 300k docs). Compiled re + one pass per doc in an Arrow
-    # batch wins for this many-regex-per-row shape.
+        assembled = reassembled_docs(docs, media)
+    # Field extraction stays an Arrow pandas UDF *by measurement*: a
+    # JVM-expression version built an expression tree large enough to fall
+    # out of whole-stage codegen and re-ran each regex per reference — 2x
+    # slower end-to-end at 4 cores (90s vs 44s / 300k docs). Compiled re +
+    # one pass per doc in an Arrow batch wins for this many-regex-per-row
+    # shape.
     return _with_fields(assembled)
 
 
@@ -349,18 +297,14 @@ def _with_fields(assembled: DataFrame) -> DataFrame:
     )
 
 
-def reassembled_docs_with_errors(
-    docs: DataFrame,
-    media: DataFrame,
-    media_strategy: str = "join",
-) -> DataFrame:
+def reassembled_docs_with_errors(docs: DataFrame, media: DataFrame) -> DataFrame:
     """Quarantine-path reassembly: (doc_id, _sorted, _errors), one row per
     doc from ONE groupBy over clean_spans(with_errors=True).
 
     `_sorted` is the offset-sorted span list (as in _reassemble_cleaned);
     `_errors` is array<struct<media_ref, error>> of the doc's failed spans.
     collect_list drops NULLs, so a clean doc gets an empty array."""
-    cleaned = clean_spans(docs, media, media_strategy, with_errors=True)
+    cleaned = clean_spans(docs, media, with_errors=True)
     return cleaned.groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
@@ -391,9 +335,7 @@ def quarantine_rows(quarantined: DataFrame) -> DataFrame:
 
 
 def extract_documents_quarantine(
-    docs: DataFrame,
-    media: DataFrame,
-    media_strategy: str = "join",
+    docs: DataFrame, media: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Q3 (job-queue.service.js:193-238): extraction with per-row failure
     isolation. Returns (results, quarantine):
@@ -414,14 +356,13 @@ def extract_documents_quarantine(
     quarantine_rows, as CheckpointedExtraction.run does.
     """
     results, quarantined = split_quarantine(
-        reassembled_docs_with_errors(docs, media, media_strategy)
+        reassembled_docs_with_errors(docs, media)
     )
     return results, quarantine_rows(quarantined)
 
 
 def reassembled_docs_salted(
-    docs: DataFrame, media: DataFrame, n_salts: int = 16,
-    media_strategy: str = "join",
+    docs: DataFrame, media: DataFrame, n_salts: int = 16
 ) -> DataFrame:
     """Skew-mitigated two-phase reassembly for pathological many-span docs
     (north_rule salted-key mitigation; SURVEY §7 hard parts).
@@ -434,7 +375,7 @@ def reassembled_docs_salted(
     Ordering is preserved because BOTH phases sort on offset (structs with
     offset leading), never on arrival order. Output schema == reassembled_docs.
     """
-    cleaned = clean_spans(docs, media, media_strategy)
+    cleaned = clean_spans(docs, media)
 
     phase1 = (
         cleaned.withColumn("_salt", F.pmod(F.hash("offset"), F.lit(n_salts)))

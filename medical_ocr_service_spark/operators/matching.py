@@ -269,25 +269,23 @@ def latest_agreements(acuerdos: DataFrame) -> DataFrame:
     )
 
 
-def agreement_map(acuerdos: DataFrame, cap: int | None = None) -> dict | None:
+def agreement_map(acuerdos: DataFrame) -> dict | None:
     """Latest agreements as a closure dict from ONE driver collect:
     (id_nomenclador, prest_id_prestador, plan_id_plan) -> (id_acuerdo, precio).
 
-    With ``cap``, returns None when there are more than ``cap`` latest
-    agreements (the caller then takes the broadcast-join matcher, which
-    scales to any size); without it, _guarded_collect's hard cap applies.
+    Returns None when there are more than config.FAST_MATCH_MAX_AGREEMENTS
+    latest agreements (the caller then takes the broadcast-join matcher,
+    which scales to any size).
     SQL-join NULL semantics: a NULL key component never matches, but a
     Python dict happily equates None keys — rows with a NULL key are dropped
     so dict lookups mirror the join-based path exactly."""
     latest = latest_agreements(acuerdos).select(
         "id_nomenclador", "prest_id_prestador", "plan_id_plan", "id_acuerdo", "precio"
     )
-    if cap is None:
-        rows = _guarded_collect(latest, "latest agreements")
-    else:
-        rows = latest.limit(cap + 1).collect()
-        if len(rows) > cap:
-            return None
+    cap = config.FAST_MATCH_MAX_AGREEMENTS
+    rows = latest.limit(cap + 1).collect()
+    if len(rows) > cap:
+        return None
     return {
         (r["id_nomenclador"], r["prest_id_prestador"], r["plan_id_plan"]): (
             r["id_acuerdo"],

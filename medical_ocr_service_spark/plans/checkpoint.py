@@ -134,7 +134,6 @@ class CheckpointedExtraction:
         docs: DataFrame,
         media: DataFrame,
         fail_on: str | None = None,
-        media_strategy: str = "join",
         salted: bool = False,
         quarantine: bool = False,
         max_intentos: int = 3,
@@ -142,10 +141,7 @@ class CheckpointedExtraction:
     ) -> dict:
         """Process pending docs, append results, write lineage. Returns the
         lineage record. `fail_on` (doc_id) injects a mid-run failure for
-        crash-recovery tests. ``media_strategy`` as in extract.clean_spans;
-        "denormalized" is refused on a RESUME — the pending filter applies
-        to docs only, so unfiltered media rows would resurrect spans of
-        already-done documents.
+        crash-recovery tests.
 
         ``quarantine=True`` (Q3): per-row failure isolation — documents with
         an unparsable span are withheld from results and appended to the
@@ -176,15 +172,6 @@ class CheckpointedExtraction:
         base_sid = (
             self._results_tab.current_snapshot_id() if self.snapshots else None
         )
-        if (
-            media_strategy == "denormalized"
-            and self.done_doc_ids(spark, base_sid) is not None
-        ):
-            raise ValueError(
-                "media_strategy='denormalized' is unsafe when resuming from an "
-                "existing snapshot (media rows of already-done docs would "
-                "reappear); use 'join' or 'broadcast'"
-            )
         if colocated and (salted or quarantine):
             raise ValueError(
                 "colocated=True is the shuffle-free alternative plan; "
@@ -211,14 +198,12 @@ class CheckpointedExtraction:
                 )
             # both commits read this frame: persisting it keeps the layout
             # parse to one evaluation per span
-            per_doc = extract.reassembled_docs_with_errors(
-                pending, media, media_strategy=media_strategy
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            per_doc = extract.reassembled_docs_with_errors(pending, media).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
             result, quarantined = extract.split_quarantine(per_doc)
         else:
-            result = extract.extract_documents(
-                pending, media, media_strategy=media_strategy, salted=salted
-            )
+            result = extract.extract_documents(pending, media, salted=salted)
         try:
             return self._commit(result, quarantined, run_id, run_ts, base_sid, fail_on)
         finally:

@@ -2152,7 +2152,7 @@ def colocated_extraction_equality(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     docs_df = docs_df.unionByName(degenerate)
     # media sidecar WITH owner keys (doc_id, offset) — the colocated plan
-    # joins on doc_id (corpus.generator denormalized sidecar shape)
+    # joins on doc_id (corpus.generator sidecar shape)
     _, media = generator.synthesize_corpus(300)
     media_df = spark.createDataFrame(
         [

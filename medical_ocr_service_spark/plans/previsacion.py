@@ -38,26 +38,24 @@ def run_previsacion(
     prestadores: DataFrame,
     nomencladores: DataFrame,
     acuerdos: DataFrame,
-    media_strategy: str = "join",
-    practice_matcher: str = "auto",
     tenant_id: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (visacion_previa, det_visacion_previa).
 
-    ``media_strategy`` as in extract.clean_spans.
+    Practice matching picks its path from ONE collect of at most
+    config.FAST_MATCH_MAX_AGREEMENTS + 1 latest agreements — the same
+    collect feeds the matcher:
 
-    ``practice_matcher``: 'fast' matches each document once
-    (matching.match_documents): the provider cascade and every practice's
-    pick-best run in one Arrow map node whose dimensions ship in its
-    closure, one guarded driver collect each. That frame is persisted; the
-    header takes n_practicas and the mean practice similarity from the match
-    array (no groupBy, no join) and the detail explodes the cached array
-    (the matcher never runs twice). 'join' is the broadcast-join practice
-    matcher (matching.match_practices) that scales to any agreements size,
-    with per-doc stats from a groupBy joined back to the header. 'auto'
-    (default) collects at most config.FAST_MATCH_MAX_AGREEMENTS + 1 latest
-    agreements and takes 'fast' when they fit, else 'join' — the one
-    collect both decides and feeds the matcher.
+    * when they fit, each document is matched once
+      (matching.match_documents): the provider cascade and every
+      practice's pick-best run in one Arrow map node whose dimensions ship
+      in its closure, one guarded driver collect each. That frame is
+      persisted; the header takes n_practicas and the mean practice
+      similarity from the match array (no groupBy, no join) and the detail
+      explodes the cached array (the matcher never runs twice);
+    * otherwise the broadcast-join practice matcher
+      (matching.match_practices) serves agreement tables of any size, with
+      per-doc stats from a groupBy joined back to the header.
 
     ``tenant_id`` (P1, reference matching.service.js:25-29 / migration_
     multitenant.sql): when given, the whole run is scoped to ONE tenant —
@@ -65,30 +63,18 @@ def run_previsacion(
     reference appending ``AND tenant_id = $n`` to each query. A tenant-a
     document can never match a tenant-b provider/nomenclador/agreement.
     Partition-prunable at scale when tables are partitioned by tenant."""
-    if practice_matcher not in ("auto", "fast", "join"):
-        raise ValueError(f"practice_matcher: unknown value {practice_matcher!r}")
     if tenant_id is not None:
-        if media_strategy == "denormalized":
-            # the media sidecar is not tenant-filtered; unioned media rows
-            # would resurrect other tenants' spans
-            raise ValueError(
-                "tenant_id scoping requires media_strategy 'join' or "
-                "'broadcast' (the denormalized sidecar is not tenant-scoped)"
-            )
         docs = docs.filter(F.col("tenant_id") == tenant_id)
         prestadores = prestadores.filter(F.col("tenant_id") == tenant_id)
         nomencladores = nomencladores.filter(F.col("tenant_id") == tenant_id)
         acuerdos = acuerdos.filter(F.col("tenant_id") == tenant_id)
 
-    extracted = extract.extract_documents(docs, media, media_strategy=media_strategy)
+    extracted = extract.extract_documents(docs, media)
     doc_fields = extracted.select(
         "doc_id", *[F.col(f"fields.{c}").alias(c) for c in DOC_FIELDS], plan_id_col()
     )
 
-    agreements = None
-    if practice_matcher != "join":
-        cap = config.FAST_MATCH_MAX_AGREEMENTS if practice_matcher == "auto" else None
-        agreements = matching.agreement_map(acuerdos, cap)
+    agreements = matching.agreement_map(acuerdos)
 
     # Both outputs (header AND detail) hang off the persisted match frame;
     # without persistence the full extraction + matching lineage recomputes

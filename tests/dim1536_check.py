@@ -10,8 +10,8 @@ golden, proving the matcher and ANN machinery hold at production width.
 
 Must be launched with SPARK_GRAFT_EMBEDDING_DIM=1536 in the environment
 (config reads the width at import time); the pytest wrapper
-(tests/test_matching.py::test_previsacion_production_dim_1536) and the bench
-dim-1536 row both do so in a subprocess.
+(tests/test_matching.py::test_previsacion_production_dim_1536) runs it that
+way in a subprocess.
 
 Prints ONE JSON line:
   {"dim": 1536, "docs": N, "header_rows": ..., "detail_rows": ...,

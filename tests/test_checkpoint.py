@@ -118,21 +118,6 @@ def test_stream_stateful_dedup(spark, loaded, tmp_path):
     assert got2.select("content_hash").distinct().count() == 40
 
 
-def test_denormalized_refused_on_resume(spark, loaded, tmp_path):
-    """media_strategy='denormalized' must be refused once a snapshot exists
-    (unfiltered media rows would resurrect spans of already-done docs)."""
-    import pytest as _pytest
-
-    from medical_ocr_service_spark.plans.checkpoint import CheckpointedExtraction
-
-    docs, media = loaded
-    ck = CheckpointedExtraction(str(tmp_path / "out"))
-    # first run (full corpus): no snapshot yet -> denormalized allowed
-    ck.run(docs, media, media_strategy="denormalized")
-    with _pytest.raises(ValueError, match="denormalized"):
-        ck.run(docs, media, media_strategy="denormalized")
-
-
 def test_quarantine_retry_and_permanent_failure(spark, loaded, tmp_path):
     """Q3 (job-queue.service.js:193-238): an unparsable span quarantines its
     document (task does NOT fail), resume retries it, and after max_intentos

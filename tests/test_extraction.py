@@ -161,26 +161,6 @@ def test_extract_documents_salted_flag_equal(spark, loaded):
     assert salted.exceptAll(plain).count() == 0
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "denormalized"])
-def test_media_strategies_equal_join(spark, loaded, strategy):
-    """Every media_ref resolution strategy yields the identical span
-    sequence (the denormalized path needs the v3 sidecar's owner keys)."""
-    docs, media, _, _ = loaded
-    cols = ["doc_id", "spans", "full_text"]
-    join_mode = extract.reassembled_docs(docs, media, "join").select(cols)
-    other = extract.reassembled_docs(docs, media, strategy).select(cols)
-    assert join_mode.exceptAll(other).count() == 0
-    assert other.exceptAll(join_mode).count() == 0
-
-
-def test_denormalized_requires_owner_keys(spark, loaded):
-    docs, media, _, _ = loaded
-    with pytest.raises(ValueError, match="owner keys"):
-        extract.clean_spans(
-            docs, media.drop("doc_id", "offset"), "denormalized"
-        )
-
-
 def test_colocated_reassembly_equals_plain(spark, loaded):
     """The zero-exchange co-located plan (array-native, single-branch) is
     bit-identical to the shuffle reassembly on unbucketed inputs too."""
@@ -286,14 +266,12 @@ def test_colocated_tolerates_duplicate_and_null_media_ref(spark, loaded):
 
 
 def test_layout_blocks_path_equals_json_udf(spark, loaded):
-    """The typed-blocks layout path (JVM from_json + layout_text_blocks_udf,
-    the Arrow-bandwidth cut) is byte-identical to the raw-JSON reference UDF
-    over the whole corpus sidecar, plus NULL and blockless payloads."""
+    """The production layout path (JVM from_json + the coordinate-only
+    permutation UDF) is byte-identical to the golden XY-cut over the raw
+    JSON, for the whole corpus sidecar plus NULL and blockless payloads."""
+    from medical_ocr_service_spark.corpus import golden
     from medical_ocr_service_spark.functions.extraction_udfs import (
         apply_pruned_layout,
-        layout_blocks_col,
-        layout_text_blocks_udf,
-        layout_text_udf,
     )
 
     _, media, _, _ = loaded
@@ -303,32 +281,26 @@ def test_layout_blocks_path_equals_json_udf(spark, loaded):
         "media_ref string, layout_json string",
     )
     base = media.select("media_ref", "layout_json").unionByName(extra)
-    df = apply_pruned_layout(base, out="pruned").select(
-        "media_ref",
-        layout_text_udf(F.col("layout_json")).alias("ref"),
-        layout_text_blocks_udf(layout_blocks_col(F.col("layout_json"))).alias("got"),
-        "pruned",
-    )
-    bad = df.filter(
-        ~F.col("ref").eqNullSafe(F.col("got"))
-        | ~F.col("ref").eqNullSafe(F.col("pruned"))
-    )
-    assert bad.count() == 0, bad.limit(5).collect()
-    byref = {r.media_ref: r for r in df.filter(F.col("media_ref").startswith("x")).collect()}
-    for col in ("got", "pruned"):
-        assert getattr(byref["xnull"], col) is None
-        assert getattr(byref["xnoblocks"], col) == ""
-        assert getattr(byref["xempty"], col) == ""
+    rows = apply_pruned_layout(base, out="pruned").collect()
+    bad = [
+        r.media_ref for r in rows
+        if r.pruned != golden.layout_to_text(r.layout_json)
+    ]
+    assert not bad, bad[:5]
+    byref = {r.media_ref: r.pruned for r in rows if r.media_ref.startswith("x")}
+    assert byref["xnull"] is None
+    assert byref["xnoblocks"] == ""
+    assert byref["xempty"] == ""
 
 
 def test_strip_boilerplate_col_equals_udf(spark):
     """The JVM higher-order-function strip (strip_boilerplate_col) must agree
-    byte-for-byte with the Arrow-UDF reference implementation — including
+    byte-for-byte with the golden oracle (corpus/golden.py) — including
     nulls, empty lines, adjacent tags, short low-density lines, and
     unicode whitespace."""
+    from medical_ocr_service_spark.corpus import golden
     from medical_ocr_service_spark.functions.extraction_udfs import (
         strip_boilerplate_col,
-        strip_boilerplate_udf,
     )
 
     cases = [
@@ -350,26 +322,18 @@ def test_strip_boilerplate_col_equals_udf(spark):
         "< not-a-tag because space\nbut this line is long enough to keep around",
     ]
     df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "i int, t string")
-    out = (
-        df.select(
-            "i",
-            strip_boilerplate_udf(F.col("t")).alias("udf"),
-            strip_boilerplate_col(F.col("t")).alias("col"),
-        )
-        .toPandas()
-        .set_index("i")
-    )
-    for i in out.index:
-        assert out.loc[i, "udf"] == out.loc[i, "col"] or (
-            out.loc[i, "udf"] is None and out.loc[i, "col"] is None
-        ), (i, cases[i], out.loc[i, "udf"], out.loc[i, "col"])
+    out = df.select("i", strip_boilerplate_col(F.col("t")).alias("col")).collect()
+    assert len(out) == len(cases)
+    for r in out:
+        ref = golden.strip_boilerplate(cases[r.i])
+        assert r.col == ref, (r.i, cases[r.i], ref, r.col)
 
 
 def test_text_span_branch_has_no_python_stage(spark, loaded):
     """Plan gate: the cleaned-span plan must not run ArrowEvalPython over the
     text-span branch (only the media layout parse and field extraction may)."""
     docs, media, _, _ = loaded
-    cleaned = extract.clean_spans(docs, media, media_strategy="join")
+    cleaned = extract.clean_spans(docs, media)
     text_only = cleaned.filter(F.col("kind") == "text")
     import contextlib
     import io
@@ -393,11 +357,12 @@ def test_text_span_branch_has_no_python_stage(spark, loaded):
     assert "ArrowEvalPython" not in buf2.getvalue()
 
 
-def test_extract_fields_col_equals_udf(spark, loaded):
-    """JVM field extraction == Arrow-UDF reference, over real corpus
-    full_texts plus adversarial edge strings."""
+def test_extract_fields_udf_equals_golden(spark, loaded):
+    """Arrow-UDF field extraction == the golden extractor plus confidence
+    fold (corpus/golden.py), over real corpus full_texts plus adversarial
+    edge strings (a NULL text extracts as '')."""
+    from medical_ocr_service_spark.corpus import golden
     from medical_ocr_service_spark.functions.extraction_udfs import (
-        extract_fields_col,
         extract_fields_udf,
     )
 
@@ -422,26 +387,17 @@ def test_extract_fields_col_equals_udf(spark, loaded):
         ],
         "doc_id string, full_text string",
     )
-    both = texts.unionByName(edge)
-    out = both.select(
-        "doc_id",
-        extract_fields_udf(F.col("full_text")).alias("u"),
-        extract_fields_col(F.col("full_text")).alias("c"),
-    ).toPandas()
-    def _plain(v):
-        if hasattr(v, "asDict"):
-            v = v.asDict()
-        if isinstance(v, dict):
-            return {k: _plain(x) for k, x in v.items()}
-        import numpy as np
-
-        if isinstance(v, (list, tuple, np.ndarray)):
-            return [_plain(x) for x in v]
-        return v
-
-    for _, r in out.iterrows():
-        u, c = _plain(r["u"]), _plain(r["c"])
-        assert u == c, (r["doc_id"], u, c)
+    rows = (
+        texts.unionByName(edge)
+        .select("doc_id", "full_text", extract_fields_udf(F.col("full_text")).alias("u"))
+        .collect()
+    )
+    assert len(rows) == 160
+    for r in rows:
+        ref = golden.extract_fields(r.full_text or "")
+        ref["confianza_extraccion"] = golden.confidence_fold(ref)
+        got = r.u.asDict(recursive=True)
+        assert got == ref, (r.doc_id, got, ref)
 
 
 def test_prescan_literals_sound_and_complete():

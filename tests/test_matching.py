@@ -281,8 +281,8 @@ def test_provider_shared_keys_resolve_to_lowest_id(spark):
 
 
 def test_auto_matcher_falls_back_to_join_path(spark, corpus_dir, monkeypatch):
-    """practice_matcher='auto' must route to the join path when the
-    agreements dim exceeds the configured document-matcher ceiling."""
+    """run_previsacion must route to the join path when the agreements
+    dim exceeds the configured document-matcher ceiling."""
     from medical_ocr_service_spark import config
     from medical_ocr_service_spark.corpus import generator
     from medical_ocr_service_spark.operators import matching
@@ -380,15 +380,6 @@ def test_tenant_isolation(spark, corpus_dir):
     dp = detail_a.toPandas()
     sugg = {int(x) for x in dp["nomenclador_id_sugerido"].dropna()}
     assert sugg <= a_nom
-
-    # denormalized media cannot be tenant-scoped -> explicit refusal
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="tenant"):
-        previsacion.run_previsacion(
-            docs, media, prest, nom, ac,
-            media_strategy="denormalized", tenant_id="tenant-a",
-        )
 
 
 def test_embed_generalizes_to_1536d():

@@ -891,8 +891,8 @@ def _md5_gate(key: str) -> int:
 
 def test_mixture_sample_exact_membership(spark):
     """Temperature mixing: the kept set must equal the Python reference
-    (same md5 gate, same integer thresholds) and the binding group must be
-    kept whole."""
+    (same salted md5 gate, same integer thresholds) and the binding group
+    must be kept whole."""
     from medical_ocr_service_spark.operators.datasets import mixture_sample
 
     rows = (
@@ -915,7 +915,7 @@ def test_mixture_sample_exact_membership(spark):
         for g in counts
     }
     expected = {
-        (i, s) for i, s in rows if _md5_gate(str(i)) < thr[s]
+        (i, s) for i, s in rows if _md5_gate(f"mixture:{i}") < thr[s]
     }
     assert got == expected
     # binding group kept whole
@@ -943,3 +943,24 @@ def test_mixture_sample_temperature_limits(spark):
         df.union(extra), "source", {"a": 1.0, "b": 1.0}, temperature=1.0
     )
     assert out2.filter(F.col("source") == "junk").count() == 0
+
+
+def test_mixture_sample_then_hash_split_keeps_test_rows(spark):
+    """A group thinned by mixture_sample must still reach hash_split's
+    test split when both key on the same string column: the mixture gate is
+    salted, so it does not keep only the keys whose split uniform is low."""
+    from medical_ocr_service_spark.operators.datasets import (
+        hash_split,
+        mixture_sample,
+    )
+
+    rows = [(f"web{i:04d}", "web") for i in range(400)] + [
+        (f"code{i:04d}", "code") for i in range(100)
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "source"])
+    # p = (.5, .5) -> T = min(400/.5, 100/.5) = 200 -> web rate 0.25
+    mixed = mixture_sample(df, "source", {"web": 1.0, "code": 1.0})
+    split = hash_split(mixed, "doc_id")
+    web = split.filter(F.col("source") == "web")
+    assert 0 < web.count() < 400
+    assert web.filter(F.col("split") == "test").count() > 0

@@ -121,33 +121,20 @@ def test_extraction_has_single_doc_shuffle(spark, corpus_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_denormalized_extraction_single_exchange_no_joins(spark, corpus_dir):
-    """media_strategy='denormalized' must compile to exactly ONE exchange
-    (the groupBy(doc_id) reassembly) and ZERO joins — the property that
-    removed the broadcast build's serial driver cost (BENCH/BASELINE.md)."""
-    from medical_ocr_service_spark.operators import extract
-
-    docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
-    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
-    plan = _plan(extract.extract_documents(docs, media, media_strategy="denormalized"))
-    assert plan.count("Exchange") == 1, plan
-    assert "Join" not in plan, plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_topk_matching_broadcasts_agreements(spark, corpus_dir):
+def test_topk_matching_broadcasts_agreements(spark):
+    """The join-path practice matcher broadcasts the latest agreements: on
+    a frame with no media join, any BroadcastHashJoin is the matcher's."""
     from medical_ocr_service_spark.corpus import generator
     from medical_ocr_service_spark.operators import matching
-    from medical_ocr_service_spark.plans import previsacion
 
-    docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
-    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
-    prest, nom, ac = generator.dims_dataframes(spark)
-    header, detail = previsacion.run_previsacion(
-        docs, media, prest, nom, ac, media_strategy="denormalized",
-        practice_matcher="join",
+    _, nom, ac = generator.dims_dataframes(spark)
+    practices = spark.createDataFrame(
+        [("d1", 1, "ecografia abdominal", 1, 0.95, 1, 1),
+         ("d1", 2, "hemograma completo", 2, 0.95, 1, 2)],
+        "doc_id string, item int, descripcion string, cantidad int, "
+        "confianza double, prestador_id int, plan_id_plan int",
     )
-    plan = _plan(detail)
+    plan = _plan(matching.match_practices(practices, nom, ac))
     assert "BroadcastHashJoin" in plan
 
 

@@ -134,7 +134,6 @@ def test_run_extraction_cli_end_to_end(spark, corpus_dir, tmp_path, monkeypatch)
         "--docs", f"{corpus_dir}/documents_interleaved.parquet",
         "--media", f"{corpus_dir}/media.parquet",
         "--output", out,
-        "--media-strategy", "broadcast",
         "--salted",
     ]
     monkeypatch.setattr(sys, "argv", argv)

@@ -37,7 +37,6 @@ def test_spark_submit_py_files_end_to_end(corpus_dir, tmp_path):
         "--docs", f"{corpus_dir}/documents_interleaved.parquet",
         "--media", f"{corpus_dir}/media.parquet",
         "--output", out,
-        "--media-strategy", "broadcast",
         "--snapshots",
     ]
     env = dict(os.environ)
