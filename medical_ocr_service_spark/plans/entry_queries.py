@@ -1080,9 +1080,9 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     WITH scored AS (
       SELECT doc_id,
-             len(list_filter(string_split(lower(text), ' '),
+             len(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r]+'),
                  x -> list_contains(['the','of','and','to','in','is','that','a'], x))) AS en_score,
-             len(list_filter(string_split(lower(text), ' '),
+             len(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r]+'),
                  x -> list_contains(['el','la','de','que','y','en','los','se'], x))) AS es_score
       FROM documents)
     SELECT doc_id, en_score, es_score,
@@ -1093,14 +1093,13 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lang_id_stopword(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-data op: stopword-overlap language ID heuristic."""
+    """Training-data op: stopword-overlap language ID heuristic, English
+    against Spanish, over `lang_id`'s whitespace-split words."""
+    from ..operators.text_analysis import lang_id
+
     d = _t(spark, sf_dir, "documents")
-    en = F.array(*[F.lit(w) for w in ["the", "of", "and", "to", "in", "is", "that", "a"]])
-    es = F.array(*[F.lit(w) for w in ["el", "la", "de", "que", "y", "en", "los", "se"]])
-    toks = F.split(F.lower("text"), " ")
-    en_score = F.size(F.filter(toks, lambda x: F.array_contains(en, x))).cast("long")
-    es_score = F.size(F.filter(toks, lambda x: F.array_contains(es, x))).cast("long")
-    return d.select(
+    en_score, es_score = F.col("score_en"), F.col("score_es")
+    return lang_id(d, "text").select(
         "doc_id",
         en_score.alias("en_score"),
         es_score.alias("es_score"),

@@ -26,6 +26,9 @@ hash_split (no randomSplit — resumable, leak-free across reruns).
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -69,12 +72,18 @@ def train_quality_classifier(
     max_dup_word_fraction: float | None = None,
     train_fraction: float = 0.8,
     max_iter: int = 30,
+    model_path: str | None = None,
 ):
     """Returns (model, scored_test, metrics) where metrics carries the
     held-out AUC and split sizes. The label is the weak-supervision seed
     rule; `model` is a pyspark.ml PipelineModel-compatible
-    LogisticRegressionModel usable via `score_corpus`."""
-    from pyspark.ml.classification import LogisticRegression
+    LogisticRegressionModel usable via `score_corpus`.
+
+    The model is saved to `model_path` and reloaded from it. Without one it
+    goes to a ``file://`` temp dir, removed after the reload; that default
+    only works under a local master, so a cluster run passes a shared
+    path."""
+    from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
     from pyspark.ml.feature import VectorAssembler
 
@@ -104,23 +113,24 @@ def train_quality_classifier(
     # dies with Task-not-serializable whenever the session has live
     # observation state. The reloaded model is summary-free, and a real
     # deployment persists the artifact anyway.
-    import tempfile
-
-    from pyspark.ml.classification import LogisticRegressionModel
-
-    path = tempfile.mkdtemp(prefix="quality_lr_")
-    model.write().overwrite().save(path)
-    model = LogisticRegressionModel.load(path)
+    tmp = None if model_path else tempfile.mkdtemp(prefix="quality_lr_")
+    try:
+        path = model_path or f"file://{tmp}"
+        model.write().overwrite().save(path)
+        model = LogisticRegressionModel.load(path)
+    finally:
+        if tmp:
+            shutil.rmtree(tmp, ignore_errors=True)
     scored_test = model.transform(test)
     auc = BinaryClassificationEvaluator(
         rawPredictionCol="rawPrediction"
     ).evaluate(scored_test)
-    metrics = {
-        "auc_test": float(auc),
-        "n_train": train.count(),
-        "n_test": test.count(),
-        "n_positive": int(labeled.filter(F.col("label") == 1.0).count()),
-    }
+    sizes = split.agg(
+        F.count(F.when(F.col("split") == "train", 1)).alias("n_train"),
+        F.count(F.when(F.col("split") == "test", 1)).alias("n_test"),
+        F.count(F.when(F.col("label") == 1.0, 1)).alias("n_positive"),
+    ).first()
+    metrics = {"auc_test": float(auc), **sizes.asDict()}
     return model, scored_test, metrics
 
 

@@ -4,6 +4,18 @@ Tuned for correctness-at-scale first: AQE on (runtime re-planning + skew-join
 splitting), explicit shuffle partitioning, Arrow enabled for pandas UDFs.
 On a real cluster the same builder is used via spark-submit --py-files; only
 master/shuffle-partitions change.
+
+When ``get_spark`` itself launches the driver JVM (no live gateway, not
+under spark-submit, no extra spark-submit options in
+``PYSPARK_SUBMIT_ARGS``), the classpath would hold only the Spark conf dir
+and Spark's jars (no ``spark.driver.extraClassPath``, ``HADOOP_CONF_DIR``,
+``YARN_CONF_DIR`` or ``SPARK_DIST_CLASSPATH``) and the conf dir holds only
+``*.template`` files, the JVM starts from the package's class-data-sharing
+archive (see ``cds.py``). The archive lives in
+``${XDG_CACHE_HOME:-~/.cache}/medical_ocr_service_spark/cds/`` (about
+160-190 MB). A session that finds none starts as without it and leaves a list
+of the classes it loaded; a detached process builds the archive from that
+list after the session's JVM exits. Deleting that directory is always safe.
 """
 
 from __future__ import annotations
@@ -11,6 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import cds
 
 
 def get_spark(
@@ -26,6 +40,10 @@ def get_spark(
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
         shuffle_partitions = cpus if n == "*" else int(n)
+    conf = {
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        **(extra_conf or {}),
+    }
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -60,11 +78,10 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return cds.get_or_create(builder, conf)
 
 
 def run_in_pool(spark: SparkSession, pool: str):

@@ -47,3 +47,18 @@ def test_quality_classifier_deterministic_split(spark):
     ids1 = {r["doc_id"] for r in s1.select("doc_id").collect()}
     ids2 = {r["doc_id"] for r in s2.select("doc_id").collect()}
     assert ids1 == ids2
+
+
+def test_quality_classifier_removes_its_temp_model_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """Without a model_path the model round-trips through a temp dir that
+    is gone once the trainer returns; an explicit model_path is kept."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    train_quality_classifier(df, max_iter=5)
+    assert list(tmp_path.glob("quality_lr_*")) == []
+
+    kept = tmp_path / "model"
+    train_quality_classifier(df, max_iter=5, model_path=f"file://{kept}")
+    assert (kept / "metadata").is_dir()

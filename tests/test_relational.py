@@ -76,3 +76,26 @@ def test_query_matches_oracle(spark, ddb, sf_dir, name):
     )
     assert len(ours) == len(ref), f"{name}: rows {len(ours)} != {len(ref)}"
     pd.testing.assert_frame_equal(ours, ref, check_dtype=False, check_exact=True)
+
+
+def test_lang_id_stopword_splits_on_any_whitespace(spark, tmp_path):
+    """Tabs, newlines and runs of spaces separate words in the query and in
+    its oracle alike: both rows score the same six Spanish stopwords."""
+    text = "el gato es uno de los animales que viven en la casa"
+    pd.DataFrame(
+        {
+            "doc_id": [1, 2],
+            "text": [text, "el\tgato es\nuno de los\r\nanimales que  viven en\t\tla casa"],
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
+    ours = entry_mod.queries()["lang_id_stopword"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    ref = con.execute(entry_mod.oracle_sql()["lang_id_stopword"]).df()
+    for got in (ours, ref):
+        got = got.sort_values("doc_id")
+        assert list(got["es_score"]) == [6, 6]
+        assert list(got["en_score"]) == [0, 0]
+        assert list(got["lang_guess"]) == ["es", "es"]
