@@ -134,8 +134,9 @@ VEC_WEIGHT = 0.7            # matching.service.js:60-63 combined score
 TRGM_WEIGHT = 0.3
 MIN_SIMILARITY_NOM = 0.30   # candidate floor (matching.service.js:44 vector threshold)
 # run_previsacion's practice matcher: closure-dict path only up to this many
-# agreement rows (~40 MB of dict at 200 B/entry); larger dims take the
-# broadcast-join path, which scales to any size.
+# vigente agreement rows (the cap counts them before the latest-per-key pick;
+# ~40 MB of dict at 200 B/entry); larger dims take the broadcast-join path,
+# which scales to any size.
 FAST_MATCH_MAX_AGREEMENTS = 200_000
 # Hard cap on any driver-side dimension collect (closure-broadcast pattern):
 # beyond this the matcher raises instead of silently OOMing the driver —

@@ -438,20 +438,28 @@ ACUERDOS_SCHEMA = (
 
 
 def dims_dataframes(spark, seed: int = config.CORPUS_SEED):
-    """Dimension tables as Spark DataFrames with explicit schemas (no inference)."""
+    """Dimension tables as Spark DataFrames with explicit schemas (no
+    inference), each built from an Arrow table: a LocalRelation, so the
+    optimizer folds filters, projections and limits over it on the driver
+    and no scan of these small tables starts a Python task."""
     import datetime
 
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    def frame(rows, ddl):
+        schema = StructType.fromDDL(ddl)
+        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+        return spark.createDataFrame(table, schema)
+
     dims = synthesize_dimensions(seed=seed)
-    prest = spark.createDataFrame(
-        [tuple(p.values()) for p in dims["prestadores"]], schema=PRESTADORES_SCHEMA
+    acuerdos = [
+        dict(a, fecha_vigencia=datetime.date.fromisoformat(a["fecha_vigencia"]))
+        for a in dims["acuerdos_prestador"]
+    ]
+    return (
+        frame(dims["prestadores"], PRESTADORES_SCHEMA),
+        frame(dims["nomencladores"], NOMENCLADORES_SCHEMA),
+        frame(acuerdos, ACUERDOS_SCHEMA),
     )
-    nom = spark.createDataFrame(
-        [tuple(n.values()) for n in dims["nomencladores"]], schema=NOMENCLADORES_SCHEMA
-    )
-    ac_rows = []
-    for a in dims["acuerdos_prestador"]:
-        r = dict(a)
-        r["fecha_vigencia"] = datetime.date.fromisoformat(r["fecha_vigencia"])
-        ac_rows.append(tuple(r.values()))
-    ac = spark.createDataFrame(ac_rows, schema=ACUERDOS_SCHEMA)
-    return prest, nom, ac

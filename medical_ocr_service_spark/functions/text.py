@@ -18,12 +18,6 @@ def normalizar_texto(col: Column) -> Column:
     return F.translate(F.lower(col), config.ACCENT_SRC.lower(), config.ACCENT_DST.lower())
 
 
-def normalize_for_embedding(col: Column) -> Column:
-    """lower, trim, collapse whitespace, truncate 8000 chars —
-    reference src/services/embedding.service.js:200-206."""
-    return F.substring(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), 1, 8000)
-
-
 def digits_only(col: Column) -> Column:
     """Strip all non-digits (CI / matricula cleanup) —
     reference src/services/validation.service.js:57-71."""
@@ -46,26 +40,9 @@ def id_type(col: Column) -> Column:
     )
 
 
-def full_name(nombres: Column, apellidos: Column) -> Column:
-    """reference src/services/pre-visacion.service.js:70."""
-    return F.trim(F.concat_ws(" ", nombres, apellidos))
-
-
 def content_hash(col: Column) -> Column:
     """SHA-256 dedup key — reference src/services/gpt-vision.service.js:22."""
     return F.sha2(col, 256)
-
-
-def round2(col: Column) -> Column:
-    """2-dp rounding used everywhere in the reference (Math.round(x*100)/100)."""
-    return F.round(col, 2)
-
-
-def split_multisep(col: Column) -> Column:
-    """Split on ,;| then trim and drop empties —
-    reference src/routes/v1/data-ingest.routes.js:679-684."""
-    arr = F.split(col, r"[,;|]")
-    return F.filter(F.transform(arr, lambda x: F.trim(x)), lambda x: x != F.lit(""))
 
 
 def cost_usd(prompt_tokens: Column, completion_tokens: Column) -> Column:

@@ -19,13 +19,17 @@ flattened doc fields runs, per document,
 
 and returns the ordered per-practice match array beside the practicas array.
 
-Every dimension reaches the node through at most one guarded driver collect
-(active prestadores, active nomencladores, latest agreements) and ships in
-the function's closure — the broadcast-dimension pattern, with no dimension
-shuffle and no join. Dims are small by contract (≤ MAX_BROADCAST_DIM_ROWS).
-For agreement tables too large for a closure dict, match_practices is the
-explode + broadcast-join + window matcher over exploded practices (same
-rows; pytest asserts).
+All three dimensions reach the node through collect_dimensions, one
+guarded driver collect each (the active prestadores, the active
+nomencladores, the vigente agreements; on local dimensions such as
+generator.dims_dataframes' they fold into LocalRelations and run no Spark
+job), and ship in the function's closure — the broadcast-dimension
+pattern, with no dimension shuffle and no join. The latest agreement per
+key is picked on the driver. Dims are small by contract
+(≤ MAX_BROADCAST_DIM_ROWS). For agreement tables too large for a closure
+dict (more than FAST_MATCH_MAX_AGREEMENTS vigente rows), match_practices
+is the explode + broadcast-join + window matcher over exploded practices
+(same rows; pytest asserts).
 """
 
 from __future__ import annotations
@@ -189,10 +193,14 @@ def make_topk_udf(
 
 
 def _guarded_collect(df: DataFrame, what: str) -> list:
-    """Collect a dimension with a loud size cap: fetching cap+1 rows via
-    limit() costs no extra job, and blowing past the cap raises a clear
-    error instead of a silent driver OOM. Oversized dims should be sharded
-    by tenant/especialidad or served by the ANN operators
+    """Collect a dimension with a loud size cap: limit(cap + 1) bounds what
+    reaches the driver, and blowing past the cap raises a clear error
+    instead of a silent driver OOM. On a local dimension (a LocalRelation,
+    e.g. generator.dims_dataframes) the optimizer folds the filter,
+    projection and limit into the relation and the collect runs no Spark
+    job; on a file-backed one it is a job of its own, or several when the
+    limit scans partitions in growing batches. Oversized dims should be
+    sharded by tenant/especialidad or served by the ANN operators
     (operators/similarity_search) instead of the closure matmul."""
     cap = config.MAX_BROADCAST_DIM_ROWS
     rows = df.limit(cap + 1).collect()
@@ -206,29 +214,44 @@ def _guarded_collect(df: DataFrame, what: str) -> list:
     return rows
 
 
-def _collect_nomenclador_space(nomencladores: DataFrame) -> tuple[list, list, list]:
-    """Active nomencladores -> (ids, descripciones, embedding texts).
+def _by_id(rows: list, key: str) -> list:
+    """rows in ascending ``key`` order, NULL first (Spark's ORDER BY)."""
+    return sorted(rows, key=lambda r: (r[key] is not None, r[key]))
 
-    Deterministic order (id ascending). Driver-side collect is by design:
-    the dimension is the broadcast side (SURVEY §4 — replaces IVFFlat);
-    _guarded_collect enforces the fits-in-memory contract loudly."""
-    rows = _guarded_collect(
-        nomencladores.filter(F.col("estado") == "ACTIVO")
-        .select(
-            "id_nomenclador",
-            "descripcion",
-            F.concat_ws(
-                " ",
-                "especialidad",
-                "descripcion",
-                "desc_nomenclador",
-                F.array_join("sinonimos", " "),
-                F.array_join("palabras_clave", " "),
-            ).alias("etext"),
-        )
-        .orderBy("id_nomenclador"),
-        "nomenclador candidate space",
+
+def _prestador_space(prestadores: DataFrame) -> DataFrame:
+    """Active prestadores, projected to what the provider cascade reads."""
+    return prestadores.filter(F.col("estado") == "ACTIVO").select(
+        "id_prestador",
+        "ruc",
+        "registro_profesional",
+        "nombre_fantasia",
+        F.concat_ws(
+            " ", "nombre_fantasia", "raz_soc_nombre", "registro_profesional", "tipo"
+        ).alias("etext"),
     )
+
+
+def _nomenclador_space(nomencladores: DataFrame) -> DataFrame:
+    """Active nomencladores -> (id_nomenclador, descripcion, embedding text)."""
+    return nomencladores.filter(F.col("estado") == "ACTIVO").select(
+        "id_nomenclador",
+        "descripcion",
+        F.concat_ws(
+            " ",
+            "especialidad",
+            "descripcion",
+            "desc_nomenclador",
+            F.array_join("sinonimos", " "),
+            F.array_join("palabras_clave", " "),
+        ).alias("etext"),
+    )
+
+
+def _nomenclador_lists(rows: list) -> tuple[list, list, list]:
+    """Nomenclador space rows -> (ids, descripciones, embedding texts) in
+    id order (deterministic scorer input)."""
+    rows = _by_id(rows, "id_nomenclador")
     return (
         [r["id_nomenclador"] for r in rows],
         [r["descripcion"] for r in rows],
@@ -236,9 +259,26 @@ def _collect_nomenclador_space(nomencladores: DataFrame) -> tuple[list, list, li
     )
 
 
+def _collect_nomenclador_space(nomencladores: DataFrame) -> tuple[list, list, list]:
+    """Active nomencladores -> (ids, descripciones, embedding texts).
+
+    Driver-side collect is by design: the dimension is the broadcast side
+    (SURVEY §4 — replaces IVFFlat); _guarded_collect enforces the
+    fits-in-memory contract loudly."""
+    return _nomenclador_lists(
+        _guarded_collect(_nomenclador_space(nomencladores), "nomenclador candidate space")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Latest-valid agreement (J6/T3)
 # ---------------------------------------------------------------------------
+
+# The latest agreement is the max of these fields, compared in this order
+# with NULL below any value; latest_agreements and _latest_agreement_map
+# both read it, so the two paths pick the same row even on tied dates and ids.
+LATEST_AGREEMENT_ORDER = ("fecha_vigencia", "id_acuerdo", "precio")
+
 
 def latest_agreements(acuerdos: DataFrame) -> DataFrame:
     """One row per (prestador, nomenclador, plan): latest vigente='SI'
@@ -246,7 +286,7 @@ def latest_agreements(acuerdos: DataFrame) -> DataFrame:
     matching.service.js:251-269.
 
     Round 4: struct-max argmax instead of a row_number window. The winner
-    is unchanged — max(struct(fecha_vigencia, id_acuerdo, ...)) compares
+    is unchanged — max(struct(*LATEST_AGREEMENT_ORDER, ...)) compares
     lexicographically, which IS (fecha DESC, id DESC) with the unique
     id_acuerdo deciding ties before any later field is reached, and struct
     ordering puts NULL below any value exactly like DESC NULLS LAST. The
@@ -255,11 +295,8 @@ def latest_agreements(acuerdos: DataFrame) -> DataFrame:
     table the window plan's full shuffle + per-key sort is the bottleneck.
     """
     keys = ["prest_id_prestador", "id_nomenclador", "plan_id_plan"]
-    others = [
-        c for c in acuerdos.columns
-        if c not in ("fecha_vigencia", "id_acuerdo")
-    ]
-    winner = F.max(F.struct("fecha_vigencia", "id_acuerdo", *others)).alias("_m")
+    others = [c for c in acuerdos.columns if c not in LATEST_AGREEMENT_ORDER]
+    winner = F.max(F.struct(*LATEST_AGREEMENT_ORDER, *others)).alias("_m")
     agg = acuerdos.filter(F.col("vigente") == "SI").groupBy(*keys).agg(winner)
     return agg.select(
         *[
@@ -269,31 +306,56 @@ def latest_agreements(acuerdos: DataFrame) -> DataFrame:
     )
 
 
-def agreement_map(acuerdos: DataFrame) -> dict | None:
-    """Latest agreements as a closure dict from ONE driver collect:
+def _latest_agreement_map(rows: list) -> dict:
+    """Vigente agreement rows -> the latest one per key as a closure dict:
     (id_nomenclador, prest_id_prestador, plan_id_plan) -> (id_acuerdo, precio).
 
-    Returns None when there are more than config.FAST_MATCH_MAX_AGREEMENTS
-    latest agreements (the caller then takes the broadcast-join matcher,
-    which scales to any size).
-    SQL-join NULL semantics: a NULL key component never matches, but a
-    Python dict happily equates None keys — rows with a NULL key are dropped
-    so dict lookups mirror the join-based path exactly."""
-    latest = latest_agreements(acuerdos).select(
-        "id_nomenclador", "prest_id_prestador", "plan_id_plan", "id_acuerdo", "precio"
-    )
+    The same winner as latest_agreements' struct max: the max of
+    LATEST_AGREEMENT_ORDER with NULL below any value (rows that tie on all
+    of it carry the same dict value). SQL-join NULL semantics: a NULL key
+    component never matches, but a Python dict happily equates None keys —
+    rows with a NULL key are dropped so dict lookups mirror the join-based
+    path exactly."""
+
+    def order(r):
+        return tuple((r[c] is not None, r[c]) for c in LATEST_AGREEMENT_ORDER)
+
+    latest: dict = {}
+    for r in sorted(rows, key=order):  # ascending: the last row of a key wins
+        key = (r["id_nomenclador"], r["prest_id_prestador"], r["plan_id_plan"])
+        if None not in key:
+            latest[key] = (r["id_acuerdo"], r["precio"])
+    return latest
+
+
+def collect_dimensions(
+    prestadores: DataFrame, nomencladores: DataFrame, acuerdos: DataFrame
+) -> tuple[list, list, dict | None]:
+    """(active prestador rows, active nomenclador rows, agreement dict), one
+    guarded driver collect each. On Arrow-built or other local dimensions
+    every collect folds into a LocalRelation and runs no Spark job.
+
+    The agreement dict is _latest_agreement_map's latest pick per key, or
+    None when more than config.FAST_MATCH_MAX_AGREEMENTS vigente rows exist
+    (the collect fetches at most cap + 1, never the whole table; the caller
+    then takes the broadcast-join matcher, which scales to any size). The
+    cap counts vigente rows, not latest ones. Prestadores and nomencladores
+    above MAX_BROADCAST_DIM_ROWS raise (_guarded_collect)."""
     cap = config.FAST_MATCH_MAX_AGREEMENTS
-    rows = latest.limit(cap + 1).collect()
-    if len(rows) > cap:
-        return None
-    return {
-        (r["id_nomenclador"], r["prest_id_prestador"], r["plan_id_plan"]): (
-            r["id_acuerdo"],
-            r["precio"],
+    agreements = (
+        acuerdos.filter(F.col("vigente") == "SI")
+        .select(
+            "id_nomenclador", "prest_id_prestador", "plan_id_plan",
+            *LATEST_AGREEMENT_ORDER,
         )
-        for r in rows
-        if None not in (r["id_nomenclador"], r["prest_id_prestador"], r["plan_id_plan"])
-    }
+        .limit(cap + 1)
+        .collect()
+    )
+    return (
+        _guarded_collect(_prestador_space(prestadores), "prestador space"),
+        _guarded_collect(_nomenclador_space(nomencladores), "nomenclador candidate space"),
+        None if len(agreements) > cap else _latest_agreement_map(agreements),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -307,8 +369,8 @@ PROVIDER_FIELDS = [
 ]
 
 
-def _provider_cascade(prestadores: DataFrame):
-    """One guarded collect of the active prestadores -> a cascade function
+def _provider_cascade(prestadores: list):
+    """Active prestador rows (collect_dimensions) -> a cascade function
     over an Arrow batch of doc fields (ruc, medico_matricula,
     matricula_valida, prestador_nombre) -> (prestador_id,
     prestador_confianza, prestador_metodo) lists.
@@ -318,20 +380,7 @@ def _provider_cascade(prestadores: DataFrame):
     (:193-232) -> fuzzy top-1 (0.7 vec + 0.3 trgm on nombre, :137-171).
     A RUC or matricula shared by several active providers resolves to the
     lowest id_prestador; a NULL key never matches."""
-    rows = _guarded_collect(
-        prestadores.filter(F.col("estado") == "ACTIVO")
-        .select(
-            "id_prestador",
-            "ruc",
-            "registro_profesional",
-            "nombre_fantasia",
-            F.concat_ws(
-                " ", "nombre_fantasia", "raz_soc_nombre", "registro_profesional", "tipo"
-            ).alias("etext"),
-        )
-        .orderBy("id_prestador"),
-        "prestador space",
-    )
+    rows = _by_id(prestadores, "id_prestador")
     by_ruc: dict = {}
     by_mat: dict = {}
     for r in rows:  # id order: setdefault keeps the lowest id per key
@@ -398,9 +447,11 @@ def match_prestador(doc_fields: DataFrame, prestadores: DataFrame) -> DataFrame:
     """doc_fields(doc_id, ruc, prestador_nombre, medico_matricula,
     matricula_valida, ...) -> + (prestador_id, prestador_confianza,
     prestador_metodo), one Arrow map node over the _provider_cascade
-    closure (no join, no shuffle). ``prestadores`` needs only its raw
-    columns; embedding columns, if present, are never read."""
-    return _append_columns(doc_fields, PROVIDER_FIELDS, _provider_cascade(prestadores))
+    closure (no join, no shuffle), after one guarded collect of the active
+    prestadores. ``prestadores`` needs only its raw columns; embedding
+    columns, if present, are never read."""
+    rows = _guarded_collect(_prestador_space(prestadores), "prestador space")
+    return _append_columns(doc_fields, PROVIDER_FIELDS, _provider_cascade(rows))
 
 
 def trigram_jaccard_col(a, b):
@@ -583,12 +634,12 @@ _SIN_MATCH = {
 }
 
 
-def _practice_picker(nomencladores: DataFrame, agreements: dict):
-    """One guarded collect of the active nomencladores -> a batch function
+def _practice_picker(nomencladores: list, agreements: dict):
+    """Active nomenclador rows (collect_dimensions) -> a batch function
     (descripcion, prestador_id, plan_id lists) -> one PRACTICE_MATCH_TYPE
     dict per practice: top-k candidates, agreement preference pick-best
     (matching.service.js:378-392) and the alternatives slice (T7)."""
-    ids, descs, etexts = _collect_nomenclador_space(nomencladores)
+    ids, descs, etexts = _nomenclador_lists(nomencladores)
     score = make_topk_scorer(ids, descs, etexts, k=config.TOPK_NOMENCLADOR)
 
     def pick(descripciones, prestador_ids, plan_ids) -> list:
@@ -637,8 +688,8 @@ def _practice_picker(nomencladores: DataFrame, agreements: dict):
 
 def match_documents(
     doc_fields: DataFrame,
-    prestadores: DataFrame,
-    nomencladores: DataFrame,
+    prestadores: list,
+    nomencladores: list,
     agreements: dict,
 ) -> DataFrame:
     """doc_fields(doc_id, ruc, prestador_nombre, medico_matricula,
@@ -649,9 +700,10 @@ def match_documents(
 
     One Arrow map node per document batch: the provider cascade, then every
     practice of the batch scored in one memoized scorer call against the
-    doc's provider and plan. ``agreements`` is agreement_map's dict. Same
-    rows as match_prestador + match_practices (pytest asserts) with no
-    exchange added to the upstream plan."""
+    doc's provider and plan. ``prestadores``, ``nomencladores`` and
+    ``agreements`` are collect_dimensions' results. Same rows as
+    match_prestador + match_practices (pytest asserts) with no exchange
+    added to the upstream plan."""
     import pyarrow.compute as pc
 
     cascade = _provider_cascade(prestadores)

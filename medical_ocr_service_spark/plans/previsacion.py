@@ -42,20 +42,25 @@ def run_previsacion(
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (visacion_previa, det_visacion_previa).
 
-    Practice matching picks its path from ONE collect of at most
-    config.FAST_MATCH_MAX_AGREEMENTS + 1 latest agreements — the same
-    collect feeds the matcher:
+    The dimensions are read once, on the driver
+    (matching.collect_dimensions): one guarded collect each of the active
+    prestadores, the active nomencladores and at most
+    config.FAST_MATCH_MAX_AGREEMENTS + 1 vigente agreements, and the latest
+    agreement per key is picked on the driver. On local dimensions
+    (generator.dims_dataframes builds LocalRelations) these collects run
+    no Spark job. The agreement collect also picks the practice matcher:
 
-    * when they fit, each document is matched once
-      (matching.match_documents): the provider cascade and every
-      practice's pick-best run in one Arrow map node whose dimensions ship
-      in its closure, one guarded driver collect each. That frame is
-      persisted; the header takes n_practicas and the mean practice
-      similarity from the match array (no groupBy, no join) and the detail
-      explodes the cached array (the matcher never runs twice);
+    * when the vigente agreements fit under the cap, each document is
+      matched once (matching.match_documents): the provider cascade and
+      every practice's pick-best run in one Arrow map node whose
+      dimensions ship in its closure. That frame is persisted; the header
+      takes n_practicas and the mean practice similarity from the match
+      array (no groupBy, no join) and the detail explodes the cached array
+      (the matcher never runs twice);
     * otherwise the broadcast-join practice matcher
       (matching.match_practices) serves agreement tables of any size, with
-      per-doc stats from a groupBy joined back to the header.
+      per-doc stats from a groupBy joined back to the header. This path
+      collects the prestadores and nomencladores a second time.
 
     ``tenant_id`` (P1, reference matching.service.js:25-29 / migration_
     multitenant.sql): when given, the whole run is scoped to ONE tenant —
@@ -74,7 +79,9 @@ def run_previsacion(
         "doc_id", *[F.col(f"fields.{c}").alias(c) for c in DOC_FIELDS], plan_id_col()
     )
 
-    agreements = matching.agreement_map(acuerdos)
+    prest_rows, nom_rows, agreements = matching.collect_dimensions(
+        prestadores, nomencladores, acuerdos
+    )
 
     # Both outputs (header AND detail) hang off the persisted match frame;
     # without persistence the full extraction + matching lineage recomputes
@@ -82,7 +89,7 @@ def run_previsacion(
     # may unpersist after writing both tables.
     if agreements is not None:
         matched = matching.match_documents(
-            doc_fields, prestadores, nomencladores, agreements
+            doc_fields, prest_rows, nom_rows, agreements
         ).persist(StorageLevel.MEMORY_AND_DISK)
         det = matching.explode_matches(matched)
         # per-doc practice-match confidence mean (A13 component), summed in

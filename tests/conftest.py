@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pytest
 
@@ -72,3 +75,32 @@ def _final_plan_nodes(plan, cached=False):
 def final_plan_nodes():
     """The _final_plan_nodes walker, for plan-shape tests."""
     return _final_plan_nodes
+
+
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``with count_jobs() as jobs: ...`` runs the block in a job group of
+    its own; afterwards ``jobs.n`` is the number of Spark jobs the block
+    started (``statusTracker().getJobIdsForGroup``). The tracker is fed by
+    the listener bus, so the count waits for the bus to drain first."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def counting():
+        group = f"count-jobs-{next(_job_groups)}"
+        before = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+        jobs = SimpleNamespace(n=None)
+        sc.setJobGroup(group, "counted block")
+        try:
+            yield jobs
+        finally:
+            for k, v in before.items():
+                sc.setLocalProperty(k, v)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return counting

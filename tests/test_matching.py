@@ -175,7 +175,7 @@ def test_match_practices_fast_equals_join_path(spark, corpus_dir):
 
     a = matching.match_practices(practices, nom, ac).toPandas()
     matched = matching.match_documents(
-        doc_fields, prest, nom, matching.agreement_map(ac)
+        doc_fields, *matching.collect_dimensions(prest, nom, ac)
     )
     b = matching.explode_matches(matched).toPandas()
     keys = ["doc_id", "item"]
@@ -203,6 +203,12 @@ def _one_doc(spark, ruc, matricula, plan):
         "practicas array<struct<item:int,descripcion:string,cantidad:int,"
         "confianza:double>>, plan_id_plan int",
     )
+
+
+_ACUERDOS = (
+    "id_acuerdo int, prest_id_prestador int, id_nomenclador int, "
+    "plan_id_plan int, precio double, vigente string, fecha_vigencia date"
+)
 
 
 def _prestadores(spark, rows):
@@ -240,7 +246,7 @@ def test_fast_path_null_agreement_keys_never_match(spark):
     )
     a = matching.match_practices(practices, nom, ac).toPandas()
     matched = matching.match_documents(
-        _one_doc(spark, "800-1", None, None), prest, nom, matching.agreement_map(ac)
+        _one_doc(spark, "800-1", None, None), *matching.collect_dimensions(prest, nom, ac)
     )
     b = matching.explode_matches(matched).toPandas()
     assert b.loc[0, "prestador_id"] == 1 and b.loc[0, "nomenclador_id_sugerido"] == 1
@@ -269,12 +275,14 @@ def test_provider_shared_keys_resolve_to_lowest_id(spark):
         "desc_nomenclador string, sinonimos array<string>, "
         "palabras_clave array<string>, estado string",
     )
+    no_agreements = spark.createDataFrame([], _ACUERDOS)
+    prest_rows, nom_rows, _ = matching.collect_dimensions(prest, nom, no_agreements)
     by_ruc = _one_doc(spark, "800-1", None, 1)
     by_mat = _one_doc(spark, "999-9", "M1", 1)
     for doc, metodo in ((by_ruc, "RUC"), (by_mat, "MATRICULA")):
         for out in (
             matching.match_prestador(doc, prest),
-            matching.match_documents(doc, prest, nom, {}),
+            matching.match_documents(doc, prest_rows, nom_rows, {}),
         ):
             r = out.select("prestador_id", "prestador_metodo").first()
             assert (r["prestador_id"], r["prestador_metodo"]) == (5, metodo)
@@ -420,6 +428,128 @@ def test_dim_collect_guard(spark, monkeypatch):
     monkeypatch.setattr(config, "MAX_BROADCAST_DIM_ROWS", 3)
     with pytest.raises(ValueError, match="MAX_BROADCAST_DIM_ROWS"):
         matching._collect_nomenclador_space(matching.embed_nomencladores(nom))
+
+
+def test_dims_dataframes_are_arrow_local_relations(spark):
+    """generator.dims_dataframes holds exactly synthesize_dimensions' rows,
+    array, date and NULL columns included, and each frame is a
+    LocalRelation: no ExistingRDD scan, no Python node."""
+    import datetime
+
+    dims = generator.synthesize_dimensions(seed=7)
+    frames = generator.dims_dataframes(spark, seed=7)
+    want = (
+        dims["prestadores"],
+        dims["nomencladores"],
+        [
+            dict(a, fecha_vigencia=datetime.date.fromisoformat(a["fecha_vigencia"]))
+            for a in dims["acuerdos_prestador"]
+        ],
+    )
+    for df, rows in zip(frames, want, strict=True):
+        assert df.columns == list(rows[0])
+        assert [r.asDict() for r in df.collect()] == rows
+        qe = df._jdf.queryExecution()
+        assert qe.optimizedPlan().nodeName() == "LocalRelation"
+        plans = qe.optimizedPlan().treeString() + qe.executedPlan().treeString()
+        assert "ExistingRDD" not in plans and "Python" not in plans, plans
+    assert any(n["sinonimos"] for n in want[1])
+    assert all(p["nombre_normalizado"] is None for p in want[0])
+
+
+def test_previsacion_plan_build_runs_at_most_one_job(
+    spark, corpus_dir, count_jobs, monkeypatch
+):
+    """Building run_previsacion's plan on generator dimensions runs at most
+    one Spark job: every frame it collects (the three dimensions) folds
+    into a LocalRelation, so no collect plans an exchange, a Python node
+    or an RDD scan."""
+    docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
+    prest, nom, ac = generator.dims_dataframes(spark)
+    collected = []
+    collect = type(prest).collect
+    monkeypatch.setattr(
+        type(prest), "collect", lambda df: (collected.append(df), collect(df))[1]
+    )
+    with count_jobs() as jobs:
+        previsacion.run_previsacion(docs, media, prest, nom, ac)
+    assert jobs.n <= 1
+    assert len(collected) == 3
+    for df in collected:
+        qe = df._jdf.queryExecution()
+        assert qe.optimizedPlan().nodeName() == "LocalRelation"
+        plan = qe.executedPlan().treeString()
+        for bad in ("Exchange", "Python", "ExistingRDD"):
+            assert bad not in plan, plan
+
+
+def test_driver_latest_pick_equals_latest_agreements(spark):
+    """collect_dimensions' driver-side latest pick == latest_agreements'
+    struct max, on seeded agreement tables with NULL fecha_vigencia, tied
+    dates, duplicate and NULL ids, NULL key parts and non-SI rows. Rows
+    with a NULL key never enter the dict. Every third table puts a column
+    between id_acuerdo and precio, so a tie on date and id is decided by
+    the same field on both paths whatever the column order."""
+    import datetime
+    import random
+
+    from medical_ocr_service_spark.operators import matching
+
+    prest, nom, _ = generator.dims_dataframes(spark)
+    for seed in range(12):
+        rng = random.Random(seed)
+        # even seeds: one non-NULL date and id, so most rows tie on both
+        dates = [None, datetime.date(2023, 1, 1), datetime.date(2024, 6, 30)][: 2 + seed % 2]
+        ids = [None, *range(1, 2 + 3 * (seed % 2))]
+        nullable = lambda xs: rng.choice([None, *xs]) if rng.random() < 0.1 else rng.choice(xs)  # noqa: E731
+        rows = [
+            (
+                rng.choice(ids),
+                nullable([1, 2]),
+                nullable([1, 2]),
+                nullable([1, 2]),
+                rng.choice([100.0, 250.5, None]),
+                rng.choice(["SI", "SI", "SI", "NO", None]),
+                rng.choice(dates),
+            )
+            for _ in range(rng.randrange(1, 80))
+        ]
+        schema = _ACUERDOS
+        if seed % 3 == 2:
+            schema = schema.replace("id_acuerdo int, ", "id_acuerdo int, nota string, ")
+            rows = [(r[0], rng.choice(["a", "z", None]), *r[1:]) for r in rows]
+        ac = spark.createDataFrame(rows, schema)
+        want = {
+            (r["id_nomenclador"], r["prest_id_prestador"], r["plan_id_plan"]): (
+                r["id_acuerdo"],
+                r["precio"],
+            )
+            for r in matching.latest_agreements(ac).collect()
+            if None not in (r["id_nomenclador"], r["prest_id_prestador"], r["plan_id_plan"])
+        }
+        assert matching.collect_dimensions(prest, nom, ac)[2] == want, seed
+
+
+def test_collect_dimensions_caps(spark, monkeypatch):
+    """The agreement cap counts vigente rows: at the count the dict is
+    built, one below it collect_dimensions returns None (run_previsacion
+    then takes the join path). Prestadores and nomencladores past
+    MAX_BROADCAST_DIM_ROWS raise."""
+    from medical_ocr_service_spark import config
+    from medical_ocr_service_spark.operators import matching
+
+    prest, nom, ac = generator.dims_dataframes(spark)
+    n_vigente = ac.filter(F.col("vigente") == "SI").count()
+    n_latest = matching.latest_agreements(ac).count()
+    assert n_latest < n_vigente
+    monkeypatch.setattr(config, "FAST_MATCH_MAX_AGREEMENTS", n_vigente)
+    assert len(matching.collect_dimensions(prest, nom, ac)[2]) == n_latest
+    monkeypatch.setattr(config, "FAST_MATCH_MAX_AGREEMENTS", n_vigente - 1)
+    assert matching.collect_dimensions(prest, nom, ac)[2] is None
+    monkeypatch.setattr(config, "MAX_BROADCAST_DIM_ROWS", 3)
+    with pytest.raises(ValueError, match="MAX_BROADCAST_DIM_ROWS"):
+        matching.collect_dimensions(prest, nom, ac)
 
 
 def test_trigram_jaccard_col_matches_python(spark):
