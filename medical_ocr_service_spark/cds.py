@@ -44,6 +44,7 @@ import shutil
 import subprocess
 import sys
 import time
+from collections.abc import Mapping
 from typing import NamedTuple
 
 from pyspark import SparkContext
@@ -138,6 +139,18 @@ def _sweep(d: str, key: str) -> bool:
 EXTRA_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 
 
+def launches_jvm(gateway_live: bool, environ: Mapping[str, str]) -> bool:
+    """True when ``getOrCreate`` launches the driver JVM from this process:
+    no gateway is live or given (``PYSPARK_GATEWAY_PORT``, as under
+    spark-submit) and ``PYSPARK_SUBMIT_ARGS`` adds no spark-submit
+    options."""
+    return (
+        not gateway_live
+        and "PYSPARK_GATEWAY_PORT" not in environ
+        and environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell") == "pyspark-shell"
+    )
+
+
 def launch(conf: dict[str, str]) -> Launch | None:
     """The CDS launch for a new driver JVM with Spark conf `conf`, or None
     to launch as without CDS: when a gateway is live or given (no JVM is
@@ -147,9 +160,7 @@ def launch(conf: dict[str, str]) -> Launch | None:
     (pointing SPARK_CONF_DIR elsewhere would drop them), when the cache
     directory cannot be written, or while this key's archive is being
     built."""
-    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
-        return None
-    if os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell") != "pyspark-shell":
+    if not launches_jvm(SparkContext._gateway is not None, os.environ):
         return None
     if conf.get("spark.driver.extraClassPath") or any(map(os.environ.get, EXTRA_CLASSPATH_ENV)):
         return None

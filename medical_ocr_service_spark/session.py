@@ -16,15 +16,69 @@ archive (see ``cds.py``). The archive lives in
 160-190 MB). A session that finds none starts as without it and leaves a list
 of the classes it loaded; a detached process builds the archive from that
 list after the session's JVM exits. Deleting that directory is always safe.
+
+When ``get_spark`` launches the driver JVM (the first condition above) for
+a ``local`` master, the Python workers run the package's daemon
+(``spark.python.daemon.module``, see ``worker_daemon.py``) if a
+``python -m`` that the JVM starts can import the package: its parent
+directory is on ``PYTHONPATH``, is the working directory or is this
+interpreter's site-packages (when the workers run this interpreter). Warm
+workers then stop re-reading ``pyspark.zip``'s directory on every task.
+Otherwise Spark's stock daemon runs; a module the caller sets is kept.
+``spark.conf.get("spark.python.daemon.module", "stock")`` shows which.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import site
+import sys
+from collections.abc import Mapping, Sequence
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 from . import cds
+
+WORKER_DAEMON = "medical_ocr_service_spark.worker_daemon"
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def daemon_module(
+    gateway_live: bool,
+    environ: Mapping[str, str],
+    master: str,
+    cwd: str,
+    site_dirs: Sequence[str] = (),
+    package_parent: str = PACKAGE_PARENT,
+) -> str | None:
+    """``WORKER_DAEMON`` when the driver JVM is launched here
+    (``cds.launches_jvm``) for a local master and a ``python -m`` started
+    by that JVM imports `package_parent`'s package, else None (Spark's
+    stock daemon; a daemon module the workers cannot import fails every
+    task). Such a Python searches ``PYTHONPATH`` (relative entries from
+    `cwd`), then `cwd` unless ``PYTHONSAFEPATH`` is set, then `site_dirs`:
+    the workers' site-packages."""
+    if not cds.launches_jvm(gateway_live, environ):
+        return None
+    if master != "local" and not master.startswith("local["):
+        return None  # executors elsewhere have another working dir and PYTHONPATH
+    path = [p for p in environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if not environ.get("PYTHONSAFEPATH"):
+        path.append(cwd)
+    path += site_dirs
+    found = {os.path.realpath(os.path.join(cwd, p)) for p in path}
+    return WORKER_DAEMON if os.path.realpath(package_parent) in found else None
+
+
+def _worker_site_dirs() -> list[str]:
+    """This interpreter's site-packages when the workers run it
+    (``PYSPARK_PYTHON``, else ``python3``), else none."""
+    exe = shutil.which(os.environ.get("PYSPARK_PYTHON", "python3"))
+    if exe is None or os.path.realpath(exe) != os.path.realpath(sys.executable):
+        return []
+    return site.getsitepackages()
 
 
 def get_spark(
@@ -44,6 +98,11 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         **(extra_conf or {}),
     }
+    daemon = daemon_module(
+        SparkContext._gateway is not None, os.environ, master, os.getcwd(), _worker_site_dirs()
+    )
+    if daemon is not None:
+        conf.setdefault("spark.python.daemon.module", daemon)
 
     builder = (
         SparkSession.builder.appName(app_name)
