@@ -11,6 +11,7 @@ confidence) is written independently here.
 
 from __future__ import annotations
 
+import datetime
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
 
@@ -28,8 +29,22 @@ def round_half_up(x: float | None, nd: int) -> float | None:
     return float(Decimal(repr(float(x))).quantize(Decimal(f"1e-{nd}"), ROUND_HALF_UP))
 
 
-def plan_id(doc_id: str) -> int:
-    return int(doc_id[-2:]) % 2 + 1
+def plan_id(doc_id: str) -> int | None:
+    """The doc_id's last 2 characters as a number mod 2, + 1; None (no
+    agreement can match) unless they are 2 ASCII digits."""
+    last2 = doc_id[-2:]
+    if len(last2) == 2 and last2.isascii() and last2.isdigit():
+        return int(last2) % 2 + 1
+    return None
+
+
+def calendar_date(iso: str | None) -> str | None:
+    """The extracted YYYY-MM-DD date, or None when it names no calendar day
+    (the field regex accepts 31/02/2024)."""
+    try:
+        return datetime.date.fromisoformat(iso).isoformat()
+    except (TypeError, ValueError):
+        return None
 
 
 def _assemble_nom_text(n: dict) -> str:
@@ -158,7 +173,7 @@ class GoldenMatcher:
     # -- per-practice matching + pick-best (§2.9) --------------------------
 
     def match_practice(
-        self, descripcion: str, prestador_id: int | None, plan: int
+        self, descripcion: str, prestador_id: int | None, plan: int | None
     ) -> dict[str, Any]:
         cands = self._topk(
             descripcion,
@@ -249,7 +264,7 @@ class GoldenMatcher:
             "doc_id": golden_doc["doc_id"],
             "paciente_ci": f["paciente_ci"],
             "paciente_nombre": f["paciente_nombre"],
-            "fecha_orden": f["fecha_orden"],
+            "fecha_orden": calendar_date(f["fecha_orden"]),
             "prestador_id_sugerido": pm["prestador_id"],
             "prestador_confianza": pm["prestador_confianza"],
             "prestador_metodo": pm["prestador_metodo"],

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import config
+from . import per_context
 
 _WS = re.compile(r"\s+")
 
@@ -197,6 +198,35 @@ def layout_order_udf(coords: pd.Series) -> pd.Series:
     return pd.Series(out, index=coords.index, dtype=object)
 
 
+@per_context
+def pruned_layout_trees(src: str):
+    """apply_pruned_layout's trees over payload column ``src``, one per
+    projection: (the parsed blocks _blk, (their texts _btexts, the
+    layout_order_udf permutation _perm), the reading-order text). Built
+    once per SparkContext; extract.clean_spans folds the text into its own
+    projection."""
+    coords = F.transform(
+        "_blk",
+        lambda b: F.struct(
+            b["x0"].alias("x0"),
+            b["y0"].alias("y0"),
+            b["x1"].alias("x1"),
+            b["y1"].alias("y1"),
+        ),
+    )
+    joined = F.array_join(
+        F.transform("_perm", lambda i: F.get(F.col("_btexts"), i)), " ", ""
+    )
+    return (
+        layout_blocks_col(F.col(src)).alias("_blk"),
+        (
+            F.transform("_blk", lambda b: b["text"]).alias("_btexts"),
+            layout_order_udf(coords).alias("_perm"),
+        ),
+        F.trim(F.regexp_replace(joined, r"(?U)\s+", " ")),
+    )
+
+
 def apply_pruned_layout(df, src: str = "layout_json", out: str = "text"):
     """The production layout path (round 4): XY-cut reading-order text with
     only block COORDINATES crossing the Arrow boundary.
@@ -211,41 +241,28 @@ def apply_pruned_layout(df, src: str = "layout_json", out: str = "text"):
          ''), collapse (?U)\\s+ runs, trim — the same composition
          strip_boilerplate_col already relies on for Python-re parity.
 
-    Structured as DATAFRAME steps, not one column expression, on purpose:
-    the block texts must ride through the ArrowEvalPython node as a bound
-    JVM column (_btexts). A single expression would force the post-UDF
-    projection to re-evaluate from_json (the parsed struct cannot cross
-    the Python operator), doubling the parse cost — measured 14% slower
-    end-to-end than the raw-JSON UDF despite 4x less Arrow traffic.
+    Three projections, one per step, not one column expression, on
+    purpose: the parsed blocks must ride through the ArrowEvalPython node
+    as a bound JVM column (_blk). A single expression would force the
+    post-UDF projection to re-evaluate from_json (the parsed struct cannot
+    cross the Python operator), doubling the parse cost — measured 14%
+    slower end-to-end than the raw-JSON UDF despite 4x less Arrow traffic.
     CollapseProject keeps the single parse: _blk is referenced twice
     (texts + coords), and non-cheap multiply-referenced aliases are not
-    inlined.
+    inlined. The trees are built once per SparkContext (per_context).
 
-    NULL payload -> NULL text; missing/empty blocks -> ''. Byte-identical
-    to corpus/golden.py layout_to_text (pytest:
-    test_layout_blocks_path_equals_json_udf)."""
-    df = df.withColumn("_blk", layout_blocks_col(F.col(src)))
-    df = df.withColumn(
-        "_btexts", F.transform("_blk", lambda b: b["text"])
-    ).withColumn(
-        "_coords",
-        F.transform(
-            "_blk",
-            lambda b: F.struct(
-                b["x0"].alias("x0"),
-                b["y0"].alias("y0"),
-                b["x1"].alias("x1"),
-                b["y1"].alias("y1"),
-            ),
-        ),
-    ).drop("_blk")
-    df = df.withColumn("_perm", layout_order_udf(F.col("_coords"))).drop("_coords")
-    joined = F.array_join(
-        F.transform("_perm", lambda i: F.get(F.col("_btexts"), i)), " ", ""
+    ``out`` replaces a column of that name in place, else is appended;
+    every other column of ``df`` passes through. NULL payload -> NULL
+    text; missing/empty blocks -> ''. Byte-identical to corpus/golden.py
+    layout_to_text (pytest: test_layout_blocks_path_equals_json_udf)."""
+    cols = df.columns
+    blk, texts_and_perm, text = pruned_layout_trees(src)
+    keep = [text.alias(out) if c == out else c for c in cols]
+    return (
+        df.select("*", blk)
+        .select("*", *texts_and_perm)
+        .select(*keep, *([] if out in cols else [text.alias(out)]))
     )
-    return df.withColumn(
-        out, F.trim(F.regexp_replace(joined, r"(?U)\s+", " "))
-    ).drop("_perm", "_btexts")
 
 
 LAYOUT_ERR_TYPE = T.StructType(

@@ -27,6 +27,14 @@ Scale design (10^12 docs / 100 TB):
     per-doc field extraction (many-regex-per-row, measured faster in
     compiled re than as a catalyst expression tree).
 
+Plan build (driver cost, paid on every call): each step is one DataFrame
+projection, never a withColumn/drop chain, because every DataFrame step
+re-runs JVM analysis (3-9 ms each). The constant expression trees (strip,
+layout, reassembly, fields) are built once per SparkContext
+(functions.per_context), because every F.* call is one py4j round trip or
+more; a warm run_previsacion build makes about 280 round trips instead of
+about 2,450.
+
 Reference parity: replaces the GPT-4o Vision + pdftoppm worker loop
 (/root/reference/src/workers/previsacion.worker.js:18-227) with deterministic
 vectorized operators.
@@ -37,20 +45,56 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import config
+from ..functions import per_context
 from ..functions.extraction_udfs import (
     extract_fields_udf,
+    layout_text_err_udf,
+    pruned_layout_trees,
     strip_boilerplate_col,
 )
 
 SPAN_COLS = ["doc_id", "kind", "text", "media_ref", "offset"]
 
 
+@per_context
+def _exploded_cols():
+    return F.col("doc_id"), F.inline("spans")
+
+
 def exploded_spans(docs: DataFrame) -> DataFrame:
-    """documents_interleaved -> one row per span (narrow transform)."""
-    return docs.select(
-        "doc_id",
-        F.explode("spans").alias("s"),
-    ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
+    """documents_interleaved -> one row per span (narrow transform):
+    (doc_id, kind, text, media_ref, offset)."""
+    return docs.select(*_exploded_cols())
+
+
+@per_context
+def _span_trees(with_errors: bool) -> dict:
+    """clean_spans' constant trees: the kind predicates, the payload
+    projection of ``media``, and the output projections of the text and
+    media branches."""
+
+    def span_cols(text, err):
+        cols = [text.alias(c) if c == "text" else F.col(c) for c in SPAN_COLS]
+        return cols + ([err.alias("_err")] if with_errors else [])
+
+    if with_errors:
+        # quarantine path (Q3): per-row error capture needs the raw payload
+        # in Python, so it keeps the JSON Arrow UDF; its two fields read one
+        # evaluation (ExtractPythonUDFs merges equal UDF calls)
+        lt = layout_text_err_udf(F.col("layout_json"))
+        media = span_cols(lt["text"], lt["error"])
+    else:
+        media = span_cols(pruned_layout_trees("layout_json")[2], None)
+    return {
+        "is_text": F.col("kind") == "text",
+        "is_media": F.col("kind") == "media",
+        "text": span_cols(
+            strip_boilerplate_col(F.col("text")), F.lit(None).cast("string")
+        ),
+        "payload": [F.col("media_ref"), F.col("layout_json")],
+        "media": media,
+    }
 
 
 def clean_spans(
@@ -66,55 +110,43 @@ def clean_spans(
     span whose layout payload fails to parse carries the error string
     instead of failing the task; text spans always have ``_err`` NULL.
     """
-    from ..functions.extraction_udfs import (
-        apply_pruned_layout,
-        layout_text_err_udf,
-    )
-
+    t = _span_trees(with_errors)
     spans = exploded_spans(docs)
 
     # JVM-native density strip (strip_boilerplate_col): the text-span branch
     # carries NO Python stage at all — whole-stage codegen end to end.
     # pytest asserts equality with the corpus/golden.py oracle.
-    text_part = spans.filter(F.col("kind") == "text").withColumn(
-        "text", strip_boilerplate_col(F.col("text"))
-    )
-    if with_errors:
-        text_part = text_part.withColumn("_err", F.lit(None).cast("string"))
-    cols = SPAN_COLS + (["_err"] if with_errors else [])
+    text_part = spans.filter(t["is_text"]).select(*t["text"])
 
-    media_part = (
-        spans.filter(F.col("kind") == "media")
-        .drop("text")
-        .join(media.select("media_ref", "layout_json"), "media_ref", "left")
+    media_part = spans.filter(t["is_media"]).join(
+        media.select(*t["payload"]), "media_ref", "left"
     )
-    if with_errors:
-        # quarantine path (Q3): per-row error capture needs the raw payload
-        # in Python, so it keeps the JSON Arrow UDF
-        media_part = (
-            media_part.withColumn("_lt", layout_text_err_udf(F.col("layout_json")))
-            .withColumn("text", F.col("_lt.text"))
-            .withColumn("_err", F.col("_lt.error"))
-            .drop("_lt", "layout_json")
-        )
-    else:
+    if not with_errors:
         # pruned layout path: JVM from_json decodes the payload once, ONLY
         # block coordinates cross the Arrow boundary and a permutation
-        # comes back (apply_pruned_layout) — the block text never ships to
-        # Python in either direction, cutting the map stage's Python
-        # traffic ~4x sent / ~12x returned (measured, BENCH/BASELINE.md
-        # round 4) and removing the per-row json.loads worker-side. Byte
-        # parity with the golden XY-cut is pytest-asserted.
-        media_part = apply_pruned_layout(media_part, src="layout_json").drop(
-            "layout_json"
-        )
+        # comes back (apply_pruned_layout's projections) — the block text
+        # never ships to Python in either direction, cutting the map
+        # stage's Python traffic ~4x sent / ~12x returned (measured,
+        # BENCH/BASELINE.md round 4) and removing the per-row json.loads
+        # worker-side. Byte parity with the golden XY-cut is pytest-asserted.
+        blk, texts_and_perm, _ = pruned_layout_trees("layout_json")
+        media_part = media_part.select("*", blk).select("*", *texts_and_perm)
 
     # media branch FIRST: a union stage schedules partitions in branch
     # order, and the media tasks are the slow (Python layout-parse) ones —
     # starting them first fills the stage tail with short JVM text tasks
     # instead of stragglers (LPT scheduling). Row order is irrelevant:
     # reassembly sorts by offset.
-    return media_part.select(*cols).unionByName(text_part.select(*cols))
+    return media_part.select(*t["media"]).unionByName(text_part)
+
+
+@per_context
+def _ordered_cols():
+    w = Window.partitionBy("doc_id").orderBy("offset")
+    return [
+        F.col("doc_id"), F.col("kind"), F.col("text"), F.col("media_ref"),
+        F.row_number().over(w).cast("int").alias("order"),
+    ]
 
 
 def ordered_spans(docs: DataFrame, media: DataFrame) -> DataFrame:
@@ -125,12 +157,7 @@ def ordered_spans(docs: DataFrame, media: DataFrame) -> DataFrame:
     the remaining struct fields in reassembled_docs but by arrival order
     here; don't feed malformed docs).
     """
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    return (
-        clean_spans(docs, media)
-        .withColumn("order", F.row_number().over(w).cast("int"))
-        .drop("offset")
-    )
+    return clean_spans(docs, media).select(*_ordered_cols())
 
 
 def reassembled_docs(docs: DataFrame, media: DataFrame) -> DataFrame:
@@ -143,13 +170,11 @@ def reassembled_docs(docs: DataFrame, media: DataFrame) -> DataFrame:
     return _reassemble_cleaned(clean_spans(docs, media))
 
 
-def _finish_reassembly(agg: DataFrame) -> DataFrame:
-    """(doc_id, _sorted) -> (doc_id, spans, full_text).
-
-    `_sorted` is the offset-ordered array<struct<offset,kind,text,media_ref>>;
-    this derives the 1-based `order` ranks and the space-joined full_text.
-    Shared tail of the shuffle, salted and co-located reassembly variants.
-    """
+@per_context
+def _reassembly_trees() -> dict:
+    """The reassembly and quarantine trees: the groupBy key and aggregates,
+    _finish_reassembly's (doc_id, spans, full_text) projection, the
+    clean/quarantined split predicates and the quarantine projections."""
     spans = F.transform(
         "_sorted",
         lambda s, i: F.struct(
@@ -166,19 +191,39 @@ def _finish_reassembly(agg: DataFrame) -> DataFrame:
         ),
         " ",
     )
-    return agg.select(
-        "doc_id", spans.alias("spans"), full_text.alias("full_text")
-    )
+    return {
+        "doc_id": F.col("doc_id"),
+        "sorted": F.sort_array(
+            F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
+        ).alias("_sorted"),
+        "errors": F.collect_list(
+            F.when(
+                F.col("_err").isNotNull(),
+                F.struct("media_ref", F.col("_err").alias("error")),
+            )
+        ).alias("_errors"),
+        "finish": [F.col("doc_id"), spans.alias("spans"), full_text.alias("full_text")],
+        "clean": F.size("_errors") == 0,
+        "quarantined": F.size("_errors") > 0,
+        "quarantine_cols": [F.col("doc_id"), F.col("_errors")],
+        "quarantine_rows": [F.col("doc_id"), F.inline("_errors")],
+    }
+
+
+def _finish_reassembly(agg: DataFrame) -> DataFrame:
+    """(doc_id, _sorted) -> (doc_id, spans, full_text).
+
+    `_sorted` is the offset-ordered array<struct<offset,kind,text,media_ref>>;
+    this derives the 1-based `order` ranks and the space-joined full_text.
+    Shared tail of the shuffle, salted and co-located reassembly variants.
+    """
+    return agg.select(*_reassembly_trees()["finish"])
 
 
 def _reassemble_cleaned(cleaned: DataFrame) -> DataFrame:
     """groupBy(doc_id) + sort_array reassembly of a cleaned span frame."""
-    agg = cleaned.groupBy("doc_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
-        ).alias("_sorted")
-    )
-    return _finish_reassembly(agg)
+    t = _reassembly_trees()
+    return _finish_reassembly(cleaned.groupBy(t["doc_id"]).agg(t["sorted"]))
 
 
 def reassembled_docs_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
@@ -230,10 +275,8 @@ def reassembled_docs_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
     media_lists = media.groupBy("doc_id").agg(
         F.collect_list(F.struct("media_ref", "layout_json")).alias("_mraw")
     )
-    joined = (
-        docs.join(media_lists.hint("merge"), "doc_id", "left")
-        .withColumn("_mtxt", F.map_from_entries(layout_entries_udf(F.col("_mraw"))))
-        .drop("_mraw")
+    joined = docs.join(media_lists.hint("merge"), "doc_id", "left").select(
+        "*", F.map_from_entries(layout_entries_udf(F.col("_mraw"))).alias("_mtxt")
     )
     cleaned_arr = F.transform(
         "spans",
@@ -284,17 +327,23 @@ def extract_documents_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
     return _with_fields(reassembled_docs_colocated(docs, media))
 
 
+@per_context
+def _fields_cols():
+    """_with_fields' projection: the input columns, fields and the review
+    flag, which reads the same (merged) evaluation of the fields UDF."""
+    fields = extract_fields_udf(F.col("full_text"))
+    return [
+        F.col("*"),
+        fields.alias("fields"),
+        (fields["confianza_extraccion"] < F.lit(config.REVIEW_THRESHOLD)).alias(
+            "requiere_revision"
+        ),
+    ]
+
+
 def _with_fields(assembled: DataFrame) -> DataFrame:
     """Shared tail: structured-field extraction + review flag."""
-    from .. import config
-
-    with_fields = assembled.withColumn(
-        "fields", extract_fields_udf(F.col("full_text"))
-    )
-    return with_fields.withColumn(
-        "requiere_revision",
-        F.col("fields.confianza_extraccion") < F.lit(config.REVIEW_THRESHOLD),
-    )
+    return assembled.select(*_fields_cols())
 
 
 def reassembled_docs_with_errors(docs: DataFrame, media: DataFrame) -> DataFrame:
@@ -304,18 +353,9 @@ def reassembled_docs_with_errors(docs: DataFrame, media: DataFrame) -> DataFrame
     `_sorted` is the offset-sorted span list (as in _reassemble_cleaned);
     `_errors` is array<struct<media_ref, error>> of the doc's failed spans.
     collect_list drops NULLs, so a clean doc gets an empty array."""
+    t = _reassembly_trees()
     cleaned = clean_spans(docs, media, with_errors=True)
-    return cleaned.groupBy("doc_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
-        ).alias("_sorted"),
-        F.collect_list(
-            F.when(
-                F.col("_err").isNotNull(),
-                F.struct("media_ref", F.col("_err").alias("error")),
-            )
-        ).alias("_errors"),
-    )
+    return cleaned.groupBy(t["doc_id"]).agg(t["sorted"], t["errors"])
 
 
 def split_quarantine(per_doc: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -324,14 +364,15 @@ def split_quarantine(per_doc: DataFrame) -> tuple[DataFrame, DataFrame]:
     results are extract_documents rows for the docs with no failed span;
     quarantined docs are (doc_id, _errors) for the rest, one row per doc
     (quarantine_rows flattens them to the quarantine table's rows)."""
-    results = _with_fields(_finish_reassembly(per_doc.filter(F.size("_errors") == 0)))
-    quarantined = per_doc.filter(F.size("_errors") > 0).select("doc_id", "_errors")
+    t = _reassembly_trees()
+    results = _with_fields(_finish_reassembly(per_doc.filter(t["clean"])))
+    quarantined = per_doc.filter(t["quarantined"]).select(*t["quarantine_cols"])
     return results, quarantined
 
 
 def quarantine_rows(quarantined: DataFrame) -> DataFrame:
     """Quarantined docs -> one (doc_id, media_ref, error) row per failed span."""
-    return quarantined.select("doc_id", F.inline("_errors"))
+    return quarantined.select(*_reassembly_trees()["quarantine_rows"])
 
 
 def extract_documents_quarantine(
@@ -378,7 +419,7 @@ def reassembled_docs_salted(
     cleaned = clean_spans(docs, media)
 
     phase1 = (
-        cleaned.withColumn("_salt", F.pmod(F.hash("offset"), F.lit(n_salts)))
+        cleaned.select("*", F.pmod(F.hash("offset"), F.lit(n_salts)).alias("_salt"))
         .groupBy("doc_id", "_salt")
         .agg(
             F.sort_array(

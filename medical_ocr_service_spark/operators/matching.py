@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import config
+from ..functions import per_context
 from ..functions import similarity as sim
 
 # ---------------------------------------------------------------------------
@@ -219,33 +220,54 @@ def _by_id(rows: list, key: str) -> list:
     return sorted(rows, key=lambda r: (r[key] is not None, r[key]))
 
 
+@per_context
+def _dimension_trees() -> dict:
+    """The dimension projections' trees: the active/vigente predicates and
+    the columns each collect reads."""
+    return {
+        "activo": F.col("estado") == "ACTIVO",
+        "vigente": F.col("vigente") == "SI",
+        "prestador": [
+            F.col("id_prestador"),
+            F.col("ruc"),
+            F.col("registro_profesional"),
+            F.col("nombre_fantasia"),
+            F.concat_ws(
+                " ", "nombre_fantasia", "raz_soc_nombre", "registro_profesional", "tipo"
+            ).alias("etext"),
+        ],
+        "nomenclador": [
+            F.col("id_nomenclador"),
+            F.col("descripcion"),
+            F.concat_ws(
+                " ",
+                "especialidad",
+                "descripcion",
+                "desc_nomenclador",
+                F.array_join("sinonimos", " "),
+                F.array_join("palabras_clave", " "),
+            ).alias("etext"),
+        ],
+        "agreement": [
+            F.col(c)
+            for c in (
+                "id_nomenclador", "prest_id_prestador", "plan_id_plan",
+                *LATEST_AGREEMENT_ORDER,
+            )
+        ],
+    }
+
+
 def _prestador_space(prestadores: DataFrame) -> DataFrame:
     """Active prestadores, projected to what the provider cascade reads."""
-    return prestadores.filter(F.col("estado") == "ACTIVO").select(
-        "id_prestador",
-        "ruc",
-        "registro_profesional",
-        "nombre_fantasia",
-        F.concat_ws(
-            " ", "nombre_fantasia", "raz_soc_nombre", "registro_profesional", "tipo"
-        ).alias("etext"),
-    )
+    t = _dimension_trees()
+    return prestadores.filter(t["activo"]).select(*t["prestador"])
 
 
 def _nomenclador_space(nomencladores: DataFrame) -> DataFrame:
     """Active nomencladores -> (id_nomenclador, descripcion, embedding text)."""
-    return nomencladores.filter(F.col("estado") == "ACTIVO").select(
-        "id_nomenclador",
-        "descripcion",
-        F.concat_ws(
-            " ",
-            "especialidad",
-            "descripcion",
-            "desc_nomenclador",
-            F.array_join("sinonimos", " "),
-            F.array_join("palabras_clave", " "),
-        ).alias("etext"),
-    )
+    t = _dimension_trees()
+    return nomencladores.filter(t["activo"]).select(*t["nomenclador"])
 
 
 def _nomenclador_lists(rows: list) -> tuple[list, list, list]:
@@ -342,15 +364,8 @@ def collect_dimensions(
     cap counts vigente rows, not latest ones. Prestadores and nomencladores
     above MAX_BROADCAST_DIM_ROWS raise (_guarded_collect)."""
     cap = config.FAST_MATCH_MAX_AGREEMENTS
-    agreements = (
-        acuerdos.filter(F.col("vigente") == "SI")
-        .select(
-            "id_nomenclador", "prest_id_prestador", "plan_id_plan",
-            *LATEST_AGREEMENT_ORDER,
-        )
-        .limit(cap + 1)
-        .collect()
-    )
+    t = _dimension_trees()
+    agreements = acuerdos.filter(t["vigente"]).select(*t["agreement"]).limit(cap + 1).collect()
     return (
         _guarded_collect(_prestador_space(prestadores), "prestador space"),
         _guarded_collect(_nomenclador_space(nomencladores), "nomenclador candidate space"),
@@ -732,17 +747,25 @@ def match_documents(
     )
 
 
+@per_context
+def _explode_match_cols():
+    return (
+        [
+            F.col("doc_id"), F.col("prestador_id"), F.col("plan_id_plan"),
+            F.explode(F.arrays_zip("practicas", "matches")).alias("z"),
+        ],
+        [
+            F.col("doc_id"),
+            *(F.col(f"z.practicas.{c}") for c in ("item", "descripcion", "cantidad", "confianza")),
+            F.col("prestador_id"),
+            F.col("plan_id_plan"),
+            F.col("z.matches.*"),
+        ],
+    )
+
+
 def explode_matches(matched: DataFrame) -> DataFrame:
     """match_documents output -> one row per practice, with the columns of
     match_practices: each practice zipped with its pick by position."""
-    z = F.explode(F.arrays_zip("practicas", "matches")).alias("z")
-    return matched.select("doc_id", "prestador_id", "plan_id_plan", z).select(
-        "doc_id",
-        "z.practicas.item",
-        "z.practicas.descripcion",
-        "z.practicas.cantidad",
-        "z.practicas.confianza",
-        "prestador_id",
-        "plan_id_plan",
-        "z.matches.*",
-    )
+    zipped, flat = _explode_match_cols()
+    return matched.select(*zipped).select(*flat)

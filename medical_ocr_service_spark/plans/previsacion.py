@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import config
+from ..functions import per_context
 from ..operators import extract, matching
 
 DOC_FIELDS = (
@@ -28,8 +29,76 @@ DOC_FIELDS = (
 
 def plan_id_col() -> F.Column:
     """Deterministic plan assignment (stand-in for order metadata.plan_id,
-    ordenes-batch.routes.js:44): last 2 digits of doc_id mod 2, + 1."""
-    return (F.substring(F.col("doc_id"), -2, 2).cast("int") % 2 + 1).alias("plan_id_plan")
+    ordenes-batch.routes.js:44): the doc_id's last 2 characters as a number
+    mod 2, + 1. NULL unless those 2 characters are ASCII digits (a doc_id
+    such as "a" or "order-xy"): a NULL plan matches no agreement, and an
+    ANSI cast of a non-number would fail the whole job instead."""
+    last2 = F.substring(F.col("doc_id"), -2, 2)
+    return F.when(last2.rlike("^[0-9]{2}$"), last2.cast("int") % 2 + 1).alias(
+        "plan_id_plan"
+    )
+
+
+@per_context
+def _doc_field_cols():
+    return [
+        F.col("doc_id"), *[F.col(f"fields.{c}").alias(c) for c in DOC_FIELDS], plan_id_col()
+    ]
+
+
+@per_context
+def _header_cols(per_doc_matches: bool):
+    """The header projection. With ``per_doc_matches`` it reads the match
+    array of match_documents' frame (n_practicas and the mean practice
+    similarity, summed in item order like the golden); otherwise the
+    n_practicas and _match_conf columns joined from match_practices'
+    per-doc stats."""
+    if per_doc_matches:
+        n = F.size("matches")
+        sims = F.transform("matches", lambda m: F.coalesce(m["similitud"], F.lit(0.0)))
+        n_practicas = n.cast("long")
+        match_conf = F.when(
+            n > 0, F.round(F.aggregate(sims, F.lit(0.0), lambda a, x: a + x) / n, 4)
+        )
+    else:
+        n_practicas, match_conf = F.col("n_practicas"), F.col("_match_conf")
+    confianza_general = F.round(
+        (
+            F.col("confianza_extraccion")
+            + F.coalesce(F.col("prestador_confianza"), F.lit(0.0))
+            + F.coalesce(match_conf, F.lit(0.0))
+        )
+        / F.lit(3.0),
+        2,
+    )
+    return [
+        *map(F.col, ("doc_id", "paciente_ci", "paciente_nombre")),
+        # an impossible date the extraction regex accepts (31/02/2024)
+        # reads NULL instead of failing the job under ANSI mode
+        F.try_to_date(F.col("fecha_orden")).alias("fecha_orden"),
+        F.col("prestador_id").alias("prestador_id_sugerido"),
+        *map(F.col, (
+            "prestador_confianza", "prestador_metodo", "medico_matricula",
+            "diagnostico_texto", "diagnostico_codigo_cie", "urgente",
+        )),
+        F.coalesce(n_practicas, F.lit(0)).alias("n_practicas"),
+        F.col("confianza_extraccion"),
+        confianza_general.alias("confianza_general"),
+        (confianza_general < F.lit(config.REVIEW_THRESHOLD)).alias("requiere_revision"),
+        F.lit("PENDIENTE").alias("estado"),
+    ]
+
+
+@per_context
+def _detail_cols():
+    return [
+        F.col("doc_id"), F.col("item"), F.col("descripcion").alias("descripcion_original"),
+        *map(F.col, (
+            "cantidad", "nomenclador_id_sugerido", "nomenclador_descripcion",
+            "nomenclador_confianza", "similitud", "matches_alternativos",
+            "tiene_acuerdo", "id_acuerdo", "precio_acuerdo", "alerta",
+        )),
+    ]
 
 
 def run_previsacion(
@@ -62,6 +131,14 @@ def run_previsacion(
       per-doc stats from a groupBy joined back to the header. This path
       collects the prestadores and nomencladores a second time.
 
+    The build is driver work on every call: one projection per step (the
+    doc fields, the header with its match stats, the detail) and the
+    constant expression trees built once per SparkContext
+    (functions.per_context). A doc_id whose last 2 characters are not
+    digits gets a NULL plan (plan_id_col) and an impossible date a NULL
+    fecha_orden, so one malformed value cannot fail the job under ANSI
+    mode.
+
     ``tenant_id`` (P1, reference matching.service.js:25-29 / migration_
     multitenant.sql): when given, the whole run is scoped to ONE tenant —
     docs AND every dimension are filtered up front, exactly like the
@@ -75,9 +152,7 @@ def run_previsacion(
         acuerdos = acuerdos.filter(F.col("tenant_id") == tenant_id)
 
     extracted = extract.extract_documents(docs, media)
-    doc_fields = extracted.select(
-        "doc_id", *[F.col(f"fields.{c}").alias(c) for c in DOC_FIELDS], plan_id_col()
-    )
+    doc_fields = extracted.select(*_doc_field_cols())
 
     prest_rows, nom_rows, agreements = matching.collect_dimensions(
         prestadores, nomencladores, acuerdos
@@ -87,21 +162,12 @@ def run_previsacion(
     # without persistence the full extraction + matching lineage recomputes
     # once per output branch. MEMORY_AND_DISK: spill-safe at scale; callers
     # may unpersist after writing both tables.
-    if agreements is not None:
-        matched = matching.match_documents(
+    per_doc_matches = agreements is not None
+    if per_doc_matches:
+        stats = matching.match_documents(
             doc_fields, prest_rows, nom_rows, agreements
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        det = matching.explode_matches(matched)
-        # per-doc practice-match confidence mean (A13 component), summed in
-        # item order like the golden
-        sims = F.transform(
-            "matches", lambda m: F.coalesce(m["similitud"], F.lit(0.0))
-        )
-        n = F.size("matches")
-        stats = matched.withColumn("n_practicas", n.cast("long")).withColumn(
-            "_match_conf",
-            F.when(n > 0, F.round(F.aggregate(sims, F.lit(0.0), lambda a, x: a + x) / n, 4)),
-        )
+        det = matching.explode_matches(stats)
     else:
         with_prest = matching.match_prestador(doc_fields, prestadores).persist(
             StorageLevel.MEMORY_AND_DISK
@@ -126,62 +192,9 @@ def run_previsacion(
         )
         stats = with_prest.join(det_stats, "doc_id", "left")
 
-    header = (
-        stats.withColumn(
-            "confianza_general",
-            F.round(
-                (
-                    F.col("confianza_extraccion")
-                    + F.coalesce(F.col("prestador_confianza"), F.lit(0.0))
-                    + F.coalesce(F.col("_match_conf"), F.lit(0.0))
-                )
-                / F.lit(3.0),
-                2,
-            ),
-        )
-        .withColumn(
-            "requiere_revision",
-            F.col("confianza_general") < F.lit(config.REVIEW_THRESHOLD),
-        )
-        .select(
-            "doc_id",
-            "paciente_ci",
-            "paciente_nombre",
-            F.to_date("fecha_orden").alias("fecha_orden"),
-            F.col("prestador_id").alias("prestador_id_sugerido"),
-            "prestador_confianza",
-            "prestador_metodo",
-            "medico_matricula",
-            "diagnostico_texto",
-            "diagnostico_codigo_cie",
-            "urgente",
-            F.coalesce("n_practicas", F.lit(0)).alias("n_practicas"),
-            "confianza_extraccion",
-            "confianza_general",
-            "requiere_revision",
-            F.lit("PENDIENTE").alias("estado"),
-        )
-    )
-    if tenant_id is not None:
-        # thread the owning tenant onto the header so downstream feedback can
-        # enforce ownership (reference feedback.routes.js:63-69 re-checks
-        # `WHERE id=$1 AND tenant_id=$2` before any mutation)
-        header = header.withColumn("tenant_id", F.lit(tenant_id))
-
-    detail = det.select(
-        "doc_id",
-        "item",
-        F.col("descripcion").alias("descripcion_original"),
-        "cantidad",
-        "nomenclador_id_sugerido",
-        "nomenclador_descripcion",
-        "nomenclador_confianza",
-        "similitud",
-        "matches_alternativos",
-        "tiene_acuerdo",
-        "id_acuerdo",
-        "precio_acuerdo",
-        "alerta",
-    )
-
-    return header, detail
+    # thread the owning tenant onto the header so downstream feedback can
+    # enforce ownership (reference feedback.routes.js:63-69 re-checks
+    # `WHERE id=$1 AND tenant_id=$2` before any mutation)
+    tenant = [] if tenant_id is None else [F.lit(tenant_id).alias("tenant_id")]
+    header = stats.select(*_header_cols(per_doc_matches), *tenant)
+    return header, det.select(*_detail_cols())

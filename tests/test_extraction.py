@@ -293,6 +293,44 @@ def test_layout_blocks_path_equals_json_udf(spark, loaded):
     assert byref["xempty"] == ""
 
 
+def test_pruned_layout_parses_each_payload_once(loaded):
+    """clean_spans' pruned layout path evaluates from_json once per payload
+    and runs one ArrowEvalPython node, for layout_order_udf: a plan that
+    re-parsed the payload above the Python node was measured 14% slower
+    end to end than the raw-JSON UDF."""
+    docs, media, _, _ = loaded
+    plan = extract.clean_spans(docs, media)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+    evals = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+    assert len(evals) == 1 and "layout_order_udf(" in evals[0], plan
+
+
+def test_per_context_memo(spark, monkeypatch):
+    """The package's constant trees are built once per SparkContext: the
+    same Column object while one context is active, a new one under
+    another context (a stand-in for a restarted session; no second JVM)."""
+    from pyspark import SparkContext
+
+    from medical_ocr_service_spark.functions.extraction_udfs import pruned_layout_trees
+
+    first = pruned_layout_trees("layout_json")[2]
+    assert pruned_layout_trees("layout_json")[2] is first
+    assert pruned_layout_trees("payload")[2] is not first
+
+    class Restarted:
+        """Another SparkContext object on the same gateway."""
+
+        def __getattr__(self, name):
+            return getattr(spark.sparkContext, name)
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", Restarted())
+    other = pruned_layout_trees("layout_json")[2]
+    assert other is not first
+    assert pruned_layout_trees("layout_json")[2] is other
+    monkeypatch.undo()
+    assert pruned_layout_trees("layout_json")[2] is not other
+
+
 def test_strip_boilerplate_col_equals_udf(spark):
     """The JVM higher-order-function strip (strip_boilerplate_col) must agree
     byte-for-byte with the golden oracle (corpus/golden.py) — including

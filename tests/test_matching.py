@@ -390,6 +390,96 @@ def test_tenant_isolation(spark, corpus_dir):
     assert sugg <= a_nom
 
 
+def _previsacion_rows(spark, docs, media):
+    """run_previsacion over in-memory corpus rows on generator dimensions
+    -> (header rows by doc_id, detail rows by (doc_id, item))."""
+    prest, nom, ac = generator.dims_dataframes(spark)
+    header, detail = previsacion.run_previsacion(
+        spark.createDataFrame(
+            [(d["doc_id"], [tuple(s.values()) for s in d["spans"]]) for d in docs],
+            "doc_id string, spans array<struct<kind:string,text:string,"
+            "media_ref:string,offset:int>>",
+        ),
+        spark.createDataFrame(
+            [(m["media_ref"], m["layout_json"]) for m in media],
+            "media_ref string, layout_json string",
+        ),
+        prest, nom, ac,
+    )
+    try:
+        return (
+            {r["doc_id"]: r for r in header.collect()},
+            {(r["doc_id"], r["item"]): r for r in detail.collect()},
+        )
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_malformed_doc_id_and_date_read_null(spark):
+    """Under ANSI mode one malformed value must not fail the whole job: a
+    doc_id whose last 2 characters are not ASCII digits gets a NULL plan
+    (no agreement matches), and an impossible date the field regex accepts
+    (31/02/2024) a NULL fecha_orden. Header and detail equal the golden
+    matcher's, and every other doc's rows equal those of the unmodified
+    corpus."""
+    import re
+
+    docs, media = generator.synthesize_corpus(
+        40, seed=config.CORPUS_SEED, pathological=False
+    )
+    renamed = {"doc00000003": "a", "doc00000004": "order-xy", "doc00000005": "doc-1"}
+    date = re.compile(r"\b\d{2}/\d{2}/\d{4}\b")
+    bad_date = [
+        d["doc_id"]
+        for d in docs[6:]
+        if any(s["text"] and date.search(s["text"]) for s in d["spans"])
+    ][:2]
+
+    def break_date(d, s):
+        if d["doc_id"] in bad_date and s["text"]:
+            return dict(s, text=date.sub("31/02/2024", s["text"]))
+        return s
+
+    malformed = [
+        dict(
+            d,
+            doc_id=renamed.get(d["doc_id"], d["doc_id"]),
+            spans=[break_date(d, s) for s in d["spans"]],
+        )
+        for d in docs
+    ]
+    touched = set(renamed.values()) | set(bad_date)
+
+    extracted = golden.extract_corpus(malformed, media)
+    impossible = {g["doc_id"] for g in extracted if g["fields"]["fecha_orden"] == "2024-02-31"}
+    assert len(bad_date) == 2 and impossible == set(bad_date)
+    matcher = GoldenMatcher(generator.synthesize_dimensions(seed=config.CORPUS_SEED))
+    out = [matcher.previsacion(g) for g in extracted]
+    headers, details = _previsacion_rows(spark, malformed, media)
+
+    ours = pd.DataFrame([r.asDict() for r in headers.values()])
+    ours["fecha_orden"] = ours["fecha_orden"].map(lambda d: None if d is None else str(d))
+    _cmp(ours, pd.DataFrame([o["header"] for o in out]), ["doc_id"], "header")
+    no_alts = lambda d: {k: v for k, v in d.items() if k != "matches_alternativos"}  # noqa: E731
+    _cmp(
+        pd.DataFrame([no_alts(r.asDict()) for r in details.values()]),
+        pd.DataFrame([no_alts(d) for o in out for d in o["details"]]),
+        ["doc_id", "item"],
+        "detail",
+    )
+    assert all(headers[d]["fecha_orden"] is None for d in bad_date)
+    no_plan = [r for (d, _), r in details.items() if d in renamed.values()]
+    assert no_plan and not any(r["tiene_acuerdo"] for r in no_plan)
+
+    clean_headers, clean_details = _previsacion_rows(spark, docs, media)
+    assert {d: r for d, r in headers.items() if d not in touched} == {
+        d: r for d, r in clean_headers.items() if d not in touched and d not in renamed
+    }
+    assert {k: r for k, r in details.items() if k[0] not in touched} == {
+        k: r for k, r in clean_details.items() if k[0] not in touched and k[0] not in renamed
+    }
+
+
 def test_embed_generalizes_to_1536d():
     """D10: the deterministic vectorizer generalizes to the reference's
     1536-d width (embedding.service.js text-embedding-3-small) — dim is a
@@ -482,6 +572,32 @@ def test_previsacion_plan_build_runs_at_most_one_job(
         plan = qe.executedPlan().treeString()
         for bad in ("Exchange", "Python", "ExistingRDD"):
             assert bad not in plan, plan
+
+
+def test_previsacion_warm_build_round_trips(spark, corpus_dir, monkeypatch):
+    """A warm run_previsacion build (not the first in the session) makes at
+    most 1,000 py4j round trips: one projection per step, and the constant
+    expression trees come from the per-SparkContext memo instead of being
+    rebuilt call by call (about 2,450 round trips when they were).
+    Memory-release commands ("m") are not counted: the Python GC sends
+    them whenever it runs."""
+    docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
+    prest, nom, ac = generator.dims_dataframes(spark)
+    previsacion.run_previsacion(docs, media, prest, nom, ac)
+    client = spark.sparkContext._gateway._gateway_client
+    send, commands = client.send_command, []
+
+    def counted(command, *args, **kwargs):
+        commands.append(command[:1])
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    previsacion.run_previsacion(docs, media, prest, nom, ac)
+    monkeypatch.undo()
+    trips = sum(c != "m" for c in commands)
+    assert 0 < trips <= 1000, trips
+    spark.catalog.clearCache()
 
 
 def test_driver_latest_pick_equals_latest_agreements(spark):
