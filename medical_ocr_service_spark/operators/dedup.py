@@ -8,8 +8,7 @@ All JVM-side DataFrame ops — no Python in the hot path:
   * minhash_signatures / minhash_lsh_pairs — word-shingle MinHash + banded LSH
     candidate generation + exact Jaccard verification;
   * simhash_signatures / simhash_near_pairs — 64-bit SimHash + pigeonhole
-    16-bit band blocking + hamming verification via bit_count(xor);
-  * ngram_jaccard        — exact n-gram Jaccard for a pair table (verifier).
+    16-bit band blocking + hamming verification via bit_count(xor).
 
 Scale notes (100 TB):
   * shingling/explode is narrow; the only shuffles are groupBy(doc) for
@@ -307,33 +306,6 @@ def banded_hamming_pairs(
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Exact n-gram Jaccard (pair verifier / small-scale direct dedup)
-# ---------------------------------------------------------------------------
-
-def ngram_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, k: int = 3, threshold: float = 0.5
-) -> DataFrame:
-    """All-pairs n-gram Jaccard (cross join — use only on bounded inputs or
-    downstream of LSH blocking)."""
-    sh = df.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), k).alias("sh")
-    )
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn(
-            "jaccard",
-            F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(0.0),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
 
 

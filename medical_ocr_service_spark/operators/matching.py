@@ -24,19 +24,17 @@ guarded driver collect each (the active prestadores, the active
 nomencladores, the vigente agreements; on local dimensions such as
 generator.dims_dataframes' they fold into LocalRelations and run no Spark
 job), and ship in the function's closure — the broadcast-dimension
-pattern, with no dimension shuffle and no join. The latest agreement per
-key is picked on the driver. Dims are small by contract
-(≤ MAX_BROADCAST_DIM_ROWS). For agreement tables too large for a closure
-dict (more than FAST_MATCH_MAX_AGREEMENTS vigente rows), match_practices
-is the explode + broadcast-join + window matcher over exploded practices
-(same rows; pytest asserts).
+pattern, with no dimension shuffle and no join (PySpark ships a closure
+over 1 MB as a broadcast variable). The latest agreement per key is
+picked on the driver. Dims are small by contract: each collect raises
+past MAX_BROADCAST_DIM_ROWS instead of running the driver out of memory.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -89,20 +87,6 @@ def embed_prestadores(prest: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Vectorized top-k candidate scoring (J3/J4 + T1/T2 + F12/F13/F14)
 # ---------------------------------------------------------------------------
-
-CANDIDATE_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("rank", T.IntegerType()),
-            T.StructField("id", T.IntegerType()),
-            T.StructField("descripcion", T.StringType()),
-            T.StructField("sim_vec", T.DoubleType()),
-            T.StructField("sim_trgm", T.DoubleType()),
-            T.StructField("similitud", T.DoubleType()),
-        ]
-    )
-)
-
 
 def make_topk_scorer(
     ids: list[int],
@@ -175,24 +159,6 @@ def make_topk_scorer(
     return score_series
 
 
-def make_topk_udf(
-    ids: list[int],
-    descs: list[str],
-    embed_texts: list[str],
-    k: int,
-    min_sim: float = config.MIN_SIMILARITY_NOM,
-):
-    """Pandas UDF over make_topk_scorer (the matrix ships in the closure —
-    the broadcast-dimension pattern; dims are small by contract)."""
-    score_series = make_topk_scorer(ids, descs, embed_texts, k, min_sim)
-
-    @F.pandas_udf(CANDIDATE_TYPE)
-    def topk_udf(queries: pd.Series) -> pd.Series:
-        return pd.Series(score_series(queries), dtype=object)
-
-    return topk_udf
-
-
 def _guarded_collect(df: DataFrame, what: str) -> list:
     """Collect a dimension with a loud size cap: limit(cap + 1) bounds what
     reaches the driver, and blowing past the cap raises a clear error
@@ -208,9 +174,8 @@ def _guarded_collect(df: DataFrame, what: str) -> list:
     if len(rows) > cap:
         raise ValueError(
             f"{what}: dimension exceeds MAX_BROADCAST_DIM_ROWS={cap}; "
-            "shard the dimension, or use the collect-free paths: "
-            "match_practices (broadcast-join matcher) / "
-            "operators.similarity_search"
+            "shard the dimension (e.g. by tenant), or use the ANN "
+            "operators in operators.similarity_search"
         )
     return rows
 
@@ -281,31 +246,22 @@ def _nomenclador_lists(rows: list) -> tuple[list, list, list]:
     )
 
 
-def _collect_nomenclador_space(nomencladores: DataFrame) -> tuple[list, list, list]:
-    """Active nomencladores -> (ids, descripciones, embedding texts).
-
-    Driver-side collect is by design: the dimension is the broadcast side
-    (SURVEY §4 — replaces IVFFlat); _guarded_collect enforces the
-    fits-in-memory contract loudly."""
-    return _nomenclador_lists(
-        _guarded_collect(_nomenclador_space(nomencladores), "nomenclador candidate space")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Latest-valid agreement (J6/T3)
 # ---------------------------------------------------------------------------
 
 # The latest agreement is the max of these fields, compared in this order
 # with NULL below any value; latest_agreements and _latest_agreement_map
-# both read it, so the two paths pick the same row even on tied dates and ids.
+# both read it, so the two pick the same row even on tied dates and ids.
 LATEST_AGREEMENT_ORDER = ("fecha_vigencia", "id_acuerdo", "precio")
 
 
 def latest_agreements(acuerdos: DataFrame) -> DataFrame:
     """One row per (prestador, nomenclador, plan): latest vigente='SI'
     agreement by fecha_vigencia (id_acuerdo tie-break) —
-    matching.service.js:251-269.
+    matching.service.js:251-269. The set-based form of the driver-side
+    pick that collect_dimensions makes (_latest_agreement_map); pytest
+    holds the two equal.
 
     Round 4: struct-max argmax instead of a row_number window. The winner
     is unchanged — max(struct(*LATEST_AGREEMENT_ORDER, ...)) compares
@@ -336,8 +292,8 @@ def _latest_agreement_map(rows: list) -> dict:
     LATEST_AGREEMENT_ORDER with NULL below any value (rows that tie on all
     of it carry the same dict value). SQL-join NULL semantics: a NULL key
     component never matches, but a Python dict happily equates None keys —
-    rows with a NULL key are dropped so dict lookups mirror the join-based
-    path exactly."""
+    rows with a NULL key are dropped so dict lookups mirror an equi-join
+    exactly."""
 
     def order(r):
         return tuple((r[c] is not None, r[c]) for c in LATEST_AGREEMENT_ORDER)
@@ -352,24 +308,25 @@ def _latest_agreement_map(rows: list) -> dict:
 
 def collect_dimensions(
     prestadores: DataFrame, nomencladores: DataFrame, acuerdos: DataFrame
-) -> tuple[list, list, dict | None]:
+) -> tuple[list, list, dict]:
     """(active prestador rows, active nomenclador rows, agreement dict), one
-    guarded driver collect each. On Arrow-built or other local dimensions
-    every collect folds into a LocalRelation and runs no Spark job.
+    guarded driver collect each (_guarded_collect: more than
+    MAX_BROADCAST_DIM_ROWS rows in any of the three raises; the collect
+    fetches at most cap + 1, never the whole table). On Arrow-built or
+    other local dimensions every collect folds into a LocalRelation and
+    runs no Spark job.
 
-    The agreement dict is _latest_agreement_map's latest pick per key, or
-    None when more than config.FAST_MATCH_MAX_AGREEMENTS vigente rows exist
-    (the collect fetches at most cap + 1, never the whole table; the caller
-    then takes the broadcast-join matcher, which scales to any size). The
-    cap counts vigente rows, not latest ones. Prestadores and nomencladores
-    above MAX_BROADCAST_DIM_ROWS raise (_guarded_collect)."""
-    cap = config.FAST_MATCH_MAX_AGREEMENTS
+    The agreement dict is _latest_agreement_map's latest pick per key over
+    the vigente rows; the cap counts vigente rows, not latest ones."""
     t = _dimension_trees()
-    agreements = acuerdos.filter(t["vigente"]).select(*t["agreement"]).limit(cap + 1).collect()
     return (
         _guarded_collect(_prestador_space(prestadores), "prestador space"),
         _guarded_collect(_nomenclador_space(nomencladores), "nomenclador candidate space"),
-        None if len(agreements) > cap else _latest_agreement_map(agreements),
+        _latest_agreement_map(
+            _guarded_collect(
+                acuerdos.filter(t["vigente"]).select(*t["agreement"]), "vigente agreements"
+            )
+        ),
     )
 
 
@@ -499,7 +456,8 @@ def trigram_jaccard_col(a, b):
 
 
 # ---------------------------------------------------------------------------
-# Practice matching + agreement pick-best (§2.9 steps 1-5)
+# Document-level matcher (provider cascade + practice pick-best, §2.9 steps
+# 1-5, one pass)
 # ---------------------------------------------------------------------------
 
 ALTERNATIVE_TYPE = T.ArrayType(
@@ -512,115 +470,6 @@ ALTERNATIVE_TYPE = T.ArrayType(
         ]
     )
 )
-
-
-def match_practices(
-    practices: DataFrame,
-    nomencladores: DataFrame,
-    acuerdos: DataFrame,
-) -> DataFrame:
-    """practices(doc_id, item, descripcion, cantidad, confianza,
-    prestador_id, plan_id_plan) -> one row per practice with
-    nomenclador_id_sugerido, nomenclador_confianza, similitud, tiene_acuerdo,
-    id_acuerdo, precio_acuerdo, matches_alternativos, alerta.
-
-    The broadcast-join matcher for agreement tables too large for the
-    closure dict of match_documents: explode every practice into its k
-    candidates, broadcast-join the latest agreements, then two
-    (doc_id, item) windows pick the best and slice the alternatives."""
-    ids, descs, etexts = _collect_nomenclador_space(nomencladores)
-    topk_udf = make_topk_udf(ids, descs, etexts, k=config.TOPK_NOMENCLADOR)
-
-    with_cands = practices.withColumn("cands", topk_udf(F.col("descripcion")))
-    exploded = with_cands.select(
-        "doc_id", "item", "descripcion", "cantidad", "confianza",
-        "prestador_id", "plan_id_plan",
-        F.explode_outer("cands").alias("c"),
-    )
-
-    ag = latest_agreements(acuerdos).select(
-        F.col("id_nomenclador").alias("_ag_nom"),
-        F.col("prest_id_prestador").alias("_ag_prest"),
-        F.col("plan_id_plan").alias("_ag_plan"),
-        F.col("id_acuerdo").alias("_ag_id"),
-        F.col("precio").alias("_ag_precio"),
-    )
-    joined = exploded.join(
-        F.broadcast(ag),
-        (F.col("c.id") == F.col("_ag_nom"))
-        & (F.col("prestador_id") == F.col("_ag_prest"))
-        & (F.col("plan_id_plan") == F.col("_ag_plan")),
-        "left",
-    ).withColumn("has_ag", F.col("_ag_id").isNotNull())
-
-    # preference pick-best: min rank among agreement-holders, else rank 1
-    wkey = Window.partitionBy("doc_id", "item")
-    with_best = joined.withColumn(
-        "best_rank",
-        F.coalesce(
-            F.min(F.when(F.col("has_ag"), F.col("c.rank"))).over(wkey), F.lit(1)
-        ),
-    )
-
-    best = with_best.filter(
-        (F.col("c.rank") == F.col("best_rank")) | F.col("c").isNull()
-    ).select(
-        "doc_id", "item", "descripcion", "cantidad", "confianza",
-        "prestador_id", "plan_id_plan",
-        F.col("c.id").alias("nomenclador_id_sugerido"),
-        F.col("c.descripcion").alias("nomenclador_descripcion"),
-        F.col("c.similitud").alias("similitud"),
-        F.round(F.col("c.similitud"), 2).alias("nomenclador_confianza"),
-        F.col("has_ag").alias("tiene_acuerdo"),
-        F.col("_ag_id").alias("id_acuerdo"),
-        F.col("_ag_precio").alias("precio_acuerdo"),
-        F.when(F.col("c").isNull(), F.lit("SIN_MATCH"))
-        .when(~F.col("has_ag"), F.lit("SIN_ACUERDO"))
-        .alias("alerta"),
-    )
-
-    alts = (
-        with_best.filter(F.col("c").isNotNull() & (F.col("c.rank") != F.col("best_rank")))
-        .withColumn(
-            "_alt_rn",
-            F.row_number().over(wkey.orderBy("c.rank")),
-        )
-        .filter(F.col("_alt_rn") <= config.N_ALTERNATIVES)
-        .groupBy("doc_id", "item")
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("c.rank").alias("rank"),
-                            F.col("c.id").alias("id_nomenclador"),
-                            F.col("c.descripcion").alias("descripcion"),
-                            F.col("c.similitud").alias("similitud"),
-                            F.col("has_ag").alias("tiene_acuerdo"),
-                        )
-                    )
-                ),
-                lambda s: F.struct(
-                    s["id_nomenclador"].alias("id_nomenclador"),
-                    s["descripcion"].alias("descripcion"),
-                    s["similitud"].alias("similitud"),
-                    s["tiene_acuerdo"].alias("tiene_acuerdo"),
-                ),
-            ).alias("matches_alternativos")
-        )
-    )
-
-    return best.join(alts, ["doc_id", "item"], "left").withColumn(
-        "matches_alternativos",
-        F.coalesce(
-            "matches_alternativos", F.lit([]).cast(ALTERNATIVE_TYPE)
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Document-level matcher (provider cascade + practice pick-best, one pass)
-# ---------------------------------------------------------------------------
 
 PRACTICE_MATCH_TYPE = T.StructType(
     [
@@ -716,9 +565,8 @@ def match_documents(
     One Arrow map node per document batch: the provider cascade, then every
     practice of the batch scored in one memoized scorer call against the
     doc's provider and plan. ``prestadores``, ``nomencladores`` and
-    ``agreements`` are collect_dimensions' results. Same rows as
-    match_prestador + match_practices (pytest asserts) with no exchange
-    added to the upstream plan."""
+    ``agreements`` are collect_dimensions' results. No exchange is added
+    to the upstream plan."""
     import pyarrow.compute as pc
 
     cascade = _provider_cascade(prestadores)
@@ -765,7 +613,8 @@ def _explode_match_cols():
 
 
 def explode_matches(matched: DataFrame) -> DataFrame:
-    """match_documents output -> one row per practice, with the columns of
-    match_practices: each practice zipped with its pick by position."""
+    """match_documents output -> one row per practice (doc_id, the practice
+    fields, prestador_id, plan_id_plan and the PRACTICE_MATCH_TYPE fields):
+    each practice zipped with its pick by position."""
     zipped, flat = _explode_match_cols()
     return matched.select(*zipped).select(*flat)

@@ -47,21 +47,15 @@ def _doc_field_cols():
 
 
 @per_context
-def _header_cols(per_doc_matches: bool):
-    """The header projection. With ``per_doc_matches`` it reads the match
-    array of match_documents' frame (n_practicas and the mean practice
-    similarity, summed in item order like the golden); otherwise the
-    n_practicas and _match_conf columns joined from match_practices'
-    per-doc stats."""
-    if per_doc_matches:
-        n = F.size("matches")
-        sims = F.transform("matches", lambda m: F.coalesce(m["similitud"], F.lit(0.0)))
-        n_practicas = n.cast("long")
-        match_conf = F.when(
-            n > 0, F.round(F.aggregate(sims, F.lit(0.0), lambda a, x: a + x) / n, 4)
-        )
-    else:
-        n_practicas, match_conf = F.col("n_practicas"), F.col("_match_conf")
+def _header_cols():
+    """The header projection over match_documents' frame: n_practicas and
+    the mean practice similarity come from the match array (summed in item
+    order like the golden)."""
+    n = F.size("matches")
+    sims = F.transform("matches", lambda m: F.coalesce(m["similitud"], F.lit(0.0)))
+    match_conf = F.when(
+        n > 0, F.round(F.aggregate(sims, F.lit(0.0), lambda a, x: a + x) / n, 4)
+    )
     confianza_general = F.round(
         (
             F.col("confianza_extraccion")
@@ -81,7 +75,7 @@ def _header_cols(per_doc_matches: bool):
             "prestador_confianza", "prestador_metodo", "medico_matricula",
             "diagnostico_texto", "diagnostico_codigo_cie", "urgente",
         )),
-        F.coalesce(n_practicas, F.lit(0)).alias("n_practicas"),
+        F.coalesce(n.cast("long"), F.lit(0)).alias("n_practicas"),
         F.col("confianza_extraccion"),
         confianza_general.alias("confianza_general"),
         (confianza_general < F.lit(config.REVIEW_THRESHOLD)).alias("requiere_revision"),
@@ -113,23 +107,16 @@ def run_previsacion(
 
     The dimensions are read once, on the driver
     (matching.collect_dimensions): one guarded collect each of the active
-    prestadores, the active nomencladores and at most
-    config.FAST_MATCH_MAX_AGREEMENTS + 1 vigente agreements, and the latest
-    agreement per key is picked on the driver. On local dimensions
-    (generator.dims_dataframes builds LocalRelations) these collects run
-    no Spark job. The agreement collect also picks the practice matcher:
-
-    * when the vigente agreements fit under the cap, each document is
-      matched once (matching.match_documents): the provider cascade and
-      every practice's pick-best run in one Arrow map node whose
-      dimensions ship in its closure. That frame is persisted; the header
-      takes n_practicas and the mean practice similarity from the match
-      array (no groupBy, no join) and the detail explodes the cached array
-      (the matcher never runs twice);
-    * otherwise the broadcast-join practice matcher
-      (matching.match_practices) serves agreement tables of any size, with
-      per-doc stats from a groupBy joined back to the header. This path
-      collects the prestadores and nomencladores a second time.
+    prestadores, the active nomencladores and the vigente agreements, and
+    the latest agreement per key is picked on the driver. On local
+    dimensions (generator.dims_dataframes builds LocalRelations) these
+    collects run no Spark job. Each document is then matched once
+    (matching.match_documents): the provider cascade and every practice's
+    pick-best run in one Arrow map node whose dimensions ship in its
+    closure. That frame is persisted; the header takes n_practicas and the
+    mean practice similarity from the match array (no groupBy, no join)
+    and the detail explodes the cached array (the matcher never runs
+    twice).
 
     The build is driver work on every call: one projection per step (the
     doc fields, the header with its match stats, the detail) and the
@@ -162,39 +149,14 @@ def run_previsacion(
     # without persistence the full extraction + matching lineage recomputes
     # once per output branch. MEMORY_AND_DISK: spill-safe at scale; callers
     # may unpersist after writing both tables.
-    per_doc_matches = agreements is not None
-    if per_doc_matches:
-        stats = matching.match_documents(
-            doc_fields, prest_rows, nom_rows, agreements
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        det = matching.explode_matches(stats)
-    else:
-        with_prest = matching.match_prestador(doc_fields, prestadores).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        practices = with_prest.select(
-            "doc_id", "prestador_id", "plan_id_plan", F.explode("practicas").alias("p")
-        ).select(
-            "doc_id",
-            "p.item",
-            "p.descripcion",
-            "p.cantidad",
-            "p.confianza",
-            "prestador_id",
-            "plan_id_plan",
-        )
-        det = matching.match_practices(practices, nomencladores, acuerdos)
-        det_stats = det.groupBy("doc_id").agg(
-            F.round(F.avg(F.coalesce(F.col("similitud"), F.lit(0.0))), 4).alias(
-                "_match_conf"
-            ),
-            F.count("*").alias("n_practicas"),
-        )
-        stats = with_prest.join(det_stats, "doc_id", "left")
+    stats = matching.match_documents(
+        doc_fields, prest_rows, nom_rows, agreements
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    det = matching.explode_matches(stats)
 
     # thread the owning tenant onto the header so downstream feedback can
     # enforce ownership (reference feedback.routes.js:63-69 re-checks
     # `WHERE id=$1 AND tenant_id=$2` before any mutation)
     tenant = [] if tenant_id is None else [F.lit(tenant_id).alias("tenant_id")]
-    header = stats.select(*_header_cols(per_doc_matches), *tenant)
+    header = stats.select(*_header_cols(), *tenant)
     return header, det.select(*_detail_cols())

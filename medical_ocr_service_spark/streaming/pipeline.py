@@ -347,104 +347,3 @@ def stream_dedup(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def _cusum_step(
-    st: tuple, value: float, warmup: int, slack: float, threshold: float
-) -> tuple[tuple, str | None]:
-    """One CUSUM update. st = (n, mean, m2, mu0, sigma0, s_pos, s_neg,
-    warm); returns (new_state, alert) with alert in {None, 'up', 'down'}.
-
-    Welford accumulation during warmup (numerically stable running
-    mean/M2); after `warmup` samples the reference (mu0, sigma0) freezes
-    and the two-sided standardized CUSUM runs:
-        s_pos = max(0, s_pos + z - slack);  s_neg = max(0, s_neg - z - slack)
-    An alert fires when either side crosses `threshold` and the detector
-    RESTARTS (re-warms on the post-change distribution) — the classic
-    Page (1954) restart. Pure Python on purpose: the same function is the
-    unit-test reference and the per-row step inside the Arrow batch loop.
-    """
-    n, mean, m2, mu0, sigma0, s_pos, s_neg, warm = st
-    if not warm:
-        n += 1
-        d = value - mean
-        mean += d / n
-        m2 += d * (value - mean)
-        if n >= warmup:
-            var = m2 / (n - 1) if n > 1 else 0.0
-            sigma0 = var**0.5 if var > 0 else 1.0
-            mu0, warm = mean, True
-            s_pos = s_neg = 0.0
-        return (n, mean, m2, mu0, sigma0, s_pos, s_neg, warm), None
-    z = (value - mu0) / sigma0
-    s_pos = max(0.0, s_pos + z - slack)
-    s_neg = max(0.0, s_neg - z - slack)
-    if s_pos > threshold or s_neg > threshold:
-        direction = "up" if s_pos > threshold else "down"
-        return (0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0, False), direction
-    return (n, mean, m2, mu0, sigma0, s_pos, s_neg, warm), None
-
-
-def metric_drift_alerts(
-    events_stream: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    warmup: int = 20,
-    slack: float = 0.5,
-    threshold: float = 5.0,
-) -> DataFrame:
-    """Streaming change-point detection per metric key (CUSUM over
-    applyInPandasWithState) — the pipeline-health monitor a 10^12-doc
-    ingest runs beside its quality filters: a drifting extraction
-    confidence, doc length, or parse-failure rate fires an alert row
-    (key, alert_ts, direction, n_seen) the moment the cumulative sum
-    crosses the threshold, without storing any history.
-
-    Scale shape: state is ONE fixed-width tuple per key (8 scalars),
-    hash-partitioned by the group key across executors; each micro-batch
-    moves one Arrow batch per key-partition through the detector. Rows
-    within a batch process in (ts, value) order so replays are
-    deterministic (same files + same batching -> same alerts), which the
-    exactly-once checkpoint story depends on.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        f"{key_col} string, alert_ts timestamp, direction string, n_seen long"
-    )
-    state_schema = (
-        "n long, mean double, m2 double, mu0 double, sigma0 double, "
-        "s_pos double, s_neg double, warm boolean"
-    )
-    init = (0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0, False)
-
-    def detect(key, pdfs, state: GroupState):
-        st = state.get if state.exists else init
-        seen = 0
-        alerts: list[tuple] = []
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values([ts_col, value_col], kind="mergesort")
-            for ts, v in zip(batch[ts_col], batch[value_col]):
-                st, alert = _cusum_step(
-                    st, float(v), warmup, slack, threshold
-                )
-                seen += 1
-                if alert is not None:
-                    alerts.append((key[0], ts, alert, seen))
-        state.update(st)
-        yield pd.DataFrame(
-            alerts, columns=[key_col, "alert_ts", "direction", "n_seen"]
-        )
-
-    return events_stream.select(key_col, ts_col, value_col).groupBy(
-        key_col
-    ).applyInPandasWithState(
-        detect,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

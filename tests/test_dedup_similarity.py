@@ -80,12 +80,6 @@ def test_simhash_near_pairs_rejects_incomplete_radius(dup_docs):
         dedup.simhash_near_pairs(dup_docs, "text", "doc_id", max_hamming=10)
 
 
-def test_ngram_jaccard_pairs(dup_docs):
-    pairs = dedup.ngram_jaccard_pairs(dup_docs, "text", "doc_id", k=3, threshold=0.9).toPandas()
-    got = {(r.id_a, r.id_b) for r in pairs.itertuples()}
-    assert got == {(0, 1), (10, 11), (20, 21)}
-
-
 def test_brute_force_topk_matches_numpy(spark, sf_dir):
     import numpy as np
 

@@ -19,7 +19,7 @@ from medical_ocr_service_spark.plans import previsacion
 
 @pytest.fixture(scope="module")
 def golden_previsacion():
-    docs, media = generator.synthesize_corpus(300, seed=config.CORpus_SEED if hasattr(config, "CORpus_SEED") else config.CORPUS_SEED)
+    docs, media = generator.synthesize_corpus(300, seed=config.CORPUS_SEED)
     extracted = golden.extract_corpus(docs, media)
     matcher = GoldenMatcher(generator.synthesize_dimensions(seed=config.CORPUS_SEED))
     out = [matcher.previsacion(g) for g in extracted]
@@ -140,58 +140,62 @@ def test_pick_best_prefers_agreement(spark_previsacion):
     assert (no_ag["alerta"] == "SIN_ACUERDO").all()
 
 
-def test_match_practices_fast_equals_join_path(spark, corpus_dir):
-    """The document-level matcher (match_documents, exploded per practice)
-    returns row-for-row identical results, alternatives included, to the
-    explode + broadcast-join + window path (match_practices)."""
-    from medical_ocr_service_spark.operators import extract, matching
-    from medical_ocr_service_spark.plans.previsacion import plan_id_col
+def test_previsacion_many_agreements_matches_golden(
+    spark, corpus_dir, golden_previsacion
+):
+    """More than 200,000 vigente agreements (the corpus rows plus 200,001
+    distinct keys on plans 3 and up, which no document gets) go through
+    the same document-level matcher, and the header, detail and
+    alternatives still equal the golden matcher's."""
+    import datetime
+
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    dims = generator.synthesize_dimensions(seed=config.CORPUS_SEED)
+    schema = StructType.fromDDL(generator.ACUERDOS_SCHEMA)
+    arrow_schema = to_arrow_schema(schema)
+    corpus = pa.Table.from_pylist(
+        [
+            dict(a, fecha_vigencia=datetime.date.fromisoformat(a["fecha_vigencia"]))
+            for a in dims["acuerdos_prestador"]
+        ],
+        schema=arrow_schema,
+    )
+    n = 200_001
+    i = np.arange(n)
+    prest_ids = np.array([p["id_prestador"] for p in dims["prestadores"]])
+    nom_ids = np.array([x["id_nomenclador"] for x in dims["nomencladores"]])
+    precio = pa.array(100.0 + i % 997, pa.float64())
+    extra = pa.Table.from_arrays(
+        [
+            pa.array(10_000_000 + i, pa.int32()),
+            pa.array(prest_ids[i % len(prest_ids)], pa.int32()),
+            pa.array(nom_ids[i // len(prest_ids) % len(nom_ids)], pa.int32()),
+            pa.array(3 + i // (len(prest_ids) * len(nom_ids)), pa.int32()),
+            precio, precio, precio, precio,
+            pa.array(["SI"] * n),
+            pa.array([datetime.date(2025, 1, 1)] * n, pa.date32()),
+            pa.array([None] * n, pa.string()),
+        ],
+        schema=arrow_schema,
+    )
+    # the corpus rows last: a collect that kept only the first 200,000
+    # rows would lose every real agreement
+    ac = spark.createDataFrame(pa.concat_tables([extra, corpus]), schema)
+    assert ac.filter((F.col("vigente") == "SI") & (F.col("plan_id_plan") >= 3)).count() == n
 
     docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
     media = spark.read.parquet(f"{corpus_dir}/media.parquet")
-    prest = spark.read.parquet(f"{corpus_dir}/prestadores.parquet")
-    nom = spark.read.parquet(f"{corpus_dir}/nomencladores.parquet")
-    ac = spark.read.parquet(f"{corpus_dir}/acuerdos_prestador.parquet")
-    doc_fields = extract.extract_documents(docs, media).select(
-        "doc_id",
-        *[
-            F.col(f"fields.{c}").alias(c)
-            for c in ("ruc", "prestador_nombre", "medico_matricula", "matricula_valida", "practicas")
-        ],
-        plan_id_col(),
-    )
-    with_prest = matching.match_prestador(doc_fields, prest)
-    practices = with_prest.select(
-        "doc_id", "prestador_id", "plan_id_plan", F.explode("practicas").alias("p")
-    ).select(
-        "doc_id",
-        F.col("p.item").alias("item"),
-        F.col("p.descripcion").alias("descripcion"),
-        F.col("p.cantidad").alias("cantidad"),
-        F.col("p.confianza").alias("confianza"),
-        "prestador_id",
-        "plan_id_plan",
-    )
-
-    a = matching.match_practices(practices, nom, ac).toPandas()
-    matched = matching.match_documents(
-        doc_fields, *matching.collect_dimensions(prest, nom, ac)
-    )
-    b = matching.explode_matches(matched).toPandas()
-    keys = ["doc_id", "item"]
-    a = a.sort_values(keys, ignore_index=True)
-    b = b.sort_values(keys, ignore_index=True)
-    assert len(a) > 0 and b["tiene_acuerdo"].any()
-    # alternatives compared field-by-field (list-of-Row vs list-of-dict)
-    alt_a = a.pop("matches_alternativos").map(
-        lambda xs: [tuple(x) for x in xs]
-    )
-    alt_b = b.pop("matches_alternativos").map(
-        lambda xs: [tuple(x) for x in xs]
-    )
-    assert list(a.columns) == list(b.columns)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-    assert (alt_a == alt_b).all()
+    prest, nom, _ = generator.dims_dataframes(spark)
+    header, detail = previsacion.run_previsacion(docs, media, prest, nom, ac)
+    ours = (header.toPandas(), detail.toPandas())
+    test_header_matches_golden(ours, golden_previsacion)
+    test_detail_matches_golden(ours, golden_previsacion)
+    test_alternatives_match_golden(spark, ours, golden_previsacion)
+    spark.catalog.clearCache()
 
 
 def _one_doc(spark, ruc, matricula, plan):
@@ -220,9 +224,9 @@ def _prestadores(spark, rows):
 
 
 def test_fast_path_null_agreement_keys_never_match(spark):
-    """SQL NULL-never-matches parity: an agreement row with a NULL key
-    component must not match in the document-level matcher's closure dict
-    either, exactly like the join-based path."""
+    """SQL NULL-never-matches: an agreement row with a NULL key component
+    must not match in the document-level matcher's closure dict, where a
+    Python dict would equate a NULL plan with a NULL key part."""
     from medical_ocr_service_spark.operators import matching
 
     nom = spark.createDataFrame(
@@ -239,19 +243,13 @@ def test_fast_path_null_agreement_keys_never_match(spark):
     prest = _prestadores(
         spark, [(1, "800-1", "M1", "Clinica X", "Clinica X SA", "CLINICA", "ACTIVO")]
     )
-    practices = spark.createDataFrame(
-        [("d1", 1, "hemograma completo", 1, 0.9, 1, None)],
-        "doc_id string, item int, descripcion string, cantidad int, "
-        "confianza double, prestador_id int, plan_id_plan int",
-    )
-    a = matching.match_practices(practices, nom, ac).toPandas()
     matched = matching.match_documents(
         _one_doc(spark, "800-1", None, None), *matching.collect_dimensions(prest, nom, ac)
     )
     b = matching.explode_matches(matched).toPandas()
     assert b.loc[0, "prestador_id"] == 1 and b.loc[0, "nomenclador_id_sugerido"] == 1
-    assert not a.loc[0, "tiene_acuerdo"] and not b.loc[0, "tiene_acuerdo"]
-    assert a.loc[0, "alerta"] == b.loc[0, "alerta"] == "SIN_ACUERDO"
+    assert not b.loc[0, "tiene_acuerdo"]
+    assert b.loc[0, "alerta"] == "SIN_ACUERDO"
 
 
 def test_provider_shared_keys_resolve_to_lowest_id(spark):
@@ -286,34 +284,6 @@ def test_provider_shared_keys_resolve_to_lowest_id(spark):
         ):
             r = out.select("prestador_id", "prestador_metodo").first()
             assert (r["prestador_id"], r["prestador_metodo"]) == (5, metodo)
-
-
-def test_auto_matcher_falls_back_to_join_path(spark, corpus_dir, monkeypatch):
-    """run_previsacion must route to the join path when the agreements
-    dim exceeds the configured document-matcher ceiling."""
-    from medical_ocr_service_spark import config
-    from medical_ocr_service_spark.corpus import generator
-    from medical_ocr_service_spark.operators import matching
-    from medical_ocr_service_spark.plans import previsacion
-
-    docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
-    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
-    prest, nom, ac = generator.dims_dataframes(spark)
-
-    calls = []
-    orig = matching.match_practices
-    monkeypatch.setattr(
-        matching, "match_practices",
-        lambda *a, **k: (calls.append("join"), orig(*a, **k))[1],
-    )
-    monkeypatch.setattr(
-        matching, "match_documents",
-        lambda *a, **k: (_ for _ in ()).throw(AssertionError("document matcher used")),
-    )
-    monkeypatch.setattr(config, "FAST_MATCH_MAX_AGREEMENTS", 0)
-    header, detail = previsacion.run_previsacion(docs, media, prest, nom, ac)
-    assert calls == ["join"]
-    assert detail.limit(1).count() >= 0  # plan executes
 
 
 def test_previsacion_plan_shape(spark, corpus_dir, final_plan_nodes):
@@ -515,9 +485,10 @@ def test_dim_collect_guard(spark, monkeypatch):
         "desc_nomenclador string, grupo string, subgrupo string, "
         "sinonimos array<string>, palabras_clave array<string>, estado string",
     )
+    prest, _, ac = generator.dims_dataframes(spark)
     monkeypatch.setattr(config, "MAX_BROADCAST_DIM_ROWS", 3)
-    with pytest.raises(ValueError, match="MAX_BROADCAST_DIM_ROWS"):
-        matching._collect_nomenclador_space(matching.embed_nomencladores(nom))
+    with pytest.raises(ValueError, match="nomenclador.*MAX_BROADCAST_DIM_ROWS"):
+        matching.collect_dimensions(prest.limit(3), nom, ac.limit(3))
 
 
 def test_dims_dataframes_are_arrow_local_relations(spark):
@@ -648,10 +619,10 @@ def test_driver_latest_pick_equals_latest_agreements(spark):
 
 
 def test_collect_dimensions_caps(spark, monkeypatch):
-    """The agreement cap counts vigente rows: at the count the dict is
-    built, one below it collect_dimensions returns None (run_previsacion
-    then takes the join path). Prestadores and nomencladores past
-    MAX_BROADCAST_DIM_ROWS raise."""
+    """Every dimension collect is capped at MAX_BROADCAST_DIM_ROWS: at the
+    vigente agreement count the dict is built, one below it the agreement
+    collect raises like the prestador and nomenclador collects. The cap
+    counts vigente rows, not latest ones."""
     from medical_ocr_service_spark import config
     from medical_ocr_service_spark.operators import matching
 
@@ -659,13 +630,15 @@ def test_collect_dimensions_caps(spark, monkeypatch):
     n_vigente = ac.filter(F.col("vigente") == "SI").count()
     n_latest = matching.latest_agreements(ac).count()
     assert n_latest < n_vigente
-    monkeypatch.setattr(config, "FAST_MATCH_MAX_AGREEMENTS", n_vigente)
-    assert len(matching.collect_dimensions(prest, nom, ac)[2]) == n_latest
-    monkeypatch.setattr(config, "FAST_MATCH_MAX_AGREEMENTS", n_vigente - 1)
-    assert matching.collect_dimensions(prest, nom, ac)[2] is None
+    small_prest, small_nom = prest.limit(1), nom.limit(1)
+    monkeypatch.setattr(config, "MAX_BROADCAST_DIM_ROWS", n_vigente)
+    assert len(matching.collect_dimensions(small_prest, small_nom, ac)[2]) == n_latest
+    monkeypatch.setattr(config, "MAX_BROADCAST_DIM_ROWS", n_vigente - 1)
+    with pytest.raises(ValueError, match="vigente agreements.*MAX_BROADCAST_DIM_ROWS"):
+        matching.collect_dimensions(small_prest, small_nom, ac)
     monkeypatch.setattr(config, "MAX_BROADCAST_DIM_ROWS", 3)
     with pytest.raises(ValueError, match="MAX_BROADCAST_DIM_ROWS"):
-        matching.collect_dimensions(prest, nom, ac)
+        matching.collect_dimensions(prest, nom, ac.limit(1))
 
 
 def test_trigram_jaccard_col_matches_python(spark):

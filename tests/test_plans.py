@@ -121,23 +121,6 @@ def test_extraction_has_single_doc_shuffle(spark, corpus_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_topk_matching_broadcasts_agreements(spark):
-    """The join-path practice matcher broadcasts the latest agreements: on
-    a frame with no media join, any BroadcastHashJoin is the matcher's."""
-    from medical_ocr_service_spark.corpus import generator
-    from medical_ocr_service_spark.operators import matching
-
-    _, nom, ac = generator.dims_dataframes(spark)
-    practices = spark.createDataFrame(
-        [("d1", 1, "ecografia abdominal", 1, 0.95, 1, 1),
-         ("d1", 2, "hemograma completo", 2, 0.95, 1, 2)],
-        "doc_id string, item int, descripcion string, cantidad int, "
-        "confianza double, prestador_id int, plan_id_plan int",
-    )
-    plan = _plan(matching.match_practices(practices, nom, ac))
-    assert "BroadcastHashJoin" in plan
-
-
 def test_run_in_pool_sets_and_restores(spark):
     """Q2: the FAIR-pool context manager scopes the scheduler pool to the
     block and restores the previous value."""
