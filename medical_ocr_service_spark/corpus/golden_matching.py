@@ -4,29 +4,20 @@ Single-threaded reference implementation of SURVEY §2.9 over the synthesized
 dimensions; the pytest suite asserts the distributed pipeline
 (operators/matching.py + plans/previsacion.py) agrees exactly.
 
-Shares only the scalar numeric core (embed_text / trigram) with the Spark
-side — the pipeline logic (cascade, top-k, pick-best, alternatives,
-confidence) is written independently here.
+Shares only the scalar numeric core (embed_text / trigram / round_half_up)
+with the Spark side — the pipeline logic (cascade, top-k, pick-best,
+alternatives, confidence) is written independently here.
 """
 
 from __future__ import annotations
 
 import datetime
-from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
 
 import numpy as np
 
 from .. import config
 from ..functions import similarity as sim
-
-
-def round_half_up(x: float | None, nd: int) -> float | None:
-    """Match Spark's F.round on doubles: HALF_UP over the shortest decimal
-    repr (java BigDecimal.valueOf == Python repr for doubles)."""
-    if x is None:
-        return None
-    return float(Decimal(repr(float(x))).quantize(Decimal(f"1e-{nd}"), ROUND_HALF_UP))
 
 
 def plan_id(doc_id: str) -> int | None:
@@ -134,7 +125,7 @@ class GoldenMatcher:
         best = cands[0]
         return {
             "prestador_id": best["id"],
-            "prestador_confianza": round_half_up(best["similitud"], 2),
+            "prestador_confianza": sim.round_half_up(best["similitud"], 2),
             "prestador_metodo": "FUZZY",
         }
 
@@ -209,7 +200,7 @@ class GoldenMatcher:
             "nomenclador_id_sugerido": best["id"],
             "nomenclador_descripcion": best["descripcion"],
             "similitud": best["similitud"],
-            "nomenclador_confianza": round_half_up(best["similitud"], 2),
+            "nomenclador_confianza": sim.round_half_up(best["similitud"], 2),
             "tiene_acuerdo": a is not None,
             "id_acuerdo": a["id_acuerdo"] if a else None,
             "precio_acuerdo": a["precio"] if a else None,
@@ -245,13 +236,13 @@ class GoldenMatcher:
                 }
             )
         match_conf = (
-            round_half_up(
+            sim.round_half_up(
                 sum((d["similitud"] or 0.0) for d in details) / len(details), 4
             )
             if details
             else None
         )
-        conf_general = round_half_up(
+        conf_general = sim.round_half_up(
             (
                 golden_doc["confianza_extraccion"]
                 + (pm["prestador_confianza"] or 0.0)

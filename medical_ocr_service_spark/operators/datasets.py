@@ -490,70 +490,3 @@ def group_diversity_stats(
         .orderBy(F.desc("simpson"), F.desc("n_rows"), F.asc(group_col))
         .limit(top)
     )
-
-
-def mixture_sample(
-    df: DataFrame,
-    group_col: str,
-    weights: dict[str, float],
-    temperature: float = 1.0,
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """Temperature-based data mixing (the GPT-3 / LLaMA corpus-weighting
-    op): sample the largest corpus whose group distribution matches the
-    TEMPERED target p_s = w_s^t / sum(w^t) given what each group actually
-    has. t=1 reproduces the raw weights, t=0 flattens to uniform, 0<t<1
-    up-weights the tail — the standard knob for balancing a web-dominated
-    mix against small high-quality sources.
-
-    Rate derivation: with n_s rows available, the largest total T
-    satisfying T*p_s <= n_s for all s is T = min_s(n_s/p_s); the per-group
-    keep rate is T*p_s/n_s (exactly 1.0 for the binding group). Groups
-    absent from `weights` are dropped.
-
-    Determinism + scale shape: the per-group counts are ONE aggregate
-    collected to the driver — len(weights) rows, bounded by construction
-    (the mixing dict is driver-provided). The rates become integer
-    thresholds thr_s = floor(rate * 2^32) against an md5 gate on
-    'mixture:' || key, broadcast as a literal CASE — the fact table never
-    shuffles, membership is a pure function of the key
-    (resume/rerun-stable), and a pytest reference recomputes the exact
-    kept set with hashlib.
-
-    The 'mixture:' salt decorrelates the gate from hash_split's uniform,
-    which hashes the bare key: unsalted, a group kept at rate r holds only
-    keys with u < r, so a later hash_split (test = u >= 0.9) would give
-    any group sampled at r <= 0.9 no test rows at all.
-    """
-    if temperature < 0:
-        raise ValueError(f"temperature must be >= 0, got {temperature}")
-    if not weights:
-        raise ValueError("weights must be non-empty")
-    tempered = {g: float(w) ** temperature for g, w in weights.items()}
-    z = sum(tempered.values())
-    target = {g: w / z for g, w in tempered.items()}
-
-    counts = {
-        r["g"]: r["n"]
-        for r in df.filter(F.col(group_col).isin(*weights))
-        .groupBy(F.col(group_col).alias("g"))
-        .agg(F.count("*").alias("n"))
-        .collect()  # bounded: one row per mixing group
-    }
-    present = {g: n for g, n in counts.items() if n > 0}
-    if not present:
-        return df.filter(F.lit(False))
-    total = min(present[g] / target[g] for g in present)
-    thresholds = {
-        g: min(1 << 32, int(total * target[g] / present[g] * (1 << 32)))
-        for g in present
-    }
-
-    thr = None
-    for g, t in sorted(thresholds.items()):
-        cond = F.col(group_col) == g
-        thr = F.when(cond, t) if thr is None else thr.when(cond, t)
-    thr = thr.otherwise(F.lit(-1))  # groups outside the mix never pass
-    salted = F.concat(F.lit("mixture:"), F.col(key_col).cast("string"))
-    gate = F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("long")
-    return df.filter(gate < thr)

@@ -1,5 +1,5 @@
-"""Multimodal (binary) column plumbing: decode / feature-extract / resize /
-frame-sample over opaque binary payloads with typed metadata.
+"""Multimodal (binary) column plumbing: decode / feature-extract / resize
+over opaque binary payloads with typed metadata.
 
 The Spark-side plumbing (schemas, partitioning, mapInPandas batch shape,
 metadata propagation) is real and tested. Pixel decoding:
@@ -18,30 +18,21 @@ metadata propagation) is real and tested. Pixel decoding:
   Together these power genuine decode, dimension verification,
   channel-mean features, nearest-neighbor resize and the >5 MB
   compression pass (compress_images) for all three reference formats;
-* **audio/wav — REAL**: a pure stdlib+numpy RIFF/WAVE reader (PCM 8/16/32
-  and IEEE float32, any channel count) feeding genuine signal features
-  (duration, RMS, zero-crossing rate, band energies) plus a
-  metadata-consistency check on duration_ms;
-* remaining payloads (video containers, compressed audio,
-  arithmetic-coded/hierarchical JPEG) are environment-gated:
-  `decode_features` raises NotImplementedError for them unless
-  `fake=True`, which substitutes a deterministic synthetic decoder so the
-  pipeline shape can still be exercised end-to-end.
+* remaining payloads (audio and video, arithmetic-coded/hierarchical
+  JPEG) are environment-gated: `decode_features` raises
+  NotImplementedError for them unless `fake=True`, which substitutes a
+  deterministic synthetic decoder so the pipeline shape can still be
+  exercised end-to-end.
 
 Reference parity: the reference validates/compresses images with sharp and
 renders PDFs with pdftoppm (/root/reference/src/services/image.service.js:186-240,
 src/services/pdf.service.js:17-109); here those are per-batch Arrow operators.
 
-Multimodal dedup: `average_hash` / `image_hashes` / `image_near_pairs`,
-`audio_fingerprint` / `audio_hashes` / `audio_near_pairs` and
-`video_frame_hashes` / `video_near_pairs` tie the real codecs into the
-dedup family — a 64-bit perceptual signature per asset/frame (aHash for
-rasters, sign-of-delta frame features for audio; the decode is the only
-Python stage and 8 bytes/signature leave it), then the shared
-dedup.banded_hamming_pairs 4x16-bit pigeonhole band join + bit_count(xor)
-verification, all JVM-side. Video pairing aggregates the frame-level band
-join into per-pair matched-frame overlap fractions (partial edits pair,
-different cuts don't).
+Image dedup: `average_hash` / `image_hashes` / `image_near_pairs` tie the
+real codecs into the dedup family — a 64-bit perceptual signature per
+image (the decode is the only Python stage and 8 bytes/signature leave
+it), then the shared dedup.banded_hamming_pairs 4x16-bit pigeonhole band
+join + bit_count(xor) verification, all JVM-side.
 """
 
 from __future__ import annotations
@@ -53,7 +44,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -145,8 +135,7 @@ def encode_bmp(arr: np.ndarray) -> bytes:
 # Decoder: 8-bit depth, color types 0/2/3/4/6, all five scanline filters,
 # non-interlaced (the overwhelmingly common case; Adam7 rejected loudly).
 # Encoder: 8-bit RGB, filter 0, one IDAT. The reference validates/compresses
-# PNG/JPEG via sharp (src/services/image.service.js:186-240); PNG is fully
-# real here, JPEG (DCT+huffman) stays environment-gated.
+# PNG/JPEG via sharp (src/services/image.service.js:186-240).
 # ---------------------------------------------------------------------------
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -282,105 +271,6 @@ def encode_png(arr: np.ndarray) -> bytes:
     )
 
 
-# ---------------------------------------------------------------------------
-# Real audio path: RIFF/WAVE (pure stdlib+numpy — PCM is a plain header +
-# sample raster, like BMP). PCM 8/16/32-bit and IEEE float32, any channels.
-# ---------------------------------------------------------------------------
-
-def decode_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """-> (sample_rate, n_channels, float64 samples in [-1, 1], shape (n, ch))."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (ln,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + ln]
-        if cid == b"fmt " and len(body) >= 16:
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            if len(body) < ln:
-                raise ValueError("truncated WAV data chunk")
-            data = body
-        pos += 8 + ln + (ln & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk in WAV")
-    audio_format, channels, rate, _, _, bits = fmt
-    if channels < 1 or rate < 1:
-        raise ValueError("bad WAV fmt chunk")
-    if audio_format == 1:  # integer PCM
-        if bits == 8:  # unsigned
-            x = np.frombuffer(data, np.uint8).astype(np.float64)
-            x = (x - 128.0) / 128.0
-        elif bits == 16:
-            x = np.frombuffer(data, "<i2").astype(np.float64) / 32768.0
-        elif bits == 32:
-            x = np.frombuffer(data, "<i4").astype(np.float64) / 2147483648.0
-        else:
-            raise ValueError(f"unsupported PCM bit depth {bits}")
-    elif audio_format == 3 and bits == 32:  # IEEE float
-        x = np.frombuffer(data, "<f4").astype(np.float64)
-    else:
-        raise ValueError(
-            f"unsupported WAV format code {audio_format} (PCM/float only)"
-        )
-    n = len(x) // channels
-    return rate, channels, x[: n * channels].reshape(n, channels)
-
-
-def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
-    """(n,) or (n, ch) float in [-1, 1] -> 16-bit PCM WAV bytes."""
-    if samples.ndim == 1:
-        samples = samples[:, np.newaxis]
-    ch = samples.shape[1]
-    pcm = np.clip(np.round(samples * 32767.0), -32768, 32767).astype("<i2")
-    data = pcm.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
-
-
-def _wav_features(
-    payload: bytes, meta_duration_ms
-) -> tuple[list[float], bool, str | None]:
-    """Real audio decode: 16 features = [duration, rate, channels, RMS, ZCR,
-    11 band energies]; validity from metadata consistency (declared
-    duration_ms must match the decoded sample count)."""
-    rate, ch, x = decode_wav(payload)
-    dur_ms = round(x.shape[0] / rate * 1000)
-    if meta_duration_ms is not None and abs(meta_duration_ms - dur_ms) > 1:
-        return [], False, "METADATA_DURATION_MISMATCH"
-    mono = x.mean(axis=1)
-    rms = float(np.sqrt(np.mean(mono**2))) if len(mono) else 0.0
-    zcr = (
-        float(np.mean(np.abs(np.diff(np.signbit(mono).astype(np.int8)))))
-        if len(mono) > 1
-        else 0.0
-    )
-    bands = [
-        float(np.sqrt(np.mean(b**2))) if len(b) else 0.0
-        for b in np.array_split(mono, 11)
-    ]
-    feat = [
-        min(dur_ms / 60000.0, 1.0),
-        min(rate / 48000.0, 1.0),
-        min(ch / 2.0, 1.0),
-        min(rms, 1.0),
-        min(zcr, 1.0),
-        *[min(b, 1.0) for b in bands],
-    ]
-    return feat[:16], True, None
-
-
 def resize_nearest(arr: np.ndarray, tw: int, th: int) -> np.ndarray:
     h, w = arr.shape[:2]
     yi = np.arange(th) * h // th
@@ -426,11 +316,12 @@ def decode_features(media: DataFrame, fake: bool = False) -> DataFrame:
     """mapInPandas over binary payloads -> per-media feature rows.
 
     Arrow-batched; the batch iterator shape (multiple pdf.DataFrames per
-    partition) is the real production contract. image/bmp and image/png
-    payloads are decoded for REAL (pure stdlib+numpy codecs); other
-    image/audio mimes need codec libraries not present here — fake=True
+    partition) is the real production contract. Images whose mime is in
+    REAL_DECODERS (bmp, png, jpeg) are decoded for REAL; every other
+    payload needs codec libraries not present here — fake=True
     substitutes the deterministic synthetic decoder for them, otherwise
     they raise."""
+    native = ", ".join(REAL_DECODERS)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -452,19 +343,12 @@ def decode_features(media: DataFrame, fake: bool = False) -> DataFrame:
                         feat, valid, err = [], False, f"DECODE_ERROR: {exc}"
                     rows.append({**base, "feat": feat, "valid": valid, "error": err})
                     continue
-                if r.kind == "audio" and r.mime == "audio/wav":
-                    try:
-                        feat, valid, err = _wav_features(payload, r.duration_ms)
-                    except Exception as exc:
-                        feat, valid, err = [], False, f"DECODE_ERROR: {exc}"
-                    rows.append({**base, "feat": feat, "valid": valid, "error": err})
-                    continue
                 if not fake:
                     raise NotImplementedError(
                         f"decoding {r.mime!r} requires codec libraries not "
-                        "present in this environment (image/bmp is supported "
-                        "natively); pass fake=True for the deterministic "
-                        "synthetic decoder"
+                        f"present in this environment ({native} images are "
+                        "supported natively); pass fake=True for the "
+                        "deterministic synthetic decoder"
                     )
                 valid = (
                     r.kind != "image"
@@ -604,241 +488,6 @@ def image_near_pairs(media: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Audio fingerprinting + audio near-dup pairs (multimodal dedup)
-# ---------------------------------------------------------------------------
-
-def audio_fingerprint(samples: np.ndarray, n_frames: int = 17) -> int:
-    """64-bit sign-of-delta fingerprint of a mono float signal: split into
-    `n_frames` equal frames, per frame compute 4 deterministic features —
-    energy, zero-crossing count, and first/second-difference energy ratios
-    (spectral-tilt proxies) — then bit (t-1)*4+b is 1 iff feature b rose
-    from frame t-1 to frame t. Gain changes scale energy uniformly and leave
-    ratios/ZCR alone, so re-encodes and level changes hash identically;
-    content changes (other sweeps/tones) land tens of bits away. Pure
-    float64 numpy over fixed shapes — deterministic across hosts."""
-    if (n_frames - 1) * 4 > 64:
-        raise ValueError("(n_frames - 1) * 4 bits must fit a 64-bit signature")
-    if samples.ndim == 2:
-        samples = samples.mean(axis=1)
-    frame_len = len(samples) // n_frames
-    if frame_len < 3:
-        raise ValueError(f"signal too short for {n_frames}-frame fingerprint")
-    fr = samples[: frame_len * n_frames].reshape(n_frames, frame_len)
-    eps = 1e-12
-    energy = (fr**2).mean(axis=1)
-    zc = np.abs(np.diff(np.signbit(fr), axis=1)).sum(axis=1)
-    d1 = (np.diff(fr, axis=1) ** 2).mean(axis=1) / (energy + eps)
-    d2 = (np.diff(fr, 2, axis=1) ** 2).mean(axis=1) / (energy + eps)
-    feats = np.stack([energy, zc, d1, d2], axis=1)
-    v = 0
-    for t in range(1, n_frames):
-        for b in range(4):
-            if feats[t, b] > feats[t - 1, b]:
-                v |= 1 << ((t - 1) * 4 + b)
-    return v
-
-
-def audio_hashes(media: DataFrame) -> DataFrame:
-    """(media_id, afp) for every decodable audio row — the signature half of
-    audio near-dup detection, mirroring image_hashes: the REAL WAV decode is
-    the one Python stage (Arrow-batched), 8 bytes/clip leave it. Undecodable,
-    too-short, or non-audio rows are dropped. The uint64 fingerprint is
-    emitted in Spark's signed-long bit pattern (see image_hashes)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.kind != "audio" or r.mime != "audio/wav" or r.payload is None:
-                    continue
-                try:
-                    _, _, x = decode_wav(bytes(r.payload))
-                    h = audio_fingerprint(x)
-                except Exception:
-                    continue
-                if h >= 1 << 63:  # two's-complement into LongType
-                    h -= 1 << 64
-                rows.append({"media_id": r.media_id, "afp": h})
-            yield pd.DataFrame(rows, columns=["media_id", "afp"])
-
-    return media.select("media_id", "kind", "mime", "payload").mapInPandas(
-        run, schema="media_id string, afp long"
-    )
-
-
-def audio_near_pairs(media: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Audio near-dup pairs: hamming(fingerprint) <= max_hamming — exact
-    re-encodes and pure gain changes land at 0, light retouches (a faint
-    added hum) within the radius, different material tens of bits away.
-    Same 4x16-bit pigeonhole band join as the image/simhash family; all
-    pairing JVM-side."""
-    from .dedup import banded_hamming_pairs
-
-    return banded_hamming_pairs(
-        audio_hashes(media),
-        id_col="media_id",
-        sig_col="afp",
-        n_bands=4,
-        band_bits=16,
-        max_hamming=max_hamming,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Video near-dup: MJBM frame container + per-frame hashing + overlap pairing
-# ---------------------------------------------------------------------------
-# Standard video codecs (H.264 etc.) stay environment-gated stubs by design;
-# MJBM is the deterministic REAL-plumbing stand-in: a parseable motion-JPEG-
-# style container of length-prefixed real BMP frames, so the Spark-side
-# video-dedup plan (container parse -> per-frame signature -> frame-level
-# banded join -> per-pair overlap fraction) runs over genuine pixels.
-
-MJBM_MAGIC = b"MJBM"
-MJBM_MIME = "video/x-mjbm"
-
-
-def encode_mjbm(frames: list[np.ndarray], fps: int = 1) -> bytes:
-    """Real-raster video container: magic, fps, frame count, then each frame
-    as a length-prefixed 24-bit BMP. Byte-deterministic for fixed frames."""
-    out = [MJBM_MAGIC, struct.pack("<HI", fps, len(frames))]
-    for fr in frames:
-        b = encode_bmp(fr)
-        out.append(struct.pack("<I", len(b)))
-        out.append(b)
-    return b"".join(out)
-
-
-def decode_mjbm(payload: bytes) -> tuple[int, list[np.ndarray]]:
-    """-> (fps, [HxWx3 uint8 frames]). Raises on malformed containers."""
-    if len(payload) < 10 or payload[:4] != MJBM_MAGIC:
-        raise ValueError("not an MJBM payload")
-    fps, n = struct.unpack_from("<HI", payload, 4)
-    pos, frames = 10, []
-    for _ in range(n):
-        if pos + 4 > len(payload):
-            raise ValueError("truncated MJBM frame table")
-        (ln,) = struct.unpack_from("<I", payload, pos)
-        pos += 4
-        if pos + ln > len(payload):
-            raise ValueError("truncated MJBM frame payload")
-        frames.append(decode_bmp(payload[pos : pos + ln])[2])
-        pos += ln
-    return fps, frames
-
-
-def video_frame_hashes(media: DataFrame, stride: int = 1) -> DataFrame:
-    """(media_id, frame_idx, fhash) for every `stride`-th frame of every
-    decodable MJBM video row — the signature half of video near-dup. The
-    container parse + aHash is the one Python stage (Arrow-batched); 8
-    bytes/frame leave it. Undecodable or non-video rows are dropped."""
-    if stride < 1:
-        raise ValueError("stride must be >= 1")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.kind != "video" or r.mime != MJBM_MIME or r.payload is None:
-                    continue
-                try:
-                    _, frames = decode_mjbm(bytes(r.payload))
-                except Exception:
-                    continue
-                for i in range(0, len(frames), stride):
-                    h = average_hash(frames[i])
-                    if h >= 1 << 63:  # two's-complement into LongType
-                        h -= 1 << 64
-                    rows.append(
-                        {"media_id": r.media_id, "frame_idx": i, "fhash": h}
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "fhash"])
-
-    return media.select("media_id", "kind", "mime", "payload").mapInPandas(
-        run, schema="media_id string, frame_idx int, fhash long"
-    )
-
-
-def video_near_pairs(
-    media: DataFrame,
-    min_overlap: float = 0.6,
-    max_hamming: int = 3,
-    stride: int = 1,
-) -> DataFrame:
-    """Video near-dup pairs: (id_a, id_b, overlap) where overlap is the
-    SMALLER of the two directional matched-frame fractions — frame i of A
-    is 'matched' if some frame of B is within hamming max_hamming of its
-    aHash — and pairs below min_overlap are dropped. Catches re-encodes,
-    per-frame retouches, and partial edits (a few swapped frames) while a
-    mostly-different cut falls under the threshold.
-
-    Plan: per-frame signatures (8 bytes/frame out of Python) -> the shared
-    4x16-bit banded hamming join at FRAME granularity (frame key =
-    media_id#frame_idx) -> strip the frame level and aggregate distinct
-    matched frames per unordered video pair -> join per-video frame counts
-    (broadcast; one row per video) -> fraction filter. Everything after
-    the signature stage is JVM-side; no cartesian product at any level."""
-    from .dedup import banded_hamming_pairs
-
-    fh = video_frame_hashes(media, stride=stride)
-    n_frames = fh.groupBy("media_id").agg(F.count("*").alias("n_frames"))
-    # frame key delimiter: the unit-separator control char, which cannot
-    # collide with ids the way '#' or '/' could (frame_idx is numeric, so
-    # splitting at the FIRST delimiter recovers the id either way — unless
-    # the id itself contained the delimiter)
-    sep = "\x1f"
-    sigs = fh.select(
-        F.concat_ws(sep, "media_id", "frame_idx").alias("id"),
-        F.col("fhash").alias("sig"),
-    )
-    fp = banded_hamming_pairs(sigs, max_hamming=max_hamming)
-    va = F.substring_index(F.col("id_a"), sep, 1)
-    vb = F.substring_index(F.col("id_b"), sep, 1)
-    cross = (
-        fp.select(va.alias("va"), F.col("id_a").alias("fa"),
-                  vb.alias("vb"), F.col("id_b").alias("fb"))
-        .filter(F.col("va") != F.col("vb"))
-        # normalize to unordered video pair, keeping each side's frame key
-        .select(
-            F.least("va", "vb").alias("id_a"),
-            F.greatest("va", "vb").alias("id_b"),
-            F.when(F.col("va") <= F.col("vb"), F.col("fa")).otherwise(F.col("fb")).alias("frame_a"),
-            F.when(F.col("va") <= F.col("vb"), F.col("fb")).otherwise(F.col("fa")).alias("frame_b"),
-        )
-    )
-    matched = cross.groupBy("id_a", "id_b").agg(
-        F.countDistinct("frame_a").alias("m_a"),
-        F.countDistinct("frame_b").alias("m_b"),
-    )
-    counts = F.broadcast(n_frames)
-    return (
-        matched.join(counts.withColumnRenamed("media_id", "id_a"), "id_a")
-        .withColumnRenamed("n_frames", "n_a")
-        .join(counts.withColumnRenamed("media_id", "id_b"), "id_b")
-        .withColumnRenamed("n_frames", "n_b")
-        .withColumn(
-            "overlap",
-            F.least(F.col("m_a") / F.col("n_a"), F.col("m_b") / F.col("n_b")),
-        )
-        .filter(F.col("overlap") >= min_overlap)
-        .select("id_a", "id_b", "overlap")
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per target frame timestamp —
-    pure column math (sequence over duration), the decode itself deferred to
-    decode_features on the per-frame payload service."""
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms)
-            )
-        ).alias("frame_ts_ms"),
-    )
-
-
 def gradient_bmp(w: int, h: int, seed: int = 0) -> bytes:
     """Deterministic real BMP: RGB gradient varied by seed."""
     y, x = np.mgrid[0:h, 0:w]
@@ -902,9 +551,8 @@ def synthesize_media(spark, n: int = 64) -> DataFrame:
     """Deterministic synthetic binary media table for tests. Image rows
     rotate REAL 24-bit BMP, REAL PNG and REAL baseline JPEG payloads
     (decodable, resizable); some PNGs are deliberately under MIN_DIM so the
-    dimension gate fires. Audio rows are REAL 16-bit PCM WAV sine sweeps
-    with consistent duration_ms; video rows keep opaque bytes under the
-    environment-gated mime."""
+    dimension gate fires. Audio and video rows keep opaque bytes under
+    environment-gated mimes."""
     rows = []
     for i in range(n):
         kind = ["image", "audio", "video"][i % 3]
@@ -928,23 +576,12 @@ def synthesize_media(spark, n: int = 64) -> DataFrame:
                     (f"m{i:05d}", "image", "image/jpeg", gradient_jpeg(w, h, i), w, h, None)
                 )
             continue
-        if kind == "audio":
-            # REAL 16-bit PCM WAV: short sine sweep, freq/length vary by i
-            dur_ms = 200 + (i % 5) * 100
-            rate = 16000
-            t = np.arange(int(rate * dur_ms / 1000)) / rate
-            sig = 0.5 * np.sin(2 * np.pi * (220 + 20 * i) * t)
-            rows.append(
-                (f"m{i:05d}", "audio", "audio/wav", encode_wav(sig, rate),
-                 None, None, dur_ms)
-            )
-            continue
         payload = hashlib.sha256(f"media{i}".encode()).digest() * (i % 7 + 1)
         rows.append(
             (
                 f"m{i:05d}",
                 kind,
-                "video/mp4",
+                "audio/mpeg" if kind == "audio" else "video/mp4",
                 payload,
                 None,
                 None,

@@ -1,8 +1,8 @@
 """Text analysis operators for training-data pipelines (all JVM-side).
 
-Language-ID (stopword-overlap heuristic), quality scoring, token counting
-(whitespace + BPE-ish subword estimate), and document fingerprinting
-(polynomial rolling hash) — each a single narrow projection over the corpus.
+Language-ID (stopword-overlap heuristic), quality scoring, whitespace token
+counting, and document fingerprinting (polynomial rolling hash) — each a
+single narrow projection over the corpus.
 """
 
 from __future__ import annotations
@@ -57,20 +57,6 @@ def lang_id(df: DataFrame, text_col: str) -> DataFrame:
 def token_count(text: Column) -> Column:
     """Whitespace token count."""
     return F.size(F.split(F.trim(text), r"\s+"))
-
-
-def subword_estimate(text: Column) -> Column:
-    """BPE-ish token estimate: word-pieces via a regex over word boundaries,
-    digits, and punctuation (≈ GPT-style pre-tokenizer), then ~chars/4 for
-    long words — deterministic column arithmetic."""
-    pieces = F.size(
-        F.filter(
-            F.split(text, r"(?=[A-Z])|[\s]+|(?<=[a-z])(?=[0-9])|(?=[^\w\s])"),
-            lambda x: x != "",
-        )
-    )
-    long_chars = F.length(F.regexp_replace(text, r"\s", ""))
-    return F.greatest(pieces, (long_chars / F.lit(4)).cast("int"))
 
 
 def quality_score(df: DataFrame, text_col: str) -> DataFrame:

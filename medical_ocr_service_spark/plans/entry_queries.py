@@ -2993,125 +2993,6 @@ def image_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.image_near_pairs(media, max_hamming=3).orderBy("id_a", "id_b")
 
 
-@query("audio_near_dup_pairs")
-def audio_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio dedup END-TO-END over REAL WAV decode (rows-only: PCM decode is
-    not SQL-expressible): eight structurally distinct 1 s signals (sweeps,
-    pure/dual tones, AM, harmonic stack, gated burst — every cross-base
-    fingerprint >8 bits apart, verified constants) where some reappear as
-    gain changes (hamming 0-1: the per-frame energy fingerprint is
-    level-invariant up to 16-bit quantization), a 16-bit re-encode
-    (hamming 0) and a faint 50 Hz hum overlay (hamming 1) -> 64-bit
-    spectral-band fingerprint per clip (the only Python stage; 8 bytes/clip
-    leave the Arrow batch) -> the shared 4x16-bit pigeonhole band join +
-    bit_count(xor) <= 3, all JVM-side. Corrupt payloads and image rows are
-    dropped, never paired. The reference handles no audio mimetypes at all
-    (its only content dedup is image/file sha256 —
-    src/services/gpt-vision.service.js:22, feedback.service.js:28-58), so
-    this operator is a training-data-pipeline extension, not a parity
-    claim: the perceptual analogue of that hash gate for audio columns."""
-    import numpy as np
-
-    from ..operators import multimodal as M
-
-    rate = 16000
-    t = np.arange(rate) / rate
-    bases = {
-        "up": 0.5 * np.sin(2 * np.pi * (220 + 330 * t) * t),
-        "down": 0.5 * np.sin(2 * np.pi * (880 - 330 * t) * t),
-        "tone": 0.5 * np.sin(2 * np.pi * 440 * t),
-        "duo": 0.3 * np.sin(2 * np.pi * 310 * t) + 0.3 * np.sin(2 * np.pi * 1270 * t),
-        "am": 0.5 * np.sin(2 * np.pi * 620 * t) * (0.5 + 0.5 * np.sin(2 * np.pi * 3 * t)),
-        "harm": 0.25 * (
-            np.sin(2 * np.pi * 150 * t)
-            + np.sin(2 * np.pi * 450 * t)
-            + np.sin(2 * np.pi * 750 * t)
-        ),
-        "hi": 0.5 * np.sin(2 * np.pi * 2900 * t),
-        "burst": 0.5 * np.sin(2 * np.pi * 500 * t) * np.where((t * 4) % 1 < 0.5, 1.0, 0.05),
-    }
-
-    def wav(x: "np.ndarray") -> bytes:
-        return M.encode_wav(np.clip(x, -1, 1), rate)
-
-    rows: list[tuple] = [
-        (f"aud{i:02d}", "audio", "audio/wav", wav(x), None, None, 1000)
-        for i, x in enumerate(bases.values())
-    ]
-    # near-dup copies (suffixes: g=gain, r=re-encode, h=hum overlay)
-    rows.append(("aud00g", "audio", "audio/wav", wav(bases["up"] * 0.8), None, None, 1000))
-    rows.append(("aud03g", "audio", "audio/wav", wav(bases["duo"] * 0.8), None, None, 1000))
-    rows.append(("aud04g", "audio", "audio/wav", wav(bases["am"] * 0.8), None, None, 1000))
-    reenc = M.decode_wav(wav(bases["down"]))[2][:, 0]
-    rows.append(("aud01r", "audio", "audio/wav", wav(reenc), None, None, 1000))
-    hum = bases["up"] + 0.08 * np.sin(2 * np.pi * 50 * t)
-    rows.append(("aud00h", "audio", "audio/wav", wav(hum), None, None, 1000))
-    rows.append(("audxx", "audio", "audio/wav", b"not riff", None, None, 1000))
-    rows.append(("img00", "image", "image/bmp", M.gradient_bmp(64, 48, seed=1), 64, 48, None))
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    return M.audio_near_pairs(media, max_hamming=3).orderBy("id_a", "id_b")
-
-
-@query("video_near_dup_pairs")
-def video_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video dedup END-TO-END over the MJBM real-raster container (rows-only:
-    frame decode is not SQL-expressible): two 6-frame originals plus a
-    LOSSY re-encode of each — every frame decoded and put through a real
-    quality-90 JPEG roundtrip before re-containering, landing each frame at
-    aHash hamming 0-1 of its source (overlap 1.0) — a partial edit sharing
-    4 of 6 frames (overlap 2/3), an all-different cut, a truncated
-    container and an opaque video/mp4 row (both dropped). Frame seeds
-    chosen so every cross-video frame aHash is >=4 bits apart (verified
-    constants), so the only frame matches are the designed ones at the
-    hamming<=3 radius.
-    Plan: per-frame aHash (the only Python stage; 8 bytes/frame leave the
-    Arrow batch) -> shared banded hamming join at frame granularity ->
-    per-pair directional matched-frame fractions -> min-fraction filter at
-    0.6 — everything after the signature stage JVM-side, no cartesian
-    product at any level."""
-    from ..functions.jpeg import decode_jpeg, encode_jpeg
-    from ..operators import multimodal as M
-
-    def clip(seeds: list[int]) -> bytes:
-        return M.encode_mjbm(
-            [M.decode_bmp(M.gradient_bmp(168, 128, seed=s))[2] for s in seeds]
-        )
-
-    def lossy_reencode(payload: bytes) -> bytes:
-        # a REAL re-encode (advice r4): decode the container, run every
-        # frame through a lossy quality-90 JPEG roundtrip, re-container —
-        # the near-dup pair exercises codec-noise invariance, not byte
-        # equality (the audio aud01r twin does the same via quantization)
-        fps, frames = M.decode_mjbm(payload)
-        return M.encode_mjbm(
-            [decode_jpeg(encode_jpeg(fr, quality=90))[2] for fr in frames],
-            fps=fps,
-        )
-
-    cut_a = [100, 101, 102, 103, 104, 105]
-    cut_b = [300, 301, 302, 303, 306, 307]
-    cut_c = [400, 401, 402, 403, 404, 405]
-    v0 = clip(cut_a)
-    v4 = clip(cut_c)
-    rows = [
-        ("vid0", "video", M.MJBM_MIME, v0, None, None, 6000),
-        ("vid1", "video", M.MJBM_MIME, lossy_reencode(v0), None, None, 6000),
-        ("vid2", "video", M.MJBM_MIME, clip([100, 101, 102, 103, 200, 201]), None, None, 6000),
-        ("vid3", "video", M.MJBM_MIME, clip(cut_b), None, None, 6000),  # different cut
-        ("vid4", "video", M.MJBM_MIME, v4, None, None, 6000),
-        ("vid5", "video", M.MJBM_MIME, lossy_reencode(v4), None, None, 6000),
-        ("vidxx", "video", M.MJBM_MIME, v0[:40], None, None, 6000),  # truncated
-        ("vidyy", "video", "video/mp4", b"\x00" * 64, None, None, 6000),  # opaque
-        ("img00", "image", "image/bmp", M.gradient_bmp(168, 128, seed=1), 168, 128, None),
-    ]
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    return (
-        M.video_near_pairs(media, min_overlap=0.6, max_hamming=3)
-        .withColumn("overlap", F.round("overlap", 6))
-        .orderBy("id_a", "id_b")
-    )
-
-
 @query(
     "length_deciles",
     """
@@ -3593,11 +3474,13 @@ def event_type_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DRIVER_WINDOW: list[str] = [
     # ROUND-5 ROTATION — executes the written r4 plan (the comment that
     # lived here last round), amended by this round's lineage changes.
-    # Slots 1-15: every never-driver-verified query (13 registered late in
+    # Slots 1-2: the two stalest oracle-checked yielders (last driver rows
+    # r1-r3).
+    # Slots 3-15: every never-driver-verified query (11 registered late in
     # r4, plus the two r4 slot-yielders f10/t5 whose last driver rows are
     # r2-green on unchanged code).
-    "audio_near_dup_pairs",
-    "video_near_dup_pairs",
+    "q1_pricing_summary",
+    "a1_customer_rollup",
     "daily_new_users",
     "cohort_retention",
     "conversion_funnel",
@@ -3664,20 +3547,18 @@ _DRIVER_WINDOW: list[str] = [
     "f11_json_parse_rescue",
     "s10_export_join",
 ]
-# The 15 yielders this round (the only registered queries without an r4 or
+# The 13 yielders this round (the only registered queries without an r4 or
 # r5 driver row; every one is multi-round driver-green on unchanged code,
-# and six are additionally re-measured by this round's bench/pytest —
+# and several are additionally re-measured by this round's bench/pytest —
 # f2_normalize_for_embedding, f7_full_name_concat and f3_digit_strip
 # joined the list when the three late round-5 registrations took their
 # rotation slots; each is r1+r3 driver-green, a single pure-function
 # projection, and pytest-held):
-#   q1_pricing_summary, a1_customer_rollup          r1+r2+r3 driver-green
 #   ann_cosine_topk, j8_detail_enrichment_3way,
 #   j11_training_antijoin, f8_content_hash_dedup    r3 driver-green + in
 #                                                   bench.py HEADLINE,
 #                                                   re-measured at sf0.1
 #                                                   every round incl. r5
-#   q1_pricing_summary is also a HEADLINE query     (same re-measurement)
 #   a5_batch_rollup, a16_group_concat_rollup,
 #   p1_tenant_filter, f12_cosine_similarity,
 #   f13_trigram_similarity, d4_boilerplate_strip    r3 driver-green,
@@ -3685,8 +3566,8 @@ _DRIVER_WINDOW: list[str] = [
 #                                                   (p1: tenant-isolation
 #                                                   suite; d4: golden; f12/
 #                                                   f13: JVM-twin tests)
-# All 110 registered queries therefore hold a driver row from r4 or r5
-# except these 15, each r3-fresh — nothing is more than 2 rounds stale.
+# All 108 registered queries therefore hold a driver row from r4 or r5
+# except these 13, each r3-fresh — nothing is more than 2 rounds stale.
 
 
 def _apply_driver_window() -> None:

@@ -207,9 +207,6 @@ def test_multimodal_plumbing(spark):
     feats2 = multimodal.decode_features(media, fake=True).toPandas()
     assert feats.sort_values("media_id")["sha256"].tolist() == feats2.sort_values("media_id")["sha256"].tolist()
 
-    frames = multimodal.frame_sample_plan(media, every_ms=500).toPandas()
-    assert (frames.groupby("media_id").size() > 0).all()
-
     import pytest as _pytest
 
     with _pytest.raises(Exception, match="NotImplementedError|decoding"):
@@ -557,56 +554,6 @@ def test_average_hash_band_sign_bit(spark):
     assert [(out[0]["id_a"], out[0]["id_b"], out[0]["hamming"])] == [("s0", "s1", 0)]
 
 
-def test_audio_near_pairs_fingerprint(spark):
-    # audio dedup over REAL WAV decode: a 16-bit re-encode and a pure gain
-    # change hash identically (hamming 0); a faint added 50 Hz hum stays
-    # within the radius (hamming 1); different material (reversed sweep,
-    # pure tone) lands tens of bits away; corrupt payloads and image rows
-    # are dropped, never paired.
-    import numpy as np
-
-    from medical_ocr_service_spark.operators import multimodal as M
-
-    rate = 16000
-    t = np.arange(rate) / rate
-    up = 0.5 * np.sin(2 * np.pi * (220 + 330 * t) * t)
-    down = 0.5 * np.sin(2 * np.pi * (880 - 330 * t) * t)
-    tone = 0.5 * np.sin(2 * np.pi * 440 * t)
-    roundtrip = M.decode_wav(M.encode_wav(up, rate))[2][:, 0]
-    hum = np.clip(up + 0.08 * np.sin(2 * np.pi * 50 * t), -1, 1)
-    rows = [
-        ("a0", "audio", "audio/wav", M.encode_wav(up, rate), None, None, 1000),
-        ("a1", "audio", "audio/wav", M.encode_wav(roundtrip, rate), None, None, 1000),
-        ("a2", "audio", "audio/wav", M.encode_wav(up * 0.8, rate), None, None, 1000),
-        ("a3", "audio", "audio/wav", M.encode_wav(hum, rate), None, None, 1000),
-        ("a4", "audio", "audio/wav", M.encode_wav(down, rate), None, None, 1000),
-        ("a5", "audio", "audio/wav", M.encode_wav(tone, rate), None, None, 1000),
-        ("a6", "audio", "audio/wav", b"not riff", None, None, 1000),
-        ("m0", "image", "image/bmp", M.gradient_bmp(200, 150, seed=3), 200, 150, None),
-    ]
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-
-    sigs = {r["media_id"]: r["afp"] for r in M.audio_hashes(media).collect()}
-    assert sorted(sigs) == ["a0", "a1", "a2", "a3", "a4", "a5"]
-    assert sigs["a0"] == sigs["a1"] == sigs["a2"]
-
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in M.audio_near_pairs(media).collect()
-    }
-    dup_group = ["a0", "a1", "a2"]
-    for i, x in enumerate(dup_group):
-        for y in dup_group[i + 1:]:
-            assert pairs[(x, y)] == 0
-    for x in dup_group:
-        assert pairs[(x, "a3")] == 1
-    assert all(
-        "a4" not in p and "a5" not in p and "a6" not in p and "m0" not in p
-        for p in pairs
-    )
-    assert len(pairs) == 6
-
-
 def test_banded_hamming_pairs_guards(spark):
     from medical_ocr_service_spark.operators.dedup import banded_hamming_pairs
 
@@ -666,62 +613,6 @@ def test_banded_hamming_pairs_fuzz_vs_bruteforce(spark, bases, perturbs, radius)
         for r in banded_hamming_pairs(df, max_hamming=radius).collect()
     }
     assert got == expected
-
-
-def test_video_near_pairs_overlap(spark):
-    # video dedup over the MJBM real-raster container: an exact re-encode
-    # overlaps 1.0; a partial edit (2 of 6 frames swapped) overlaps 2/3 and
-    # still pairs at min_overlap=0.6; an all-different cut never pairs; a
-    # truncated container and an opaque video/mp4 row are dropped. Frame
-    # seeds chosen so every cross-video frame hash is >= 5 bits apart
-    # (verified constants).
-    from medical_ocr_service_spark.operators import multimodal as M
-
-    def frames(seeds):
-        return [M.decode_bmp(M.gradient_bmp(168, 128, seed=s))[2] for s in seeds]
-
-    base = [100, 101, 102, 103, 104, 105]
-    v0 = M.encode_mjbm(frames(base))
-    v1 = M.encode_mjbm(frames(base))                       # re-encode
-    v2 = M.encode_mjbm(frames([100, 101, 102, 103, 200, 201]))  # partial edit
-    v3 = M.encode_mjbm(frames([300, 301, 302, 303, 306, 307]))  # different cut
-    rows = [
-        ("v0", "video", M.MJBM_MIME, v0, None, None, 6000),
-        ("v1", "video", M.MJBM_MIME, v1, None, None, 6000),
-        ("v2", "video", M.MJBM_MIME, v2, None, None, 6000),
-        ("v3", "video", M.MJBM_MIME, v3, None, None, 6000),
-        ("v4", "video", M.MJBM_MIME, v0[:40], None, None, 6000),  # truncated
-        ("v5", "video", "video/mp4", b"\x00" * 64, None, None, 6000),  # opaque
-        ("m0", "image", "image/bmp", M.gradient_bmp(168, 128, seed=1), 168, 128, None),
-    ]
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-
-    fh = M.video_frame_hashes(media)
-    per_vid = {r["media_id"] for r in fh.select("media_id").distinct().collect()}
-    assert per_vid == {"v0", "v1", "v2", "v3"}
-    assert fh.count() == 24  # 6 frames each; v4/v5/m0 dropped
-
-    got = {
-        (r["id_a"], r["id_b"]): r["overlap"]
-        for r in M.video_near_pairs(media, min_overlap=0.6).collect()
-    }
-    assert set(got) == {("v0", "v1"), ("v0", "v2"), ("v1", "v2")}
-    assert got[("v0", "v1")] == 1.0
-    assert abs(got[("v0", "v2")] - 4 / 6) < 1e-12
-    assert abs(got[("v1", "v2")] - 4 / 6) < 1e-12
-    # raising the bar past 2/3 keeps only the exact re-encode
-    strict = {
-        (r["id_a"], r["id_b"])
-        for r in M.video_near_pairs(media, min_overlap=0.7).collect()
-    }
-    assert strict == {("v0", "v1")}
-    # stride sampling halves the frame set but identical videos still pair
-    assert M.video_frame_hashes(media, stride=2).count() == 12
-    with pytest.raises(ValueError):
-        M.video_frame_hashes(media, stride=0)
-    # container roundtrip is exact
-    fps, fr = M.decode_mjbm(v0)
-    assert fps == 1 and len(fr) == 6 and (fr[0] == frames([100])[0]).all()
 
 
 def test_banded_hamming_pairs_plan_is_equi_join(spark):

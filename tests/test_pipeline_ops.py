@@ -13,6 +13,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
+from medical_ocr_service_spark.functions.similarity import round_half_up
 from medical_ocr_service_spark.operators.datasets import exact_ntile
 from medical_ocr_service_spark.operators.skew import salted_group_agg
 from medical_ocr_service_spark.operators.temporal import interarrival_stats
@@ -114,9 +115,9 @@ def test_unigram_familiarity_orders_rare_docs_first(spark):
     out = unigram_familiarity(df, "text", "doc_id", bottom_k=3).collect()
     assert [r["doc_id"] for r in out] == [3, 2, 1]
     # total=9 tokens; doc3 mass = 1+1 -> 2/(9*2) ~ 0.111111111
-    assert abs(out[0]["familiarity"] - round(2 / 18, 9)) < 1e-12
+    assert abs(out[0]["familiarity"] - round_half_up(2 / 18, 9)) < 1e-12
     # doc1: mass = tf(the)*cnt(the) = 4*6 = 24 -> 24/(9*4)
-    assert abs(out[2]["familiarity"] - round(24 / 36, 9)) < 1e-12
+    assert abs(out[2]["familiarity"] - round_half_up(24 / 36, 9)) < 1e-12
     assert out[0]["dl"] == 2
 
 
@@ -503,16 +504,12 @@ def test_driver_window_registry_invariants():
     assert not unknown
     # every registered query is oracle-backed except the rows-only ones
     # (extraction e2e: pandas-UDF state machines; image near-dup: real
-    # pixel decode; audio near-dup: real WAV decode + spectral-band
-    # fingerprinting; video near-dup: MJBM container + per-frame raster
-    # decode — none of these decode stages is SQL-expressible, and each
+    # pixel decode — neither decode stage is SQL-expressible, and each
     # rows-only query's content is value-locked by a dedicated pytest)
     assert sorted(set(q) - set(oracles)) == [
-        "audio_near_dup_pairs",
         "extraction_e2e_details",
         "extraction_e2e_headers",
         "image_near_dup_pairs",
-        "video_near_dup_pairs",
     ]
 
 
@@ -540,43 +537,6 @@ def test_image_near_dup_pairs_query_lock(spark):
         ("img10", "img10j", 0),
         ("img11", "img11j", 1),
         ("img12", "img12j", 1),
-    ]
-
-
-def test_audio_near_dup_pairs_query_lock(spark):
-    """Value lock for the rows-only audio dedup query: the corpus constants
-    are deterministic synthesized WAVs, so the edge list must be exactly the
-    designed 6 pairs (three gain changes at hamming 0-1, one 16-bit
-    re-encode at 0, one hum overlay at 1 plus its transitive gain edge) — a
-    drift means the WAV codec or the fingerprint changed, not the corpus."""
-    from medical_ocr_service_spark.plans.entry_queries import QUERIES
-
-    rows = QUERIES["audio_near_dup_pairs"](spark, "unused").collect()
-    got = [(r["id_a"], r["id_b"], r["hamming"]) for r in rows]
-    assert got == [
-        ("aud00", "aud00g", 0),
-        ("aud00", "aud00h", 1),
-        ("aud00g", "aud00h", 1),
-        ("aud01", "aud01r", 0),
-        ("aud03", "aud03g", 0),
-        ("aud04", "aud04g", 1),
-    ]
-
-
-def test_video_near_dup_pairs_query_lock(spark):
-    """Value lock for the rows-only video dedup query: two re-encode pairs
-    at overlap 1.0 and one 4-of-6-frame partial edit at 2/3 (which also
-    pairs with the re-encode of its base); the different cut, truncated
-    container and opaque mp4 row never pair."""
-    from medical_ocr_service_spark.plans.entry_queries import QUERIES
-
-    rows = QUERIES["video_near_dup_pairs"](spark, "unused").collect()
-    got = [(r["id_a"], r["id_b"], r["overlap"]) for r in rows]
-    assert got == [
-        ("vid0", "vid1", 1.0),
-        ("vid0", "vid2", 0.666667),
-        ("vid1", "vid2", 0.666667),
-        ("vid4", "vid5", 1.0),
     ]
 
 
@@ -722,7 +682,7 @@ def test_dup_ngram_stats_cross_doc_and_within_doc_distinct(spark):
     # duplicated (also in doc2). doc2 shares exactly that one shingle.
     assert out[2]["n_shingles"] == 6  # 10 tokens -> 6 distinct 5-grams
     assert out[2]["n_dup_shingles"] == 1
-    assert abs(out[2]["dup_fraction"] - round(1 / 6, 9)) < 1e-12
+    assert abs(out[2]["dup_fraction"] - round_half_up(1 / 6, 9)) < 1e-12
     assert out[1]["n_dup_shingles"] == 1
     # doc ordering: higher fraction first (doc1 has fewer distinct shingles)
     fracs = [r["dup_fraction"] for r in out.values()]
@@ -882,85 +842,3 @@ def test_pmi_topk_fuzz_vs_bruteforce(spark):
 
     run()
 
-
-def _md5_gate(key: str) -> int:
-    import hashlib
-
-    return int(hashlib.md5(str(key).encode()).hexdigest()[:8], 16)
-
-
-def test_mixture_sample_exact_membership(spark):
-    """Temperature mixing: the kept set must equal the Python reference
-    (same salted md5 gate, same integer thresholds) and the binding group
-    must be kept whole."""
-    from medical_ocr_service_spark.operators.datasets import mixture_sample
-
-    rows = (
-        [(i, "web") for i in range(40)]
-        + [(100 + i, "books") for i in range(40)]
-        + [(200 + i, "code") for i in range(20)]
-    )
-    df = spark.createDataFrame(rows, ["doc_id", "source"])
-    weights = {"web": 1.0, "books": 1.0, "code": 4.0}
-    out = mixture_sample(df, "source", weights, temperature=0.5)
-    got = {(r["doc_id"], r["source"]) for r in out.collect()}
-
-    # reference: p = (1,1,2)/4 -> T = min(40/.25, 40/.25, 20/.5) = 40
-    # keep rates = (.25, .25, 1.0)
-    target = {"web": 0.25, "books": 0.25, "code": 0.5}
-    counts = {"web": 40, "books": 40, "code": 20}
-    total = min(counts[g] / target[g] for g in counts)
-    thr = {
-        g: min(1 << 32, int(total * target[g] / counts[g] * (1 << 32)))
-        for g in counts
-    }
-    expected = {
-        (i, s) for i, s in rows if _md5_gate(f"mixture:{i}") < thr[s]
-    }
-    assert got == expected
-    # binding group kept whole
-    assert sum(1 for _, s in got if s == "code") == 20
-    # non-binding groups thinned to ~rate (exact set already checked)
-    assert 0 < sum(1 for _, s in got if s == "web") < 40
-
-
-def test_mixture_sample_temperature_limits(spark):
-    from medical_ocr_service_spark.operators.datasets import mixture_sample
-
-    rows = [(i, "a") for i in range(30)] + [(100 + i, "b") for i in range(10)]
-    df = spark.createDataFrame(rows, ["doc_id", "source"])
-    # t=0 flattens to uniform: p=(.5,.5), T=min(30/.5, 10/.5)=20 ->
-    # keep rates (1/3, 1.0): all of 'b' survives
-    out0 = mixture_sample(df, "source", {"a": 9.0, "b": 1.0}, temperature=0.0)
-    assert out0.filter(F.col("source") == "b").count() == 10
-    # t=1 with raw weights 9:1 -> p=(.9,.1), T=min(30/.9, 10/.1)=33.3 ->
-    # 'a' binds (rate 1.0), b rate = 33.3*0.1/10 = 1/3
-    out1 = mixture_sample(df, "source", {"a": 9.0, "b": 1.0}, temperature=1.0)
-    assert out1.filter(F.col("source") == "a").count() == 30
-    # groups outside the mix are dropped entirely
-    extra = spark.createDataFrame([(999, "junk")], ["doc_id", "source"])
-    out2 = mixture_sample(
-        df.union(extra), "source", {"a": 1.0, "b": 1.0}, temperature=1.0
-    )
-    assert out2.filter(F.col("source") == "junk").count() == 0
-
-
-def test_mixture_sample_then_hash_split_keeps_test_rows(spark):
-    """A group thinned by mixture_sample must still reach hash_split's
-    test split when both key on the same string column: the mixture gate is
-    salted, so it does not keep only the keys whose split uniform is low."""
-    from medical_ocr_service_spark.operators.datasets import (
-        hash_split,
-        mixture_sample,
-    )
-
-    rows = [(f"web{i:04d}", "web") for i in range(400)] + [
-        (f"code{i:04d}", "code") for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "source"])
-    # p = (.5, .5) -> T = min(400/.5, 100/.5) = 200 -> web rate 0.25
-    mixed = mixture_sample(df, "source", {"web": 1.0, "code": 1.0})
-    split = hash_split(mixed, "doc_id")
-    web = split.filter(F.col("source") == "web")
-    assert 0 < web.count() < 400
-    assert web.filter(F.col("split") == "test").count() > 0
