@@ -35,13 +35,6 @@ def main() -> None:
     ap.add_argument("--media", required=True, help="parquet dir/file of media layouts")
     ap.add_argument("--output", required=True, help="output root (results + _lineage)")
     ap.add_argument("--salted", action="store_true", help="two-phase salted reassembly")
-    ap.add_argument(
-        "--colocated",
-        action="store_true",
-        help="zero-exchange co-located plan (extract_documents_colocated): "
-        "shuffle-free when docs+media are bucketed by doc_id "
-        "(sources/bucketed.py); mutually exclusive with --salted/--quarantine",
-    )
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument(
         "--quarantine",
@@ -86,7 +79,6 @@ def main() -> None:
         salted=args.salted,
         quarantine=args.quarantine,
         max_intentos=args.max_intentos,
-        colocated=args.colocated,
     )
     print(json.dumps(metrics, default=str))
     spark.stop()

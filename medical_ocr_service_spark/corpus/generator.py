@@ -297,10 +297,10 @@ def synthesize_corpus(
                         "layout_json": json.dumps(layout, sort_keys=True),
                         "width": layout["w"],
                         "height": layout["h"],
-                        # owner keys (doc_id, offset), written to the sidecar
-                        # at ingest: doc_id lets the co-located plan
-                        # (extract.reassembled_docs_colocated) group media by
-                        # document; offset stays part of the corpus schema.
+                        # owner keys (doc_id, offset) of the span that cites
+                        # this payload, written to the sidecar at ingest and
+                        # kept in the corpus schema; extraction resolves
+                        # media by media_ref alone.
                         "doc_id": doc_id,
                         "offset": offset,
                     }

@@ -7,8 +7,7 @@
   * apply_pruned_layout   — XY-cut reading-order reconstruction over page
     layouts (replaces pdftoppm, /root/reference/src/services/pdf.service.js:17-109):
     JVM from_json + the coordinate-only layout_order_udf. The quarantine
-    path (layout_text_err_udf) and the co-located plan (layout_entries_udf)
-    parse the raw JSON in Python instead;
+    path (layout_text_err_udf) parses the raw JSON in Python instead;
   * extract_fields_udf    — regex/state-machine field extraction + confidence
     fold (/root/reference/src/prompts/system.prompt.js:91-159,
     src/workers/previsacion.worker.js:229-263,
@@ -289,66 +288,6 @@ def layout_text_err_udf(layouts: pd.Series) -> pd.DataFrame:
             texts.append(None)
             errors.append(f"{type(exc).__name__}: {exc}"[:500])
     return pd.DataFrame({"text": texts, "error": errors}, index=layouts.index)
-
-
-LAYOUT_ENTRIES_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-)
-
-
-@F.pandas_udf(LAYOUT_ENTRIES_TYPE)
-def layout_entries_udf(entries: pd.Series) -> pd.Series:
-    """XY-cut over a per-document LIST of (media_ref, layout_json) entries.
-
-    The co-located extraction plan (extract.reassembled_docs_colocated)
-    aggregates raw layout payloads per doc_id BEFORE any Python stage, because
-    ArrowEvalPython does not propagate the child's hash partitioning — a UDF
-    between a bucketed scan and its groupBy re-introduces the very exchange
-    bucketing removed. Running the parse on the aggregated list keeps the
-    whole plan exchange-free; per-row semantics are identical to
-    corpus/golden.py layout_to_text applied to each entry (None payload ->
-    None text).
-
-    Malformed-sidecar tolerance (the output feeds map_from_entries, which
-    FAILS the whole job on duplicate or NULL map keys under Spark's default
-    EXCEPTION dedup policy): entries with a NULL media_ref are dropped, and
-    duplicate media_ref entries collapse to ONE deterministically — the
-    smallest non-null layout_json wins (collect_list order is
-    shuffle-dependent, so "first entry" would be a coin flip across runs).
-    The media sidecar's uniqueness contract makes this a no-op on
-    well-formed input; malformed media now degrades per-doc instead of
-    killing the run.
-    """
-    out = []
-    _missing = object()
-    for ent in entries:
-        if ent is None:
-            out.append(None)
-            continue
-        best: dict = {}
-        for e in ent:
-            mr = e["media_ref"]
-            if mr is None:
-                continue
-            lj = e["layout_json"]
-            cur = best.get(mr, _missing)
-            if cur is _missing or (lj is not None and (cur is None or lj < cur)):
-                best[mr] = lj
-        out.append(
-            [
-                {
-                    "media_ref": mr,
-                    "text": None if lj is None else _layout_one(lj),
-                }
-                for mr, lj in best.items()
-            ]
-        )
-    return pd.Series(out, index=entries.index, dtype=object)
 
 
 # ---------------------------------------------------------------------------

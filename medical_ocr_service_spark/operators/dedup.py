@@ -2,9 +2,6 @@
 
 All JVM-side DataFrame ops — no Python in the hot path:
 
-  * exact_dedup          — sha256 content hash, keep-first representative
-                           (reference's archivo_hash dedup,
-                           /root/reference/src/services/feedback.service.js:28-58);
   * minhash_signatures / minhash_lsh_pairs — word-shingle MinHash + banded LSH
     candidate generation + exact Jaccard verification;
   * simhash_signatures / simhash_near_pairs — 64-bit SimHash + pigeonhole
@@ -52,18 +49,6 @@ def _h32(shingle: Column) -> Column:
     """First 8 md5 hex chars as a long — identical to DuckDB's
     ('0x' || substr(md5(s), 1, 8))::BIGINT."""
     return F.conv(F.substring(F.md5(shingle), 1, 8), 16, 10).cast("long")
-
-# ---------------------------------------------------------------------------
-# Exact dedup (F8/S9)
-# ---------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """One row per distinct content hash; keeps min(id) as representative."""
-    return (
-        df.groupBy(F.sha2(F.col(text_col), 256).alias("content_hash"))
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_copies"))
-    )
-
 
 # ---------------------------------------------------------------------------
 # Shingling

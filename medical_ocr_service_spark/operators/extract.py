@@ -15,8 +15,7 @@ Scale design (10^12 docs / 100 TB):
   * text spans never touch media resolution: the plan splits by kind and only
     the media subset resolves payloads, with one left join on media_ref.
     Spark (AQE included) turns it into a broadcast hash join when the media
-    side is small; at scale both tables are bucketed by media_ref so the
-    join is shuffle-free;
+    side is small, and a shuffled join when it is not;
   * span ordering uses a window over (doc_id, offset). Spans-per-doc is
     bounded (10^3 pathological), so per-key state is tiny; AQE skew-join
     handles stragglers. Reassembly to arrays uses
@@ -215,7 +214,7 @@ def _finish_reassembly(agg: DataFrame) -> DataFrame:
 
     `_sorted` is the offset-ordered array<struct<offset,kind,text,media_ref>>;
     this derives the 1-based `order` ranks and the space-joined full_text.
-    Shared tail of the shuffle, salted and co-located reassembly variants.
+    Shared tail of the default, salted and quarantine reassembly variants.
     """
     return agg.select(*_reassembly_trees()["finish"])
 
@@ -224,75 +223,6 @@ def _reassemble_cleaned(cleaned: DataFrame) -> DataFrame:
     """groupBy(doc_id) + sort_array reassembly of a cleaned span frame."""
     t = _reassembly_trees()
     return _finish_reassembly(cleaned.groupBy(t["doc_id"]).agg(t["sorted"]))
-
-
-def reassembled_docs_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
-    """Shuffle-FREE reassembly for doc_id-co-partitioned inputs.
-
-    The 100 TB plan: when `docs` and `media` are bucketed (Iceberg: hash
-    bucket-partitioned) by doc_id with the same bucket count, this plan has
-    ZERO exchanges — tests/test_extraction.py asserts `Exchange` is absent:
-
-      1. media.groupBy(doc_id) collects RAW (media_ref, layout_json) pairs —
-         pure JVM, satisfied by the bucketing, no shuffle. The layout parse
-         deliberately does NOT run here: ArrowEvalPython drops the child's
-         hash partitioning, so a UDF between the bucketed scan and the
-         groupBy would re-introduce the exchange (measured; see
-         layout_entries_udf).
-      2. sort-merge join docs <- media lists on doc_id ('merge' hint: the
-         per-doc media list is corpus-sized at 10^12 docs — never a
-         broadcast candidate). Both sides share the bucketing: no exchange,
-         only partition-local sorts.
-      3. layout_entries_udf parses the joined lists (post-join Python is
-         harmless — nothing downstream needs a distribution), and a single
-         higher-order transform over the spans ARRAY cleans text spans
-         JVM-side (strip_boilerplate_col inside the lambda) and resolves
-         media spans from the per-doc map. No explode, no re-group: the
-         span array never leaves its row.
-
-    Requires the media sidecar to carry the owner key doc_id (written at
-    ingest — corpus.generator). It is resume-safe: media rows join on
-    doc_id, so media of already-done (filtered-out) docs simply drops out
-    instead of resurrecting spans.
-
-    Output and semantics are identical to reassembled_docs (golden-equality
-    tested); `order` remains the 1-based offset rank via sort_array.
-    """
-    from ..functions.extraction_udfs import layout_entries_udf
-
-    if "doc_id" not in media.columns:
-        raise ValueError(
-            "reassembled_docs_colocated needs the owner key doc_id in the "
-            "media table (see corpus.generator)"
-        )
-    # Output parity with the default plan: explode() eliminates empty and
-    # NULL span arrays, so the groupBy path emits NO row for a span-less
-    # document — this plan must drop them too (size(NULL) = -1, so one
-    # predicate covers both). Without it, a span-less doc would get a row
-    # with empty spans + fields extracted from '', skewing docs_processed
-    # counters and marking it done under checkpointed resume.
-    docs = docs.filter(F.size("spans") > 0)
-    media_lists = media.groupBy("doc_id").agg(
-        F.collect_list(F.struct("media_ref", "layout_json")).alias("_mraw")
-    )
-    joined = docs.join(media_lists.hint("merge"), "doc_id", "left").select(
-        "*", F.map_from_entries(layout_entries_udf(F.col("_mraw"))).alias("_mtxt")
-    )
-    cleaned_arr = F.transform(
-        "spans",
-        lambda s: F.struct(
-            s["offset"].alias("offset"),
-            s["kind"].alias("kind"),
-            F.when(
-                s["kind"] == F.lit("text"), strip_boilerplate_col(s["text"])
-            )
-            .otherwise(F.col("_mtxt")[s["media_ref"]])
-            .alias("text"),
-            s["media_ref"].alias("media_ref"),
-        ),
-    )
-    agg = joined.select("doc_id", F.sort_array(cleaned_arr).alias("_sorted"))
-    return _finish_reassembly(agg)
 
 
 def extract_documents(
@@ -318,13 +248,6 @@ def extract_documents(
     # one pass per doc in an Arrow batch wins for this many-regex-per-row
     # shape.
     return _with_fields(assembled)
-
-
-def extract_documents_colocated(docs: DataFrame, media: DataFrame) -> DataFrame:
-    """extract_documents over the zero-exchange co-located reassembly
-    (reassembled_docs_colocated): same output schema and values, no shuffle
-    anywhere in the plan when both inputs are bucketed by doc_id."""
-    return _with_fields(reassembled_docs_colocated(docs, media))
 
 
 @per_context

@@ -1,8 +1,8 @@
 """Text analysis operators for training-data pipelines (all JVM-side).
 
-Language-ID (stopword-overlap heuristic), quality scoring, whitespace token
-counting, and document fingerprinting (polynomial rolling hash) — each a
-single narrow projection over the corpus.
+Language-ID (stopword-overlap heuristic), repetition features, PII scrubbing
+and document fingerprinting (polynomial rolling hash) — each a single narrow
+projection over the corpus.
 """
 
 from __future__ import annotations
@@ -54,34 +54,6 @@ def lang_id(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(F.split(F.trim(text), r"\s+"))
-
-
-def quality_score(df: DataFrame, text_col: str) -> DataFrame:
-    """Length / punctuation / stopword-ratio quality features + blended score."""
-    toks = token_count(F.col(text_col))
-    n_chars = F.length(F.col(text_col))
-    punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
-    all_stop = [w for ws in STOPWORDS.values() for w in ws]
-    stop = _score(_words(F.col(text_col)), all_stop)
-    return df.select(
-        "*",
-        toks.alias("n_tokens"),
-        n_chars.alias("q_chars"),
-        F.round(punct / F.greatest(n_chars, F.lit(1)), 6).alias("punct_ratio"),
-        F.round(stop / F.greatest(toks, F.lit(1)).cast("double"), 6).alias("stopword_ratio"),
-        F.round(
-            0.4 * F.least(F.lit(1.0), toks / F.lit(100.0))
-            + 0.3 * F.least(F.lit(1.0), n_chars / F.lit(500.0))
-            + 0.3
-            * F.least(F.lit(1.0), stop / F.greatest(toks, F.lit(1)).cast("double") * 5),
-            6,
-        ).alias("quality"),
-    )
-
-
 def repetition_features(df: DataFrame, text_col: str) -> DataFrame:
     """Gopher-style repetition quality signals (training-data filtering):
 
@@ -89,12 +61,19 @@ def repetition_features(df: DataFrame, text_col: str) -> DataFrame:
     * dup_bigram_fraction — 1 - distinct/total word bigrams;
     * symbol_word_ratio   — non-alphanumeric symbol count / word count.
 
-    All per-row higher-order array functions — no shuffle, no Python."""
+    All per-row higher-order array functions — no shuffle, no Python.
+    Bigrams pair the token array with itself shifted by one (no indexing, so
+    ANSI mode cannot fail the row). A one-token text pairs its token with
+    NULL and a NULL text yields one empty bigram: both count one bigram, as
+    the DuckDB oracle does."""
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     n = F.size(toks)
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - 2, F.lit(0))),
-        lambda i: F.concat_ws(" ", toks[i], toks[i + 1]),
+    m = F.greatest(n - 1, F.lit(1))
+    bigrams = F.coalesce(
+        F.zip_with(
+            F.slice(toks, 1, m), F.slice(toks, 2, m), lambda a, b: F.concat_ws(" ", a, b)
+        ),
+        F.array(F.lit("")),
     )
     nb = F.size(bigrams)
     symbols = F.length(F.regexp_replace(F.col(text_col), r"[A-Za-z0-9\s]", ""))

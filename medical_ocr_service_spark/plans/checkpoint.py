@@ -137,7 +137,6 @@ class CheckpointedExtraction:
         salted: bool = False,
         quarantine: bool = False,
         max_intentos: int = 3,
-        colocated: bool = False,
     ) -> dict:
         """Process pending docs, append results, write lineage. Returns the
         lineage record. `fail_on` (doc_id) injects a mid-run failure for
@@ -155,13 +154,7 @@ class CheckpointedExtraction:
         no failed span, the quarantine its docs with some. The run's
         ``docs_quarantined`` is an Observation on the doc-level quarantine
         frame, filled by the quarantine commit itself. The frame is
-        unpersisted when run() returns or raises.
-
-        ``colocated=True`` swaps in the zero-exchange co-located plan
-        (extract.extract_documents_colocated) — intended for doc_id-bucketed
-        inputs where it runs shuffle-free; resume-safe because media joins
-        on the owner key doc_id. Mutually exclusive with salted/quarantine
-        (those belong to the groupBy reassembly path)."""
+        unpersisted when run() returns or raises."""
         spark = docs.sparkSession
         run_id = uuid.uuid4().hex[:12]
         run_ts = time.time()
@@ -172,17 +165,10 @@ class CheckpointedExtraction:
         base_sid = (
             self._results_tab.current_snapshot_id() if self.snapshots else None
         )
-        if colocated and (salted or quarantine):
-            raise ValueError(
-                "colocated=True is the shuffle-free alternative plan; "
-                "salted/quarantine apply to the groupBy reassembly path only"
-            )
         pending = self.pending(docs, base_sid)
 
         per_doc = quarantined = None
-        if colocated:
-            result = extract.extract_documents_colocated(pending, media)
-        elif quarantine:
+        if quarantine:
             if salted:
                 raise ValueError(
                     "quarantine=True has no salted reassembly path; drop "

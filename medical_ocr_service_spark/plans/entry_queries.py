@@ -2120,62 +2120,6 @@ def previsacion_golden_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "colocated_extraction_equality",
-    f"""
-    SELECT CAST(0 AS BIGINT) AS row_mismatches,
-           CAST(0 AS BIGINT) AS spanless_rows,
-           CAST({_GOLDEN_NDOCS} AS BIGINT) AS docs
-    """,
-)
-def colocated_extraction_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DRIVER gate for the zero-exchange co-located plan (round 4): full
-    extract_documents output of reassembled_docs_colocated must equal the
-    default groupBy plan row-for-row — including span-LESS documents, which
-    both plans must DROP (ADVICE r3: the colocated plan used to emit a row
-    with fields extracted from ''). The comparison corpus therefore gets
-    two degenerate docs (empty and NULL span arrays) appended; the oracle
-    is the zero-mismatch / zero-spanless constant.
-
-    Reference parity: same semantics as the flagship worker loop
-    (/root/reference/src/workers/previsacion.worker.js:18-227) under the
-    bucket-co-located physical layout (sources/bucketed.py)."""
-    import __spark_entry__ as entry_mod
-
-    from ..corpus import generator
-    from ..operators import extract
-
-    docs_df, _ = entry_mod._interleaved_corpus(spark, n_docs=300)
-    degenerate = spark.createDataFrame(
-        [("zz_docEMPTY", []), ("zz_docNULL", None)], docs_df.schema
-    )
-    docs_df = docs_df.unionByName(degenerate)
-    # media sidecar WITH owner keys (doc_id, offset) — the colocated plan
-    # joins on doc_id (corpus.generator sidecar shape)
-    _, media = generator.synthesize_corpus(300)
-    media_df = spark.createDataFrame(
-        [
-            (m["media_ref"], m["layout_json"], m["width"], m["height"],
-             m["doc_id"], m["offset"])
-            for m in media
-        ],
-        "media_ref string, layout_json string, width int, height int, "
-        "doc_id string, offset int",
-    )
-    cols = ["doc_id", "spans", "full_text", "fields", "requiere_revision"]
-    default = extract.extract_documents(docs_df, media_df).select(cols)
-    coloc = extract.extract_documents_colocated(docs_df, media_df).select(cols)
-    diff = default.exceptAll(coloc).unionByName(coloc.exceptAll(default))
-    spanless = default.unionByName(coloc).filter(
-        F.col("doc_id").startswith("zz_doc")
-    )
-    return (
-        diff.agg(F.count("*").alias("row_mismatches"))
-        .crossJoin(spanless.agg(F.count("*").alias("spanless_rows")))
-        .crossJoin(default.agg(F.count("*").alias("docs")))
-    )
-
-
 @query("extraction_e2e_headers")
 def extraction_e2e_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE flagship, end-to-end (rows-only): synthesized interleaved corpus ->
@@ -3566,7 +3510,7 @@ _DRIVER_WINDOW: list[str] = [
 #                                                   (p1: tenant-isolation
 #                                                   suite; d4: golden; f12/
 #                                                   f13: JVM-twin tests)
-# All 108 registered queries therefore hold a driver row from r4 or r5
+# All 107 registered queries therefore hold a driver row from r4 or r5
 # except these 13, each r3-fresh — nothing is more than 2 rounds stale.
 
 

@@ -234,116 +234,3 @@ def windowed_event_counts(
             "sum_value",
         )
     )
-
-
-def sessionized_event_stats(
-    events_stream: DataFrame,
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Streaming twin of operators/temporal.sessionize: native
-    ``session_window`` dynamic-gap windows.
-
-    Windows of the same key merge as events arrive; a session finalizes
-    (and, in append mode, emits exactly once) when the watermark passes its
-    end (= last event ts + gap). State is bounded by the watermark — the
-    10^12-doc answer to unbounded per-user session state. Late events past
-    the watermark are dropped, matching windowed_event_counts semantics.
-    """
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), key)
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            key,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def stream_dedup(
-    spark: SparkSession,
-    docs_dir: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Stateful cross-batch exact dedup (applyInPandasWithState).
-
-    Keyed by content hash of the document's span payload; the first arrival
-    of a hash is emitted, later arrivals (same or later micro-batches) are
-    dropped. State = one boolean per hash, kept forever (NoTimeout) — the
-    streaming analogue of the reference's `archivo_hash UNIQUE` dedup
-    (feedback.service.js:28-58). At scale, state is hash-partitioned across
-    executors by the group key; per-key state is 1 byte.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(docs_dir)
-    )
-    hashed = stream.select(
-        "doc_id", F.sha2(F.to_json("spans"), 256).alias("content_hash")
-    )
-
-    out_schema = "content_hash string, doc_id string, first_seen boolean"
-    state_schema = "seen boolean"
-
-    def dedup_fn(key, pdfs, state: GroupState):
-        already = state.exists
-        first_doc = None
-        n = 0
-        # deterministic winner among equal-hash docs inside one micro-batch:
-        # min(doc_id) across ALL chunks, independent of arrival order (the
-        # batch exact-dedup operator keeps min(id) too)
-        for pdf in pdfs:
-            if len(pdf):
-                m = pdf["doc_id"].min()
-                first_doc = m if first_doc is None else min(first_doc, m)
-            n += len(pdf)
-        if already or first_doc is None:
-            yield pd.DataFrame(
-                {"content_hash": [], "doc_id": [], "first_seen": []}
-            ).astype({"content_hash": str, "doc_id": str, "first_seen": bool})
-        else:
-            state.update((True,))
-            yield pd.DataFrame(
-                {
-                    "content_hash": [key[0]],
-                    "doc_id": [first_doc],
-                    "first_seen": [True],
-                }
-            )
-
-    deduped = hashed.groupBy("content_hash").applyInPandasWithState(
-        dedup_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    # update output mode requires a sink that accepts upserts; parquet is
-    # append-only, so write per-batch via foreachBatch (rows are emitted at
-    # most once per hash anyway, so append semantics hold)
-    def sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(output_path)
-
-    writer = (
-        deduped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -89,35 +89,6 @@ def test_streaming_extraction_availablenow(spark, loaded, tmp_path):
     assert spark.read.parquet(out).count() == docs.count()
 
 
-def test_stream_stateful_dedup(spark, loaded, tmp_path):
-    """applyInPandasWithState dedup: duplicates dropped across micro-batches
-    and across restarts (state survives via checkpoint)."""
-    from pyspark.sql import functions as F
-
-    from medical_ocr_service_spark.streaming.pipeline import stream_dedup
-
-    docs, _ = loaded
-    subset = docs.limit(40).cache()
-    in_dir = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-
-    # batch 1: the subset itself (with an intra-batch duplicate copy)
-    subset.unionByName(subset.limit(5)).repartition(3).write.mode("append").parquet(in_dir)
-    q = stream_dedup(spark, in_dir, out, ckpt, available_now=True)
-    q.awaitTermination(300)
-    got1 = spark.read.parquet(out)
-    assert got1.count() == 40  # intra-batch dups collapsed
-
-    # batch 2 (restart): re-deliver 10 old docs (dups) + nothing new
-    subset.limit(10).write.mode("append").parquet(in_dir)
-    q2 = stream_dedup(spark, in_dir, out, ckpt, available_now=True)
-    q2.awaitTermination(300)
-    got2 = spark.read.parquet(out)
-    assert got2.count() == 40  # cross-restart state drops re-delivered dups
-    assert got2.select("content_hash").distinct().count() == 40
-
-
 def test_quarantine_retry_and_permanent_failure(spark, loaded, tmp_path):
     """Q3 (job-queue.service.js:193-238): an unparsable span quarantines its
     document (task does NOT fail), resume retries it, and after max_intentos
@@ -333,30 +304,6 @@ def test_windowed_counts_drop_late_events(spark, tmp_path):
     assert clicks.iloc[0]["sum_value"] == 3.0
 
 
-def test_colocated_checkpointed_run_and_resume(spark, loaded, tmp_path):
-    """colocated=True produces the same results table as the default plan
-    and stays resume-safe (media joins on the owner key doc_id, so media of
-    already-done docs drops out instead of resurrecting spans)."""
-    docs, media = loaded
-    ck = CheckpointedExtraction(str(tmp_path / "out"))
-    first_half = docs.filter(F.col("doc_id") < "doc00000150")
-    m1 = ck.run(first_half, media, colocated=True)
-    assert m1["docs_processed"] == 150
-    m2 = ck.run(docs, media, colocated=True)
-    assert m2["docs_processed"] == docs.count() - 150
-
-    ref = CheckpointedExtraction(str(tmp_path / "ref"))
-    ref.run(docs, media)
-    cols = ["doc_id", "spans_json", "full_text", "requiere_revision"]
-    a = ck.results(spark).select(cols)
-    b = ref.results(spark).select(cols)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-    with pytest.raises(ValueError, match="colocated"):
-        ck.run(docs, media, colocated=True, quarantine=True)
-
-
 def test_results_latest_wins_via_partial_max_no_window(spark, loaded, tmp_path):
     """results() dedup is a struct-max argmax, not a row_number window: the
     executed plan must carry a map-side partial_max and zero Window nodes
@@ -403,67 +350,3 @@ def test_results_latest_wins_via_partial_max_no_window(spark, loaded, tmp_path):
     )
     assert got.exceptAll(ref).count() == 0
     assert ref.exceptAll(got).count() == 0
-
-
-def test_streaming_session_windows_merge_and_finalize(spark, tmp_path):
-    """session_window streaming twin of temporal.sessionize: events within
-    the gap merge into one session, a later event opens a new one, finalized
-    sessions emit exactly once (append mode), and sessions still inside the
-    watermark stay open. availableNow triggers a trailing no-data micro-batch
-    with the advanced watermark, so finalization lands in the same run."""
-    from medical_ocr_service_spark.streaming.pipeline import (
-        sessionized_event_stats,
-    )
-
-    src = tmp_path / "sess_stream"
-    src.mkdir()
-
-    def write(name, rows):
-        spark.createDataFrame(
-            rows, "ts string, user_id long, value double"
-        ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(src / name))
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("ts timestamp, user_id long, value double")
-            .parquet(str(src / "f*"))
-        )
-        q = (
-            sessionized_event_stats(stream, gap="30 minutes", watermark="30 minutes")
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "sess_out"))
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "sess_ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # b1: user 7 has two events 10' apart (merge) + one 80' later (new
-    # session); user-9 sentinel at 12:00. Watermark after the run: 11:30 —
-    # only user 7's first session (end 10:40) finalizes.
-    write("f1", [("2024-01-01 10:00:00", 7, 1.0),
-                 ("2024-01-01 10:10:00", 7, 2.0),
-                 ("2024-01-01 11:30:00", 7, 4.0),
-                 ("2024-01-01 12:00:00", 9, 0.5)])
-    run_once()
-    out = spark.read.parquet(str(tmp_path / "sess_out")).toPandas()
-    assert len(out) == 1  # sessions ending 12:00 / 12:30 still open
-    s1 = out.iloc[0]
-    assert s1["user_id"] == 7 and s1["n_events"] == 2 and s1["sum_value"] == 3.0
-    assert str(s1["session_start"]) == "2024-01-01 10:00:00"
-    assert str(s1["session_end"]) == "2024-01-01 10:40:00"  # last ts + gap
-
-    # b2: sentinel to 14:00 -> watermark 13:30 finalizes user-7 session 2
-    # (end 12:00) and the 12:00 sentinel session; 14:00 itself stays open.
-    write("f2", [("2024-01-01 14:00:00", 9, 0.5)])
-    run_once()
-    out = spark.read.parquet(str(tmp_path / "sess_out")).toPandas()
-    u7 = out[out["user_id"] == 7].sort_values("session_start")
-    assert len(u7) == 2  # session 1 emitted exactly once across runs
-    assert u7.iloc[1]["n_events"] == 1
-    assert str(u7.iloc[1]["session_end"]) == "2024-01-01 12:00:00"
-    u9 = out[out["user_id"] == 9]
-    assert len(u9) == 1 and str(u9.iloc[0]["session_end"]) == "2024-01-01 12:30:00"

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry_mod
 from medical_ocr_service_spark.operators import dedup, similarity_search, text_analysis
 
 
@@ -24,15 +27,6 @@ def dup_docs(spark):
         rows.append((i * 10 + 2, " ".join(toks)))       # near dup (1 token)
     rows.append((99, "tiny"))
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dedup(dup_docs):
-    out = dedup.exact_dedup(dup_docs, "text", "doc_id").toPandas()
-    # 3 unique bases + 3 near-dups + tiny = 7 distinct hashes
-    assert len(out) == 7
-    assert out["n_copies"].sum() == 10
-    dups = out[out["n_copies"] == 2]
-    assert set(dups["keep_id"]) == {0, 10, 20}
 
 
 def test_minhash_lsh_finds_near_dups(dup_docs):
@@ -172,11 +166,6 @@ def test_lang_id_and_quality(spark):
     assert out.loc[5, "lang_guess"] == "es"
     assert out.loc[5, "score_es"] == out.loc[2, "score_es"] == 6
 
-    q = text_analysis.quality_score(df, "text").toPandas().set_index("doc_id")
-    assert q.loc[1, "quality"] > q.loc[3, "quality"]
-    assert (q["quality"] <= 1.0).all()
-    assert q.loc[5, "stopword_ratio"] == q.loc[2, "stopword_ratio"] > 0
-
 
 def test_fingerprint_stable_under_whitespace(spark):
     df = spark.createDataFrame(
@@ -274,19 +263,47 @@ def test_compress_images_shrinks_oversized_bmp(spark):
     )
 
 
-def test_repetition_features(spark):
-    df = spark.createDataFrame(
-        [(1, "spam spam spam spam spam spam"),
-         (2, "all words here are fully distinct tokens")],
-        "doc_id long, text string",
+def test_repetition_features(spark, tmp_path):
+    """Repetition signals, and the repetition_quality query equal to its
+    DuckDB oracle on one-token, empty, whitespace-padded and NULL texts
+    (none of which may fail the query under ANSI mode)."""
+    texts = [
+        "spam spam spam spam spam spam",
+        "all words here are fully distinct tokens",
+        "hello",
+        "",
+        "  x  ",
+        None,
+    ]
+    pd.DataFrame({"doc_id": range(1, 7), "text": texts}).to_parquet(
+        tmp_path / "documents.parquet"
     )
-    out = (
-        text_analysis.repetition_features(df, "text").toPandas().set_index("doc_id")
+    ours = (
+        entry_mod.queries()["repetition_quality"](spark, str(tmp_path))
+        .toPandas()
+        .sort_values("doc_id", ignore_index=True)
     )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    ref = (
+        con.execute(entry_mod.oracle_sql()["repetition_quality"])
+        .df()
+        .sort_values("doc_id", ignore_index=True)
+    )
+    pd.testing.assert_frame_equal(ours, ref, check_dtype=False, check_exact=True)
+
+    out = ours.set_index("doc_id")
     assert out.loc[1, "dup_word_fraction"] > 0.8
     assert out.loc[1, "dup_bigram_fraction"] > 0.7
     assert out.loc[2, "dup_word_fraction"] == 0.0
     assert out.loc[2, "dup_bigram_fraction"] == 0.0
+    for i in (3, 4, 5):
+        assert tuple(out.loc[i]) == (0.0, 0.0, 0.0)
+    assert pd.isna(out.loc[6, "dup_word_fraction"])
+    assert out.loc[6, "dup_bigram_fraction"] == 0.0
+    assert pd.isna(out.loc[6, "symbol_word_ratio"])
 
 
 def test_scrub_pii(spark):

@@ -161,108 +161,27 @@ def test_extract_documents_salted_flag_equal(spark, loaded):
     assert salted.exceptAll(plain).count() == 0
 
 
-def test_colocated_reassembly_equals_plain(spark, loaded):
-    """The zero-exchange co-located plan (array-native, single-branch) is
-    bit-identical to the shuffle reassembly on unbucketed inputs too."""
+@pytest.mark.parametrize("variant", ["default", "salted", "quarantine"])
+def test_spanless_docs_emit_no_row(spark, loaded, variant):
+    """explode() eliminates empty and NULL span arrays, so no extraction
+    variant emits a row for a span-less document: neither a result row with
+    fields extracted from '' (resume would mark it done) nor, on the
+    quarantine path, a quarantine row."""
     docs, media, _, _ = loaded
-    cols = ["doc_id", "spans", "full_text"]
-    plain = extract.reassembled_docs(docs, media).select(cols)
-    coloc = extract.reassembled_docs_colocated(docs, media).select(cols)
-    assert plain.exceptAll(coloc).count() == 0
-    assert coloc.exceptAll(plain).count() == 0
-
-
-def test_colocated_requires_owner_key(spark, loaded):
-    docs, media, _, _ = loaded
-    with pytest.raises(ValueError, match="owner key"):
-        extract.reassembled_docs_colocated(docs, media.drop("doc_id"))
-
-
-def test_colocated_bucketed_plan_has_zero_exchanges(spark, loaded, tmp_path):
-    """THE 100 TB claim, asserted on the executed plan: with docs and media
-    bucketed by doc_id (Iceberg bucket-transform analogue), the full
-    extraction — layout parse, boilerplate strip, reassembly, field
-    extraction — contains not a single Exchange (no shuffle, no broadcast).
-    Also re-checks output equality through the bucketed scan."""
-    from medical_ocr_service_spark.sources import bucketed
-
-    docs, media, _, _ = loaded
-    names = bucketed.write_bucketed_corpus(
-        docs, media, n_buckets=4, database="coloc_t", location=str(tmp_path)
-    )
-    try:
-        bdocs, bmedia = bucketed.read_bucketed_corpus(spark, "coloc_t")
-        result = extract.extract_documents_colocated(bdocs, bmedia)
-        plan = result._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        # equality through the bucketed scan (drop the bucketed table's
-        # tenant column ordering difference by selecting shared cols)
-        cols = ["doc_id", "spans", "full_text"]
-        ref = extract.reassembled_docs(docs, media).select(cols)
-        got = extract.reassembled_docs_colocated(bdocs, bmedia).select(cols)
-        assert ref.exceptAll(got).count() == 0
-        assert got.exceptAll(ref).count() == 0
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS coloc_t CASCADE")
-
-
-def test_extract_documents_colocated_equals_default(spark, loaded):
-    """Full extract_documents output parity for the co-located variant."""
-    docs, media, _, _ = loaded
-    cols = ["doc_id", "spans", "full_text", "fields", "requiere_revision"]
-    plain = extract.extract_documents(docs, media).select(cols)
-    coloc = extract.extract_documents_colocated(docs, media).select(cols)
-    assert plain.exceptAll(coloc).count() == 0
-    assert coloc.exceptAll(plain).count() == 0
-
-
-def test_colocated_drops_spanless_docs_like_default(spark, loaded):
-    """ADVICE r3: explode() eliminates empty/NULL span arrays, so the
-    default plan emits NO row for a span-less document — the co-located
-    plan must drop them identically (not emit a row with fields extracted
-    from ''), or resume would mark them done under one plan only."""
-    docs, media, _, _ = loaded
-    schema = docs.schema
     degenerate = spark.createDataFrame(
-        [("docEMPTY", [], "tenant-a"), ("docNULL", None, "tenant-a")], schema
+        [("docEMPTY", [], "tenant-a"), ("docNULL", None, "tenant-a")], docs.schema
     )
     patched = docs.limit(5).unionByName(degenerate)
-    for df in (
-        extract.extract_documents(patched, media),
-        extract.extract_documents_colocated(patched, media),
-    ):
-        ids = {r.doc_id for r in df.select("doc_id").collect()}
-        assert "docEMPTY" not in ids and "docNULL" not in ids
-        assert len(ids) == 5
-
-
-def test_colocated_tolerates_duplicate_and_null_media_ref(spark, loaded):
-    """ADVICE r3: map_from_entries fails the whole job on duplicate or NULL
-    map keys (spark.sql.mapKeyDedupPolicy=EXCEPTION default). A malformed
-    media sidecar must degrade per-doc instead: NULL media_ref entries are
-    dropped and duplicates collapse deterministically (smallest non-null
-    layout_json wins, independent of collect_list arrival order)."""
-    docs, media, _, _ = loaded
-    some = docs.limit(8)
-    msub = media.join(some.select("doc_id"), "doc_id", "left_semi")
-    one = msub.limit(1)
-    # valid-JSON duplicate that sorts strictly AFTER the original (original
-    # is its proper prefix), so the deterministic min keeps the original
-    dup_hi = one.withColumn("layout_json", F.concat("layout_json", F.lit(" ")))
-    nullref = one.withColumn("media_ref", F.lit(None).cast("string"))
-    malformed = msub.unionByName(dup_hi).unionByName(nullref)
-
-    clean = extract.extract_documents_colocated(some, msub).select(
-        "doc_id", "spans", "full_text"
-    )
-    got = extract.extract_documents_colocated(some, malformed).select(
-        "doc_id", "spans", "full_text"
-    )
-    # the original (smaller) layout_json wins over the 'zzz' dup; the NULL
-    # ref entry is ignored -> output identical to the well-formed sidecar
-    assert clean.exceptAll(got).count() == 0
-    assert got.exceptAll(clean).count() == 0
+    if variant == "quarantine":
+        results, quarantine = extract.extract_documents_quarantine(patched, media)
+        quarantined = {r.doc_id for r in quarantine.select("doc_id").collect()}
+        assert not quarantined & {"docEMPTY", "docNULL"}
+    else:
+        results = extract.extract_documents(patched, media, salted=variant == "salted")
+        quarantined = set()
+    ids = {r.doc_id for r in results.select("doc_id").collect()}
+    assert "docEMPTY" not in ids and "docNULL" not in ids
+    assert len(ids | quarantined) == 5
 
 
 def test_layout_blocks_path_equals_json_udf(spark, loaded):

@@ -73,7 +73,6 @@ def test_relational_queries_have_no_python_udfs(spark, sf_dir):
         "ivf_ann_topk",
         "extraction_golden_equality",
         "previsacion_golden_equality",
-        "colocated_extraction_equality",
     }
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()

@@ -65,44 +65,3 @@ def test_spark_submit_py_files_end_to_end(corpus_dir, tmp_path):
     assert res2.returncode == 0, f"resume failed:\n{res2.stderr[-3000:]}"
     rec2 = json.loads(res2.stdout.strip().splitlines()[-1])
     assert rec2["docs_processed"] == 0
-
-
-def test_spark_submit_curation_job(tmp_path):
-    """The curation funnel is cluster-submittable through the same
-    --py-files contract: real subprocess, scrubbed PYTHONPATH, output
-    partitioned by split, funnel counters on stdout."""
-    spark_submit = shutil.which("spark-submit")
-    if spark_submit is None:
-        pytest.skip("spark-submit not on PATH")
-
-    sys.path.insert(0, os.path.join(REPO, "jobs"))
-    import package as pkg
-
-    zip_path = pkg.build(str(tmp_path))
-    out = str(tmp_path / "curated")
-    cmd = [
-        spark_submit,
-        "--master", "local[4]",
-        "--conf", "spark.ui.enabled=false",
-        "--conf", "spark.sql.shuffle.partitions=4",
-        "--py-files", zip_path,
-        os.path.join(REPO, "jobs", "run_curation.py"),
-        "--docs", "/root/testdata/sf0.001/documents.parquet",
-        "--output", out,
-    ]
-    env = dict(os.environ)
-    env.pop("PYTHONPATH", None)
-    env.pop("SPARK_DRIVER_MEMORY", None)
-    res = subprocess.run(
-        cmd, capture_output=True, text=True, env=env, cwd=str(tmp_path),
-        timeout=600,
-    )
-    assert res.returncode == 0, f"spark-submit failed:\n{res.stderr[-3000:]}"
-    rec = json.loads(res.stdout.strip().splitlines()[-1])
-    assert rec["rows_in"] == 500
-    assert (
-        rec["rows_in"] >= rec["rows_quality"] >= rec["rows_lang"]
-        >= rec["rows_clean"] >= rec["rows_final"] > 0
-    )
-    # split-partitioned layout
-    assert any(d.startswith("split=") for d in os.listdir(out))
