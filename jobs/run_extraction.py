@@ -9,8 +9,8 @@ Cluster usage (north_rule submission contract):
         jobs/run_extraction.py \
         --docs s3://bucket/docs_interleaved/ \
         --media s3://bucket/media/ \
-        --output s3://bucket/previsacion_out/ \
-        [--salted] [--shuffle-partitions N]
+        --output /mnt/shared/previsacion_out/ \
+        [--salted | --quarantine [--max-intentos N]] [--shuffle-partitions N]
 
 Local smoke:
 
@@ -19,8 +19,14 @@ Local smoke:
         jobs/run_extraction.py --docs ... --media ... --output /tmp/out
 
 The job is resumable: rerunning with the same --output processes only
-documents absent from the output snapshot (anti-join resume) and appends a
-lineage record per run (docs processed, spans emitted, parse failures).
+documents absent from the output snapshot (anti-join resume). Every run is
+one atomic snapshot commit (sources/snapshot_table.py) and writes a lineage
+record (docs processed, spans emitted, parse failures).
+
+--output must be a local or shared POSIX path (local disk, NFS): the
+snapshot table commits through POSIX renames, so a URI root (s3://,
+hdfs://, file://) is refused before any Spark job runs. --docs and --media
+may be any URI Spark reads.
 """
 
 from __future__ import annotations
@@ -33,7 +39,12 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", required=True, help="parquet dir/file of interleaved docs")
     ap.add_argument("--media", required=True, help="parquet dir/file of media layouts")
-    ap.add_argument("--output", required=True, help="output root (results + _lineage)")
+    ap.add_argument(
+        "--output",
+        required=True,
+        help="output root (results + _quarantine + _lineage): a local or "
+        "shared POSIX path, not a URI",
+    )
     ap.add_argument("--salted", action="store_true", help="two-phase salted reassembly")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument(
@@ -44,13 +55,6 @@ def main() -> None:
         "them up to --max-intentos",
     )
     ap.add_argument("--max-intentos", type=int, default=3)
-    ap.add_argument(
-        "--snapshots",
-        action="store_true",
-        help="store results/quarantine as atomic snapshot commits "
-        "(SnapshotTable): crash-safe resume, time travel, lineage counters "
-        "embedded in each snapshot manifest",
-    )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -70,9 +74,9 @@ def main() -> None:
 
     from medical_ocr_service_spark.plans.checkpoint import CheckpointedExtraction
 
+    ck = CheckpointedExtraction(args.output)
     docs = spark.read.parquet(args.docs)
     media = spark.read.parquet(args.media)
-    ck = CheckpointedExtraction(args.output, snapshots=args.snapshots)
     metrics = ck.run(
         docs,
         media,

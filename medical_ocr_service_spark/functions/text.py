@@ -40,11 +40,6 @@ def id_type(col: Column) -> Column:
     )
 
 
-def content_hash(col: Column) -> Column:
-    """SHA-256 dedup key — reference src/services/gpt-vision.service.js:22."""
-    return F.sha2(col, 256)
-
-
 def cost_usd(prompt_tokens: Column, completion_tokens: Column) -> Column:
     """Token cost model — reference src/services/ai.service.js:178-195."""
     return F.round(prompt_tokens / 1000 * 0.005 + completion_tokens / 1000 * 0.015, 6)

@@ -269,6 +269,20 @@ def _with_fields(assembled: DataFrame) -> DataFrame:
     return assembled.select(*_fields_cols())
 
 
+@per_context
+def result_row_cols():
+    """The result-table row of an extract_documents row, shared by every
+    sink that commits one (checkpointed runs, the extraction stream): spans
+    as JSON text, fields flattened. Sinks append their own tag columns."""
+    return [
+        F.col("doc_id"),
+        F.col("spans").cast("string").alias("spans_json"),
+        F.col("full_text"),
+        F.col("fields.*"),
+        F.col("requiere_revision"),
+    ]
+
+
 def reassembled_docs_with_errors(docs: DataFrame, media: DataFrame) -> DataFrame:
     """Quarantine-path reassembly: (doc_id, _sorted, _errors), one row per
     doc from ONE groupBy over clean_spans(with_errors=True).

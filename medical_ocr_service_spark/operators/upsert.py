@@ -57,41 +57,6 @@ def coalesce_upsert(
     return joined.select(*out)
 
 
-def merge_into_sql(
-    target_table: str,
-    source_table: str,
-    keys: list[str],
-    columns: list[str],
-    surrogate_id: str | None = None,
-) -> str:
-    """The production Iceberg `MERGE INTO` statement equivalent to
-    coalesce_upsert (S8) — emitted as SQL text because this sandbox has no
-    Iceberg catalog to execute it against; pytest asserts it round-trips
-    through Spark's SQL parser and mirrors coalesce_upsert's column
-    semantics clause-for-clause.
-
-    Reference: data-ingest.routes.js:125-160 (COALESCE partial update);
-    surrogate ids for inserts are a deterministic xxhash64 of the business
-    key, not MAX(id)+1 (serial bottleneck / race at scale)."""
-    on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    non_key = [c for c in columns if c not in keys and c != surrogate_id]
-    set_clause = ",\n      ".join(f"t.{c} = coalesce(s.{c}, t.{c})" for c in non_key)
-    insert_cols = list(keys) + ([surrogate_id] if surrogate_id else []) + non_key
-    insert_vals = [f"s.{k}" for k in keys]
-    if surrogate_id:
-        key_list = ", ".join(f"s.{k}" for k in keys)
-        insert_vals.append(f"abs(xxhash64({key_list}))")
-    insert_vals += [f"s.{c}" for c in non_key]
-    return (
-        f"MERGE INTO {target_table} t\n"
-        f"USING {source_table} s\n"
-        f"  ON {on}\n"
-        f"WHEN MATCHED THEN UPDATE SET\n      {set_clause}\n"
-        f"WHEN NOT MATCHED THEN INSERT ({', '.join(insert_cols)})\n"
-        f"  VALUES ({', '.join(insert_vals)})"
-    )
-
-
 def merge_upsert_snapshot(
     table,
     source: DataFrame,
@@ -102,8 +67,7 @@ def merge_upsert_snapshot(
     read the current snapshot, compute the coalesce_upsert result, commit it
     as one atomic ``overwrite`` snapshot. Readers see the pre-merge table
     until the commit point, then the post-merge table — the isolation
-    contract of Iceberg's MERGE, realized on the local snapshot substrate
-    (the merge_into_sql text above stays the production-catalog twin).
+    contract of Iceberg's MERGE, realized on the local snapshot substrate.
 
     Returns the new snapshot id. First merge into an empty table = insert-all.
 

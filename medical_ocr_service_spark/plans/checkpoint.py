@@ -4,9 +4,8 @@ The reference recovers a crashed queue by flipping PROCESSING->QUEUED rows and
 re-reading QUEUED from Postgres (/root/reference/src/services/job-queue.service.js:127-162).
 Spark-first equivalent: the *output table is the checkpoint*. Pending work =
 anti-join of the input docs against the doc_ids already present in the output
-snapshot; a resumed run recomputes only unprocessed documents, and a MERGE
-(or append + dedup-on-read here, with Iceberg MERGE INTO in production) keeps
-exactly-once per doc_id.
+snapshot; a resumed run recomputes only unprocessed documents, and the atomic
+snapshot commit of each run keeps exactly-once per doc_id.
 
 Per-partition lineage + counters (Q5): every run writes a _lineage/<run_id>.json
 with observed metrics (docs processed, spans emitted, parse failures) captured
@@ -17,14 +16,10 @@ At 10^12-doc scale the anti-join is a shuffle-free pushdown when the output is
 partitioned by the same doc_id hash-bucket as the input (bucket-join); here we
 rely on AQE planning over parquet.
 
-Two storage substrates (constructor flag):
-  * snapshots=False — plain parquet appends, exactly-once restored by
-    dedup-on-read in results();
-  * snapshots=True  — SnapshotTable (sources/snapshot_table.py): every run is
-    one atomic snapshot commit carrying its lineage counters in the manifest
-    summary; a crashed run commits nothing, resume is re-derived from the last
-    snapshot, and results(snapshot_id=...) time-travels. This is the
-    Iceberg-shaped path the north_rule names.
+Storage: results and quarantine are SnapshotTables (sources/snapshot_table.py).
+Every run is one atomic snapshot commit carrying its lineage counters in the
+manifest summary; a crashed run commits nothing, resume is re-derived from the
+last snapshot, and results(snapshot_id=...) time-travels.
 """
 
 from __future__ import annotations
@@ -44,41 +39,33 @@ from ..operators import extract
 class CheckpointedExtraction:
     """Exactly-once-per-doc extraction with anti-join resume.
 
-    ``snapshots=True`` stores results + quarantine in SnapshotTable
-    (sources/snapshot_table.py) — atomic snapshot commits with the run's
-    lineage counters embedded in the manifest summary, crash-safe resume
-    (an uncommitted run is INVISIBLE to done_doc_ids, unlike raw parquet
-    appends under commit algorithm v2), and time travel via
-    ``results(snapshot_id=...)``. Default False keeps the plain
-    parquet-append layout (dedup-on-read)."""
+    Results + quarantine live in SnapshotTables (sources/snapshot_table.py):
+    atomic snapshot commits with the run's lineage counters embedded in the
+    manifest summary, crash-safe resume (an uncommitted run is INVISIBLE to
+    done_doc_ids) and time travel via ``results(snapshot_id=...)``."""
 
-    def __init__(self, output_path: str, snapshots: bool = False):
+    # snapshots=True is accepted for perfbench/run.py, its only caller
+    def __init__(self, output_path: str, snapshots: bool = True):
         from ..sources.snapshot_table import SnapshotTable
 
+        if not snapshots:
+            raise ValueError(
+                "snapshots must be True: results and quarantine are always "
+                "SnapshotTable commits"
+            )
         self.output_path = output_path
         self.results_path = os.path.join(output_path, "results")
         self.lineage_path = os.path.join(output_path, "_lineage")
         self.quarantine_path = os.path.join(output_path, "_quarantine")
-        self.snapshots = snapshots
-        self._results_tab = SnapshotTable(self.results_path) if snapshots else None
-        self._quar_tab = SnapshotTable(self.quarantine_path) if snapshots else None
+        self._results_tab = SnapshotTable(self.results_path)
+        self._quar_tab = SnapshotTable(self.quarantine_path)
 
     # -- state -------------------------------------------------------------
-
-    def _read_results(
-        self, spark: SparkSession, snapshot_id: int | None = None
-    ) -> DataFrame | None:
-        if self.snapshots:
-            return self._results_tab.read(spark, snapshot_id)
-        try:
-            return spark.read.parquet(self.results_path)
-        except Exception:
-            return None  # no snapshot yet
 
     def done_doc_ids(
         self, spark: SparkSession, snapshot_id: int | None = None
     ) -> DataFrame | None:
-        df = self._read_results(spark, snapshot_id)
+        df = self._results_tab.read(spark, snapshot_id)
         return None if df is None else df.select("doc_id").distinct()
 
     def pending(self, docs: DataFrame, snapshot_id: int | None = None) -> DataFrame:
@@ -88,16 +75,10 @@ class CheckpointedExtraction:
         return docs.join(done, "doc_id", "left_anti")
 
     def quarantine_attempts(self, spark: SparkSession) -> DataFrame | None:
-        """(doc_id, intentos) from prior runs' quarantine appends."""
-        if self.snapshots:
-            q = self._quar_tab.read(spark)
-            if q is None:
-                return None
-        else:
-            try:
-                q = spark.read.parquet(self.quarantine_path)
-            except Exception:
-                return None
+        """(doc_id, intentos) from prior runs' quarantine commits."""
+        q = self._quar_tab.read(spark)
+        if q is None:
+            return None
         return q.groupBy("doc_id").agg(
             F.countDistinct("run_id").alias("intentos")
         )
@@ -121,10 +102,8 @@ class CheckpointedExtraction:
         )
 
     def snapshot_log(self) -> list[dict]:
-        """Commit history of the results table (snapshots=True only):
-        one entry per run with its embedded lineage counters."""
-        if not self.snapshots:
-            raise ValueError("snapshot_log() requires snapshots=True")
+        """Commit history of the results table: one entry per run with its
+        embedded lineage counters."""
         return self._results_tab.history()
 
     # -- run ---------------------------------------------------------------
@@ -133,14 +112,12 @@ class CheckpointedExtraction:
         self,
         docs: DataFrame,
         media: DataFrame,
-        fail_on: str | None = None,
         salted: bool = False,
         quarantine: bool = False,
         max_intentos: int = 3,
     ) -> dict:
-        """Process pending docs, append results, write lineage. Returns the
-        lineage record. `fail_on` (doc_id) injects a mid-run failure for
-        crash-recovery tests.
+        """Process pending docs, commit results, write lineage. Returns the
+        lineage record.
 
         ``quarantine=True`` (Q3): per-row failure isolation — documents with
         an unparsable span are withheld from results and appended to the
@@ -162,9 +139,7 @@ class CheckpointedExtraction:
         # append commit passes it as the CAS base — a concurrent commit
         # between the read and the install raises CommitConflict instead of
         # double-processing docs that writer already completed.
-        base_sid = (
-            self._results_tab.current_snapshot_id() if self.snapshots else None
-        )
+        base_sid = self._results_tab.current_snapshot_id()
         pending = self.pending(docs, base_sid)
 
         per_doc = quarantined = None
@@ -191,7 +166,7 @@ class CheckpointedExtraction:
         else:
             result = extract.extract_documents(pending, media, salted=salted)
         try:
-            return self._commit(result, quarantined, run_id, run_ts, base_sid, fail_on)
+            return self._commit(result, quarantined, run_id, run_ts, base_sid)
         finally:
             if per_doc is not None:
                 per_doc.unpersist()
@@ -203,20 +178,9 @@ class CheckpointedExtraction:
         run_id: str,
         run_ts: float,
         base_sid: int | None,
-        fail_on: str | None,
     ) -> dict:
-        """Write the run's results (and quarantined docs, if any) and its
-        lineage record; returns the lineage record."""
-        if fail_on is not None:
-            # deterministic poison row -> task failure after partial work
-            result = result.withColumn(
-                "doc_id",
-                F.when(
-                    F.col("doc_id") == fail_on,
-                    F.raise_error(F.lit(f"injected failure at {fail_on}")),
-                ).otherwise(F.col("doc_id")),
-            )
-
+        """Commit the run's results (and quarantined docs, if any) and write
+        its lineage record; returns the lineage record."""
         obs = Observation(f"lineage_{run_id}")
         observed = result.observe(
             obs,
@@ -234,34 +198,24 @@ class CheckpointedExtraction:
         )
 
         flat = observed.select(
-            "doc_id",
-            F.col("spans").cast("string").alias("spans_json"),
-            "full_text",
-            "fields.*",
-            "requiere_revision",
+            *extract.result_row_cols(),
             F.lit(run_id).alias("run_id"),
             F.lit(run_ts).alias("run_ts"),
         )
-        if self.snapshots:
-            # the commit point: lineage counters land INSIDE the snapshot
-            # manifest (summary is evaluated after the data-write action, so
-            # the Observation is populated); a crash before the version-hint
-            # rename leaves the table at the parent snapshot.
-            snapshot_id = self._results_tab.commit_append(
-                flat,
-                summary=lambda: {
-                    **{k: str(v) for k, v in obs.get.items()},
-                    "run_id": run_id,
-                },
-                base_sid=base_sid,
-            )
-        else:
-            flat.write.mode("append").parquet(self.results_path)
-            snapshot_id = None
+        # the commit point: lineage counters land INSIDE the snapshot
+        # manifest (summary is evaluated after the data-write action, so the
+        # Observation is populated); a crash before the version-hint rename
+        # leaves the table at the parent snapshot.
+        snapshot_id = self._results_tab.commit_append(
+            flat,
+            summary=lambda: {
+                **{k: str(v) for k, v in obs.get.items()},
+                "run_id": run_id,
+            },
+            base_sid=base_sid,
+        )
 
-        metrics = dict(obs.get)
-        if snapshot_id is not None:
-            metrics["snapshot_id"] = snapshot_id
+        metrics = {**obs.get, "snapshot_id": snapshot_id}
         if quarantined is not None:
             # observed before the explode (one row per doc), so the
             # quarantine write itself counts the docs
@@ -271,10 +225,7 @@ class CheckpointedExtraction:
             ).select(
                 "*", F.lit(run_id).alias("run_id"), F.lit(run_ts).alias("run_ts")
             )
-            if self.snapshots:
-                self._quar_tab.commit_append(qrows, summary={"run_id": run_id})
-            else:
-                qrows.write.mode("append").parquet(self.quarantine_path)
+            self._quar_tab.commit_append(qrows, summary={"run_id": run_id})
             metrics["docs_quarantined"] = qobs.get["docs"]
         metrics.update(
             {
@@ -291,13 +242,11 @@ class CheckpointedExtraction:
     def results(
         self, spark: SparkSession, snapshot_id: int | None = None
     ) -> DataFrame:
-        """Snapshot read with exactly-once semantics: if a crashed run left
-        partial/duplicate appends, keep one row per doc_id (latest run wins —
-        the read-side equivalent of Iceberg MERGE). With snapshots=True,
-        ``snapshot_id`` time-travels to any committed snapshot; the dedup
-        dedup stays as defense-in-depth (duplicates can still arise from
-        two successful non-resume runs over overlapping inputs)."""
-        df = self._read_results(spark, snapshot_id)
+        """Snapshot read (``snapshot_id`` time-travels to any committed
+        snapshot) with one row per doc_id, latest run wins — the read-side
+        equivalent of Iceberg MERGE. A crashed run commits nothing, but an
+        input that repeats a doc_id still commits one row per occurrence."""
+        df = self._results_tab.read(spark, snapshot_id)
         if df is None:
             raise FileNotFoundError(f"no committed results under {self.results_path}")
         # recency = the run's start timestamp (monotonic across runs), with

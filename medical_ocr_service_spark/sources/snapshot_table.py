@@ -66,6 +66,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import urllib.parse
 import uuid
 from contextlib import contextmanager
 
@@ -84,6 +85,13 @@ class SnapshotExpired(ValueError):
 
 class SnapshotTable:
     def __init__(self, root: str):
+        if urllib.parse.urlparse(root).scheme:
+            raise ValueError(
+                f"SnapshotTable root {root!r} is a URI: the table commits "
+                "through POSIX renames, so it needs a local or shared POSIX "
+                "path; a remote store waits for a real Iceberg catalog (the "
+                "production swap in this module's docstring)"
+            )
         self.root = root
         self.data_dir = os.path.join(root, "data")
         self.meta_dir = os.path.join(root, "metadata")

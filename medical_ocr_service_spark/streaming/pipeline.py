@@ -4,8 +4,8 @@ The reference runs a durable work queue with crash recovery
 (/root/reference/src/services/job-queue.service.js) — the Structured
 Streaming equivalent is a file-source stream with checkpointed offsets:
 new parquet files of documents are discovered, each micro-batch runs the
-same deterministic extraction DAG via foreachBatch, and the checkpoint
-directory gives exactly-once recovery (Q1-Q4 semantics: enqueue = file
+same deterministic extraction DAG via foreachBatch and commits it as one
+snapshot, and the checkpoint directory gives exactly-once recovery (Q1-Q4 semantics: enqueue = file
 landing, retry/backoff = task retries, crash recovery = offset replay).
 
 Also provided: windowed_event_counts — event-time tumbling windows with a
@@ -47,69 +47,26 @@ def stream_extraction(
     spark: SparkSession,
     docs_dir: str,
     media: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """File-source stream -> foreachBatch(extract_documents) -> parquet append.
-
-    foreachBatch (not a stateful streaming agg) because span reassembly is a
-    per-document batch-local operation: every file contains whole documents,
-    so no cross-batch state or watermark is needed — the idiomatic pattern for
-    'queue of self-contained work items'."""
-    from ..operators import extract
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(docs_dir)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        result = extract.extract_documents(batch_df, media)
-        (
-            result.select(
-                "doc_id",
-                F.col("spans").cast("string").alias("spans_json"),
-                "full_text",
-                "fields.*",
-                "requiere_revision",
-                F.lit(batch_id).alias("batch_id"),
-            )
-            .write.mode("append")
-            .parquet(output_path)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_extraction_snapshot(
-    spark: SparkSession,
-    docs_dir: str,
-    media: DataFrame,
     table,
     checkpoint_path: str,
     available_now: bool = True,
     compact_every: int | None = 64,
     assume_replayed_source: bool = False,
 ) -> StreamingQuery:
-    """stream_extraction with an EXACTLY-ONCE sink: each micro-batch is one
-    atomic SnapshotTable commit tagged with its batch_id.
+    """File-source stream -> foreachBatch(extract_documents) -> an
+    EXACTLY-ONCE sink: each micro-batch is one atomic SnapshotTable commit
+    tagged with its batch_id.
 
-    The plain parquet-append sink above is only at-least-once — a crash
-    between the append and the offset commit replays the batch and
-    duplicates its rows. Here replay is detected from the max committed
-    batch_id and skipped: Structured Streaming's deterministic batch ids +
-    an idempotent sink = end-to-end exactly-once, the documented
-    foreachBatch contract. ``table`` is a
-    sources.snapshot_table.SnapshotTable.
+    foreachBatch (not a stateful streaming agg) because span reassembly is a
+    per-document batch-local operation: every file contains whole documents,
+    so no cross-batch state or watermark is needed — the idiomatic pattern for
+    'queue of self-contained work items'.
+
+    A crash between a batch's commit and the offset commit replays the
+    batch; replay is detected from the max committed batch_id and skipped:
+    Structured Streaming's deterministic batch ids + an idempotent sink =
+    end-to-end exactly-once, the documented foreachBatch contract.
+    ``table`` is a sources.snapshot_table.SnapshotTable.
 
     The committed-batch watermark is read from the snapshot log ONCE at
     stream construction and then tracked in a closure cell — NOT re-walked
@@ -188,12 +145,7 @@ def stream_extraction_snapshot(
         result = extract.extract_documents(batch_df, media)
         sid = table.commit_append(
             result.select(
-                "doc_id",
-                F.col("spans").cast("string").alias("spans_json"),
-                "full_text",
-                "fields.*",
-                "requiere_revision",
-                F.lit(batch_id).alias("batch_id"),
+                *extract.result_row_cols(), F.lit(batch_id).alias("batch_id")
             ),
             summary={"batch_id": batch_id},
         )

@@ -19,21 +19,53 @@ def loaded(spark, corpus_dir):
     return docs, media
 
 
+def _poisoned(docs, doc_id):
+    """docs whose row ``doc_id`` raises when evaluated: the failure fires
+    inside the results commit's write action, after other tasks wrote."""
+    return docs.withColumn(
+        "doc_id",
+        F.when(
+            F.col("doc_id") == doc_id,
+            F.raise_error(F.lit(f"injected failure at {doc_id}")),
+        ).otherwise(F.col("doc_id")),
+    )
+
+
 def test_resume_processes_only_pending(spark, loaded, tmp_path):
+    with pytest.raises(ValueError, match="snapshots must be True"):
+        CheckpointedExtraction(str(tmp_path / "old"), snapshots=False)
+
     docs, media = loaded
     ck = CheckpointedExtraction(str(tmp_path / "out"))
     first_half = docs.filter(F.col("doc_id") < "doc00000150")
 
     m1 = ck.run(first_half, media)
     assert m1["docs_processed"] == 150
+    assert m1["snapshot_id"] == 1
 
     # resume over the FULL input: only the remaining docs are processed
     m2 = ck.run(docs, media)
     assert m2["docs_processed"] == docs.count() - 150
+    assert m2["snapshot_id"] == 2
 
     results = ck.results(spark)
     assert results.count() == docs.count()
     assert results.select("doc_id").distinct().count() == docs.count()
+
+    # time travel: snapshot 1 = exactly the first run's docs
+    assert ck.results(spark, snapshot_id=1).count() == 150
+
+    # lineage counters embedded in the manifest summaries
+    log = ck.snapshot_log()
+    assert [h["snapshot_id"] for h in log] == [1, 2]
+    assert int(log[0]["summary"]["docs_processed"]) == 150
+    assert int(log[1]["summary"]["docs_processed"]) == docs.count() - 150
+    assert int(log[0]["summary"]["spans_emitted"]) > 0
+    # per-partition lineage: per-file row counts of each commit sum to the
+    # commit's doc count
+    assert log[0]["rows_added"] == 150
+    assert log[1]["rows_added"] == docs.count() - 150
+    assert all(n > 0 for n in log[0]["added_file_rows"].values())
 
     # third run: nothing pending
     m3 = ck.run(docs, media)
@@ -41,17 +73,36 @@ def test_resume_processes_only_pending(spark, loaded, tmp_path):
 
 
 def test_crash_recovery_exactly_once(spark, loaded, tmp_path):
+    """A run that dies mid-action commits NOTHING; resume recomputes the
+    full pending set."""
     docs, media = loaded
     ck = CheckpointedExtraction(str(tmp_path / "out"))
 
-    with pytest.raises(Exception):
-        ck.run(docs, media, fail_on="doc00000100")
+    with pytest.raises(Exception, match="injected failure"):
+        ck.run(_poisoned(docs, "doc00000100"), media)
 
-    # crashed run may have left partial appends; resume must complete the set
-    ck.run(docs, media)
+    assert ck._results_tab.current_snapshot_id() is None
+    assert ck.done_doc_ids(spark) is None  # crashed run invisible
+
+    m = ck.run(docs, media)
+    assert m["docs_processed"] == docs.count()
     results = ck.results(spark)
     assert results.count() == docs.count()
     assert results.select("doc_id").distinct().count() == docs.count()
+
+
+def test_uri_output_root_rejected(tmp_path, monkeypatch):
+    """A URI output root fails in the constructor (no session, no Spark
+    job) and leaves no local ``s3:`` directory behind."""
+    from medical_ocr_service_spark.sources.snapshot_table import SnapshotTable
+
+    monkeypatch.chdir(tmp_path)
+    for root in ("s3://b/out", "file:///tmp/out", "hdfs://nn/out"):
+        with pytest.raises(ValueError, match="POSIX"):
+            CheckpointedExtraction(root)
+    with pytest.raises(ValueError, match="POSIX"):
+        SnapshotTable("s3://b/out/results")
+    assert os.listdir(tmp_path) == []
 
 
 def test_lineage_metrics_written(spark, loaded, tmp_path):
@@ -68,25 +119,27 @@ def test_lineage_metrics_written(spark, loaded, tmp_path):
 
 
 def test_streaming_extraction_availablenow(spark, loaded, tmp_path):
+    from medical_ocr_service_spark.sources.snapshot_table import SnapshotTable
     from medical_ocr_service_spark.streaming.pipeline import stream_extraction
 
     docs, media = loaded
     # stage the input as multiple files (a "queue" of landing files)
     docs_dir = str(tmp_path / "stream_in")
     docs.repartition(4).write.parquet(docs_dir)
-    out = str(tmp_path / "stream_out")
+    out = SnapshotTable(str(tmp_path / "stream_out"))
     ckpt = str(tmp_path / "ckpt")
 
     q = stream_extraction(spark, docs_dir, media, out, ckpt, available_now=True)
     q.awaitTermination(300)
 
-    got = spark.read.parquet(out)
-    assert got.select("doc_id").distinct().count() == docs.count()
+    assert out.read(spark).select("doc_id").distinct().count() == docs.count()
+    n_commits = len(out.history())
 
     # restart with no new files -> checkpoint prevents reprocessing
     q2 = stream_extraction(spark, docs_dir, media, out, ckpt, available_now=True)
     q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == docs.count()
+    assert out.read(spark).count() == docs.count()
+    assert len(out.history()) == n_commits
 
 
 def test_quarantine_retry_and_permanent_failure(spark, loaded, tmp_path):
@@ -126,7 +179,7 @@ def test_quarantine_retry_and_permanent_failure(spark, loaded, tmp_path):
 
 def test_quarantine_recovers_after_fix(spark, loaded, tmp_path):
     """A quarantined doc whose payload is fixed before exhaustion is
-    extracted on the next resume."""
+    extracted on the next resume and drops from the failure report."""
     docs, media = loaded
     victim = media.select("doc_id").first()["doc_id"]
     bad_media = media.withColumn(
@@ -136,10 +189,17 @@ def test_quarantine_recovers_after_fix(spark, loaded, tmp_path):
         ),
     )
     ck = CheckpointedExtraction(str(tmp_path / "q2"))
-    ck.run(docs, bad_media, quarantine=True, max_intentos=3)
+    m1 = ck.run(docs, bad_media, quarantine=True, max_intentos=3)
+    assert m1["docs_quarantined"] == 1
+    assert m1["docs_processed"] == docs.count() - 1
+    failed = ck.failed_docs(spark, max_intentos=3)
+    assert {r.doc_id: r.estado for r in failed.collect()} == {victim: "QUEUED"}
+
     m2 = ck.run(docs, media, quarantine=True, max_intentos=3)  # payload fixed
     assert m2["docs_processed"] == 1 and m2["docs_quarantined"] == 0
     assert ck.results(spark).filter(F.col("doc_id") == victim).count() == 1
+    assert ck.failed_docs(spark).count() == 0
+    assert ck.results(spark).count() == docs.count()
 
 
 def _two_bad_spans(media):
@@ -172,7 +232,7 @@ def test_quarantine_two_bad_spans_one_doc(spark, loaded, tmp_path):
     m = ck.run(docs, bad, quarantine=True)
     assert m["docs_quarantined"] == 1
     assert m["docs_processed"] == docs.count() - 1
-    q = spark.read.parquet(ck.quarantine_path)
+    q = ck._quar_tab.read(spark)
     assert q.columns == ["doc_id", "media_ref", "error", "run_id", "run_ts"]
     rows = q.collect()
     assert sorted((r["doc_id"], r["media_ref"]) for r in rows) == [
@@ -244,7 +304,7 @@ def test_quarantine_run_unpersists_on_failure(spark, loaded, tmp_path):
     spark.catalog.clearCache()
     ck = CheckpointedExtraction(str(tmp_path / "q"))
     with pytest.raises(Exception, match="injected failure"):
-        ck.run(docs, media, quarantine=True, fail_on="doc00000100")
+        ck.run(_poisoned(docs, "doc00000100"), media, quarantine=True)
     assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
 
 
@@ -318,7 +378,7 @@ def test_results_latest_wins_via_partial_max_no_window(spark, loaded, tmp_path):
 
     # simulate the documented duplicate source: a second successful
     # non-resume run over an overlapping input slice (newer run_ts wins)
-    first = spark.read.parquet(ck.results_path)
+    first = ck._results_tab.read(spark)
     dup = (
         first.filter(F.col("doc_id") < "doc00000020")
         .withColumn("run_ts", F.col("run_ts") + F.lit(1000.0))
@@ -327,7 +387,7 @@ def test_results_latest_wins_via_partial_max_no_window(spark, loaded, tmp_path):
     )
     n_dup = dup.count()
     assert n_dup > 0
-    dup.write.mode("append").parquet(ck.results_path)
+    ck._results_tab.commit_append(dup)
 
     got = ck.results(spark)
     plan = got._jdf.queryExecution().executedPlan().toString()
@@ -343,7 +403,7 @@ def test_results_latest_wins_via_partial_max_no_window(spark, loaded, tmp_path):
     # bit-equality with the explicit window rule the docstring promises
     w = Window.partitionBy("doc_id").orderBy(F.desc("run_ts"), F.desc("run_id"))
     ref = (
-        spark.read.parquet(ck.results_path)
+        ck._results_tab.read(spark)
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")

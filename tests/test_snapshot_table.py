@@ -1,6 +1,7 @@
-"""SnapshotTable (Iceberg-shaped commit protocol) + snapshot-checkpointed
-extraction: atomic commits, crash invisibility, time travel, embedded
-lineage counters, optimistic-concurrency conflicts, vacuum."""
+"""SnapshotTable (Iceberg-shaped commit protocol) and the exactly-once
+extraction stream sink: atomic commits, crash invisibility, time travel,
+optimistic-concurrency conflicts, vacuum. The checkpointed extraction job
+on top of it is tested in test_checkpoint."""
 
 from __future__ import annotations
 
@@ -9,18 +10,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from medical_ocr_service_spark.plans.checkpoint import CheckpointedExtraction
 from medical_ocr_service_spark.sources.snapshot_table import (
     CommitConflict,
     SnapshotTable,
 )
-
-
-@pytest.fixture()
-def loaded(spark, corpus_dir):
-    docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
-    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
-    return docs, media
 
 
 def _df(spark, rows):
@@ -271,10 +264,8 @@ def test_merge_upsert_snapshot(spark, tmp_path):
 # -- exactly-once streaming sink ----------------------------------------------
 
 
-def test_stream_extraction_snapshot_exactly_once(spark, corpus_dir, tmp_path):
-    from medical_ocr_service_spark.streaming.pipeline import (
-        stream_extraction_snapshot,
-    )
+def test_stream_extraction_exactly_once(spark, corpus_dir, tmp_path):
+    from medical_ocr_service_spark.streaming.pipeline import stream_extraction
 
     docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
     media = spark.read.parquet(f"{corpus_dir}/media.parquet")
@@ -284,7 +275,7 @@ def test_stream_extraction_snapshot_exactly_once(spark, corpus_dir, tmp_path):
     docs.repartition(3).write.parquet(stream_dir)
 
     t = SnapshotTable(str(tmp_path / "results"))
-    q = stream_extraction_snapshot(
+    q = stream_extraction(
         spark, stream_dir, media, t, str(tmp_path / "ck1")
     )
     q.awaitTermination(300)
@@ -303,10 +294,10 @@ def test_stream_extraction_snapshot_exactly_once(spark, corpus_dir, tmp_path):
     # (checkpoint_path must be stable for the table's lifetime — a fresh one
     # would silently drop genuinely NEW data as "replayed").
     with pytest.raises(ValueError, match="checkpoint"):
-        stream_extraction_snapshot(spark, stream_dir, media, t, str(tmp_path / "ck2"))
+        stream_extraction(spark, stream_dir, media, t, str(tmp_path / "ck2"))
     # file:// URIs are decidable locally -> same refusal as a bare path
     with pytest.raises(ValueError, match="checkpoint"):
-        stream_extraction_snapshot(
+        stream_extraction(
             spark, stream_dir, media, t, "file://" + str(tmp_path / "ck2")
         )
     # remote URIs are NOT decidable via os.path.isdir (always False) — the
@@ -314,11 +305,11 @@ def test_stream_extraction_snapshot_exactly_once(spark, corpus_dir, tmp_path):
     # restart. The failure here must come from the (absent) s3a filesystem
     # at stream start, never from the fresh-checkpoint ValueError.
     with pytest.raises(Exception) as ei:
-        stream_extraction_snapshot(
+        stream_extraction(
             spark, stream_dir, media, t, "s3a://no-such-bucket/ck"
         )
     assert not isinstance(ei.value, ValueError)
-    q2 = stream_extraction_snapshot(
+    q2 = stream_extraction(
         spark, stream_dir, media, t, str(tmp_path / "ck2"),
         assume_replayed_source=True,
     )
@@ -330,9 +321,7 @@ def test_stream_sink_caches_watermark(spark, corpus_dir, tmp_path):
     """The exactly-once sink reads the snapshot log ONCE at stream start and
     tracks the committed-batch watermark in a closure — not O(snapshots)
     metadata reads per micro-batch (round-3 verdict #7)."""
-    from medical_ocr_service_spark.streaming.pipeline import (
-        stream_extraction_snapshot,
-    )
+    from medical_ocr_service_spark.streaming.pipeline import stream_extraction
 
     docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
     media = spark.read.parquet(f"{corpus_dir}/media.parquet")
@@ -349,7 +338,7 @@ def test_stream_sink_caches_watermark(spark, corpus_dir, tmp_path):
             return super().history()
 
     t = CountingTable(str(tmp_path / "results"))
-    q = stream_extraction_snapshot(
+    q = stream_extraction(
         spark, stream_dir, media, t, str(tmp_path / "ck"), compact_every=2
     )
     q.awaitTermination(300)
@@ -363,92 +352,6 @@ def test_stream_sink_caches_watermark(spark, corpus_dir, tmp_path):
     # post-vacuum restart still finds the replay boundary
     compacts = [h for h in hist if h["summary"].get("operation") == "compact"]
     assert compacts and "batch_id" in compacts[0]["summary"]
-
-
-# -- snapshot-backed checkpointed extraction ----------------------------------
-
-
-def test_snapshot_resume_and_counters(spark, loaded, tmp_path):
-    docs, media = loaded
-    ck = CheckpointedExtraction(str(tmp_path / "out"), snapshots=True)
-    first = docs.filter(F.col("doc_id") < "doc00000150")
-
-    m1 = ck.run(first, media)
-    assert m1["docs_processed"] == 150
-    assert m1["snapshot_id"] == 1
-
-    m2 = ck.run(docs, media)
-    assert m2["docs_processed"] == docs.count() - 150
-    assert m2["snapshot_id"] == 2
-
-    results = ck.results(spark)
-    assert results.count() == docs.count()
-    assert results.select("doc_id").distinct().count() == docs.count()
-
-    # time travel: snapshot 1 = exactly the first run's docs
-    assert ck.results(spark, snapshot_id=1).count() == 150
-
-    # lineage counters embedded in the manifest summaries
-    log = ck.snapshot_log()
-    assert [h["snapshot_id"] for h in log] == [1, 2]
-    assert int(log[0]["summary"]["docs_processed"]) == 150
-    assert int(log[1]["summary"]["docs_processed"]) == docs.count() - 150
-    assert int(log[0]["summary"]["spans_emitted"]) > 0
-    # per-partition lineage: per-file row counts of each commit sum to the
-    # commit's doc count
-    assert log[0]["rows_added"] == 150
-    assert log[1]["rows_added"] == docs.count() - 150
-    assert all(n > 0 for n in log[0]["added_file_rows"].values())
-
-    # idempotent third run: nothing pending
-    m3 = ck.run(docs, media)
-    assert m3["docs_processed"] == 0
-
-
-def test_snapshot_crash_recovery(spark, loaded, tmp_path):
-    """A run that dies mid-action commits NOTHING (vs the append substrate,
-    where partial task files may need dedup-on-read); resume recomputes the
-    full pending set."""
-    docs, media = loaded
-    ck = CheckpointedExtraction(str(tmp_path / "out"), snapshots=True)
-
-    with pytest.raises(Exception):
-        ck.run(docs, media, fail_on="doc00000100")
-
-    assert ck._results_tab.current_snapshot_id() is None
-    assert ck.done_doc_ids(spark) is None  # crashed run invisible
-
-    m = ck.run(docs, media)
-    assert m["docs_processed"] == docs.count()
-    results = ck.results(spark)
-    assert results.count() == docs.count()
-
-
-def test_snapshot_quarantine(spark, tmp_path, corpus_dir):
-    """Quarantine table is snapshot-committed too; retries resume from it."""
-    docs = spark.read.parquet(f"{corpus_dir}/documents_interleaved.parquet")
-    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
-    # poison one media payload so its doc quarantines
-    bad = media.withColumn(
-        "layout_json",
-        F.when(F.col("doc_id") == "doc00000010", F.lit("{not json")).otherwise(
-            F.col("layout_json")
-        ),
-    )
-    ck = CheckpointedExtraction(str(tmp_path / "out"), snapshots=True)
-    m1 = ck.run(docs, bad, quarantine=True)
-    assert m1["docs_quarantined"] == 1
-    assert m1["docs_processed"] == docs.count() - 1
-
-    failed = ck.failed_docs(spark, max_intentos=3)
-    rows = {r.doc_id: r.estado for r in failed.collect()}
-    assert rows == {"doc00000010": "QUEUED"}
-
-    # retry with healed media: the doc completes and drops from the report
-    m2 = ck.run(docs, media, quarantine=True)
-    assert m2["docs_processed"] == 1
-    assert ck.failed_docs(spark).count() == 0
-    assert ck.results(spark).count() == docs.count()
 
 
 # -- vacuum: metadata expiry, orphan grace, stray files ------------------------

@@ -241,30 +241,6 @@ def test_read_excel_empty_and_duplicate_headers(spark, tmp_path):
         readers.read_excel_with_aliases(spark, dup, {})
 
 
-def test_merge_into_sql_parses_and_mirrors_upsert(spark):
-    """S8 production path: the emitted Iceberg MERGE INTO statement parses
-    under Spark's SQL parser and carries the same clause semantics as
-    coalesce_upsert (COALESCE per non-key column, xxhash64 surrogate id)."""
-    from medical_ocr_service_spark.operators.upsert import merge_into_sql
-
-    sql = merge_into_sql(
-        "cat.db.prestadores", "staging_prestadores",
-        keys=["id_externo", "tenant_id"],
-        columns=["id_externo", "tenant_id", "id_prestador", "ruc", "nombre_fantasia"],
-        surrogate_id="id_prestador",
-    )
-    # parses as a single MERGE statement (no execution — no Iceberg here)
-    plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-    assert "MergeIntoTable" in plan.toString()
-    assert "t.ruc = coalesce(s.ruc, t.ruc)" in sql
-    assert "abs(xxhash64(s.id_externo, s.tenant_id))" in sql
-    assert "WHEN NOT MATCHED THEN INSERT" in sql
-    # key columns are never COALESCE-updated
-    assert "t.id_externo = coalesce" not in sql
-    # surrogate id is inserted, not updated
-    assert "t.id_prestador = coalesce" not in sql
-
-
 def test_fetch_url_payloads(spark, tmp_path):
     """S6: file:// and base64 data: URIs resolve executor-side; http is
     environment-gated into the error column; bad paths are row-isolated."""

@@ -37,7 +37,6 @@ def test_spark_submit_py_files_end_to_end(corpus_dir, tmp_path):
         "--docs", f"{corpus_dir}/documents_interleaved.parquet",
         "--media", f"{corpus_dir}/media.parquet",
         "--output", out,
-        "--snapshots",
     ]
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the zip must be the only package source
@@ -52,8 +51,8 @@ def test_spark_submit_py_files_end_to_end(corpus_dir, tmp_path):
     assert rec["spans_emitted"] > 0
     assert rec["snapshot_id"] == 1
     assert os.path.isdir(out)
-    # --snapshots: the run is one atomic snapshot commit whose manifest
-    # carries the lineage counters (version hint + snap json on disk)
+    # the run is one atomic snapshot commit whose manifest carries the
+    # lineage counters (version hint + snap json on disk)
     hint = os.path.join(out, "results", "metadata", "version-hint.text")
     assert open(hint).read().strip() == "1"
 
